@@ -55,13 +55,11 @@ def _build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
 
-    from chain_sync_spark.registry import all_queries, pending_queries
+    from chain_sync_spark.registry import all_queries
 
     if args.cmd == "list":
         for name in all_queries():
             print(name)
-        for name in pending_queries()[0]:
-            print(f"{name}  [staged]")
         return 0
 
     from chain_sync_spark.session import get_spark
@@ -72,8 +70,7 @@ def main(argv: list[str] | None = None) -> int:
     sf_dir = getattr(args, "sf_dir", None) or DEFAULT_SF_DIR
 
     if args.cmd in ("run", "explain"):
-        queries = dict(all_queries())
-        queries.update(pending_queries()[0])  # staged run/explain too
+        queries = all_queries()
         if args.query not in queries:
             print(f"unknown query: {args.query} (see `list`)", file=sys.stderr)
             return 2

@@ -1494,7 +1494,7 @@ FROM (
 
 
 # ---------------------------------------------------------------------------
-# BPE pair-merge step — staged round-6 operator
+# BPE pair-merge step
 # ---------------------------------------------------------------------------
 
 BPE_TOP_MERGES = 20
@@ -2112,7 +2112,7 @@ FROM j
 
 
 # ---------------------------------------------------------------------------
-# CMS probe serving (staged round-9 entrant)
+# CMS probe serving
 # ---------------------------------------------------------------------------
 
 # Fixed probe list — includes terms of very different frequency and
@@ -2354,9 +2354,8 @@ QUERIES = {
     "bm25_topk_documents": bm25_topk_documents,
     "vocab_coverage_oov": vocab_coverage_oov,
     "heavy_hitters_cms": heavy_hitters_cms,
-    # staged r5→r6, registered round 7 per registry.py's rotation plan
     "bpe_pair_merges": bpe_pair_merges,
-    # new round-8 registrations: tokenizer serving + quantile sketch
+    # tokenizer serving + quantile sketch
     "bpe_encode_frozen": bpe_encode_frozen,
     "quantile_sketch_orders": quantile_sketch_orders,
 }
@@ -2373,8 +2372,6 @@ ORACLE = {
     "mixture_resample_documents": _MIX_RESAMPLE_ORACLE,
     "profile_column_stats": _PROFILE_ORACLE,
     "bm25_topk_documents": _BM25_ORACLE,
-    # round-4 staged entrants, registered + windowed in round 5 per the
-    # rotation plan in registry.py
     "vocab_coverage_oov": _VOCAB_ORACLE,
     "heavy_hitters_cms": _CMS_ORACLE,
     "bpe_pair_merges": _BPE_ORACLE,
@@ -2383,7 +2380,7 @@ ORACLE = {
 }
 
 # ---------------------------------------------------------------------------
-# Bloom membership probe (staged round-9 entrant)
+# Bloom membership probe
 # ---------------------------------------------------------------------------
 
 BLOOM_ABSENT_PROBES = 50
@@ -2487,12 +2484,8 @@ FROM hits h LEFT JOIN ck c ON h.key = c.fp
 """
 
 
-# Staged round-9 entrants (registry.pending_queries): the round-8
-# window is full — full implementation + DuckDB oracle +
-# dual-transport parity pytest now, a WINDOW slot at the next
-# recomposition.
 # ---------------------------------------------------------------------------
-# Tokenizer fertility under the frozen merge table (staged entrant)
+# Tokenizer fertility under the frozen merge table
 # ---------------------------------------------------------------------------
 
 def bpe_fertility_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2563,7 +2556,7 @@ FROM agg
 
 
 # ---------------------------------------------------------------------------
-# Per-source quality report (staged entrant)
+# Per-source quality report
 # ---------------------------------------------------------------------------
 
 def quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2815,23 +2808,6 @@ FROM scored
 """
 
 
-PENDING_QUERIES = {
-    "quality_classifier_margin": quality_classifier_margin,
-}
-
-PENDING_ORACLE = {
-    "quality_classifier_margin": _CLS_MARGIN_ORACLE,
-}
-
-# staged r8 → registered + windowed round 9: sketch/membership
-# serving probes and the frozen-tokenizer fertility report.
-# staged r9 → registered + windowed round 10: the per-source quality
-# report and the streamed-LM serving certifier (VERDICT r8 item 4).
-# staged r9 → registered + windowed round 11: the Stupid Backoff LM
-# probe scorer and the KMV bottom-k cardinality audit.
-# staged r11 → registered + windowed round 12: the CMS/histogram
-# maintainers' incremental-fold certifier (the last streamed-store
-# path without driver visibility — VERDICT r10 item 4 closed).
 QUERIES.update(
     {
         "cms_probe_terms": cms_probe_terms,
@@ -2842,9 +2818,8 @@ QUERIES.update(
         "lm_stupid_backoff_newdocs": lm_stupid_backoff_newdocs,
         "kmv_distinct_shingles": kmv_distinct_shingles,
         "sketch_fold_digest": sketch_fold_digest,
-        # staged r9 → registered + windowed round 13: the CCNet
-        # head/middle/tail fluency buckets (Wenzek et al. 2020)
         "ccnet_quality_buckets": ccnet_quality_buckets,
+        "quality_classifier_margin": quality_classifier_margin,
     }
 )
 
@@ -2859,5 +2834,6 @@ ORACLE.update(
         "kmv_distinct_shingles": _KMV_ORACLE,
         "sketch_fold_digest": _SKETCH_FOLD_ORACLE,
         "ccnet_quality_buckets": _CCNET_BUCKETS_ORACLE,
+        "quality_classifier_margin": _CLS_MARGIN_ORACLE,
     }
 )

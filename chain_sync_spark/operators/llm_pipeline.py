@@ -2721,7 +2721,7 @@ FROM documents,
 
 
 # ---------------------------------------------------------------------------
-# K-means clustering (Lloyd's algorithm) — staged round-6 operator
+# K-means clustering (Lloyd's algorithm)
 # ---------------------------------------------------------------------------
 
 KMEANS_K = 8
@@ -3340,12 +3340,10 @@ QUERIES = {
     "embedding_quantized_topk": embedding_quantized_topk,
     "embedding_pq_assign": embedding_pq_assign,
     "embedding_pq_adc_topk": embedding_pq_adc_topk,
-    # staged r5→r6, registered round 7 per registry.py's rotation plan
     "kmeans_embedding_clusters": kmeans_embedding_clusters,
-    # staged round 7, registered round 8 per registry.py's rotation plan
     "embed_hashing_fixedpoint": embed_hashing_fixedpoint,
     "kmeans_balanced_sample": kmeans_balanced_sample,
-    # new round-8 registration: the serving tier's first driver row
+    # the serving tier: assign new vectors to the trained centroids
     "kmeans_assign_serving": kmeans_assign_serving,
 }
 
@@ -3385,7 +3383,7 @@ ORACLE = {
 }
 
 # ---------------------------------------------------------------------------
-# ANN recall audit (staged entrant)
+# ANN recall audit
 # ---------------------------------------------------------------------------
 
 def ann_recall_audit(
@@ -4019,33 +4017,6 @@ FROM verified
 """
 
 
-# Staged entrants (registry.pending_queries): full implementation +
-# DuckDB oracle + dual-transport parity pytest now, a WINDOW slot at
-# a later recomposition.
-PENDING_QUERIES: dict = {
-    "neardup_containment_pairs": neardup_containment_pairs,
-    "embedding_prototypicality": embedding_prototypicality,
-    "split_assign_leakage_safe": split_assign_leakage_safe,
-    "matryoshka_recall_audit": matryoshka_recall_audit,
-}
-
-PENDING_ORACLE: dict = {
-    "neardup_containment_pairs": _containment_oracle(),
-    "embedding_prototypicality": _prototypicality_oracle(),
-    "split_assign_leakage_safe": _split_safe_oracle(),
-    "matryoshka_recall_audit": _matryoshka_oracle(),
-}
-
-# staged r8 → registered + windowed round 9: the serialized centroid
-# artifact and the ANN recall/cost audit.
-# staged r9 → registered + windowed round 10: the MinHash estimator
-# calibration audit.
-# staged r9 → registered + windowed round 11: the exact-k
-# class-balanced sampler (two-phase salted top-k-per-group plan).
-# staged r9/r11 → registered + windowed round 12: the PQ streamed-
-# store append+ADC certifier (the last uncertified streamed store,
-# VERDICT r10 item 4 closed) and the two-stage quantized-then-exact
-# ANN re-rank.
 QUERIES.update(
     {
         "kmeans_centroids_fixedpoint": kmeans_centroids_fixedpoint,
@@ -4054,6 +4025,10 @@ QUERIES.update(
         "sample_exact_k_per_lang": sample_exact_k_per_lang,
         "pq_probe_newvecs": pq_probe_newvecs,
         "ann_two_stage_rerank": ann_two_stage_rerank,
+        "neardup_containment_pairs": neardup_containment_pairs,
+        "embedding_prototypicality": embedding_prototypicality,
+        "split_assign_leakage_safe": split_assign_leakage_safe,
+        "matryoshka_recall_audit": matryoshka_recall_audit,
     }
 )
 
@@ -4065,5 +4040,9 @@ ORACLE.update(
         "sample_exact_k_per_lang": _SAMPLE_K_ORACLE,
         "pq_probe_newvecs": _pq_probe_oracle(),
         "ann_two_stage_rerank": _RERANK_ORACLE,
+        "neardup_containment_pairs": _containment_oracle(),
+        "embedding_prototypicality": _prototypicality_oracle(),
+        "split_assign_leakage_safe": _split_safe_oracle(),
+        "matryoshka_recall_audit": _matryoshka_oracle(),
     }
 )

@@ -1199,7 +1199,7 @@ WHERE rk = 1
 
 
 # ---------------------------------------------------------------------------
-# 9. Duplicated token-span audit (staged round-9 entrant)
+# 9. Duplicated token-span audit
 # ---------------------------------------------------------------------------
 
 SD_N = 8  # tokens per shingle; a merged span is a maximal duplicated run
@@ -1634,7 +1634,7 @@ FROM dw d LEFT JOIN per_doc p USING (doc_id)
 
 
 # ---------------------------------------------------------------------------
-# 10. Winnowing fingerprints (staged round-9 entrant)
+# 10. Winnowing fingerprints
 # ---------------------------------------------------------------------------
 
 WN_K = 4        # tokens per gram
@@ -1853,7 +1853,7 @@ HAVING COUNT(*) >= {WN_MIN_SHARED}
 
 
 # ---------------------------------------------------------------------------
-# 11. Winnow family cluster step (staged round-9/10 entrant)
+# 11. Winnow family cluster step
 # ---------------------------------------------------------------------------
 
 def winnow_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1931,7 +1931,7 @@ FROM comp
 
 
 # ---------------------------------------------------------------------------
-# 12. Cross-source overlap matrix (staged round-10 entrant)
+# 12. Cross-source overlap matrix
 # ---------------------------------------------------------------------------
 
 def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2012,11 +2012,6 @@ FROM shared s JOIN tot t ON s.src_a = t.source
 """
 
 
-PENDING_QUERIES: dict = {}
-
-PENDING_ORACLE: dict = {}
-
-
 QUERIES = {
     "pii_scrub_documents": pii_scrub_documents,
     "url_extract_normalize": url_extract_normalize,
@@ -2026,29 +2021,26 @@ QUERIES = {
     "pack_training_sequences": pack_training_sequences,
     "dedup_embedding_semantic": dedup_embedding_semantic,
     "neardup_cluster_canonical": neardup_cluster_canonical,
-    # staged r8 → registered + windowed round 9: the exact
-    # substring-span dedup family and the MOSS winnowing family
+    # the exact substring-span dedup family and the MOSS winnowing
+    # family
     "dedup_token_spans": dedup_token_spans,
     "dedup_span_cut": dedup_span_cut,
     "dedup_incremental_spans": dedup_incremental_spans,
     "neardup_winnow_pairs": neardup_winnow_pairs,
     "winnow_dup_clusters": winnow_dup_clusters,
-    # staged r9 → registered + windowed round 10: the cross-source
-    # fingerprint-overlap matrix and the streamed-winnow-index
-    # serving certifier (VERDICT r8 item 4)
+    # the cross-source fingerprint-overlap matrix and the
+    # streamed-winnow-index serving certifier
     "source_overlap_matrix": source_overlap_matrix,
     "winnow_probe_newdocs": winnow_probe_newdocs,
-    # staged r9 → registered + windowed round 11: the Gopher
-    # duplicate-n-gram char-fraction repetition screen
+    # the Gopher duplicate-n-gram char-fraction repetition screen
     "gopher_dup_ngram_profile": gopher_dup_ngram_profile,
-    # staged r9 → registered + windowed round 12: the mT5
-    # temperature-scaled mixture weights and the FineWeb-style
-    # composed quality verdict
+    # the mT5 temperature-scaled mixture weights and the
+    # FineWeb-style composed quality verdict
     "mixture_temperature_weights": mixture_temperature_weights,
     "quality_composite_filter": quality_composite_filter,
-    # staged r9 → registered + windowed round 13: the sequential
-    # dedup+quality funnel report, the inter-document n-gram novelty
-    # summary, and the windowless exact percent_rank (CDF join)
+    # the sequential dedup+quality funnel report, the inter-document
+    # n-gram novelty summary, and the windowless exact percent_rank
+    # (CDF join)
     "dedup_funnel_report": dedup_funnel_report,
     "ngram_novelty_score": ngram_novelty_score,
     "length_percentile_by_lang": length_percentile_by_lang,

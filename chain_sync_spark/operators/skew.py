@@ -76,10 +76,9 @@ def keep_first_by_key(
     candidate row per key it saw, so a boilerplate key occurring
     millions of times costs one row per task in the shuffle instead
     of pinning its whole occurrence list in one unsplittable window
-    task — the round-9 span-family hardening as a reusable
-    primitive, staged for the round-10 queue (dedup_segment_rewrite
-    seg_md5, dedup_incremental_batch content_md5; see the registry
-    docstring).  Output column order: key_cols + order_cols +
+    task (used by dedup_segment_rewrite's seg_md5 and
+    dedup_incremental_batch's content_md5 keep-first).  Output
+    column order: key_cols + order_cols +
     remaining columns, one row per key."""
     if _debug_contracts():
         dup = (

@@ -346,10 +346,8 @@ def markdown_lists_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex subset as the heading pattern: explicit (^|\\n) anchoring,
     no lookbehind, no (?m).
 
-    PREPARED r14 staged entrant: net-new staging is frozen while the
-    queue sits at the 5-slot reserve (VERDICT r12 item 5), so this
-    ships pytest-certified (dual transport, tests/test_markdown.py)
-    and joins PENDING_QUERIES at the r14 recomposition.
+    Not in QUERIES: its oracle parity is checked by
+    tests/test_staged.py (dual transport).
 
     Scale: per-row regexp projection, whole-stage codegen, zero
     shuffles — same shape as the other markdown slices."""
@@ -788,11 +786,8 @@ def sync_mutings_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     redelivery), which the digest certifies because the oracle
     derives the final state from single applications only.
 
-    PREPARED r14 staged entrant (the sanctioned first post-freeze
-    candidate, registry.py STAGED_PRIORITY): net-new staging is
-    frozen while the queue sits at the reserve, so this ships
-    pytest-certified (dual transport, tests/test_staged.py) and joins
-    PENDING_QUERIES at the r14 recomposition.
+    Not in QUERIES: its oracle parity is checked by
+    tests/test_staged.py (dual transport).
 
     Scale: the job snapshots the roles relation once, broadcasts the
     muted set, and issues ONE partition-pruned MERGE per community —
@@ -880,11 +875,6 @@ FROM seqs
 """
 
 
-PENDING_QUERIES: dict = {}
-
-PENDING_ORACLE: dict = {}
-
-
 QUERIES = {
     "sync_metadata_double_decode": sync_metadata_double_decode,
     "sync_vote_set_accumulation": sync_vote_set_accumulation,
@@ -892,12 +882,10 @@ QUERIES = {
     "sync_stock_image_hashtags": sync_stock_image_hashtags,
     "sync_markdown_parse": sync_markdown_parse,
     "markdown_extract_builtin": markdown_extract_builtin,
-    # staged r10 → registered + windowed round 11: the sync engine's
-    # first driver-visible end-to-end certificate (VERDICT r9 item 6)
+    # the sync engine's end-to-end certificate
     "sync_round_digest": sync_round_digest,
-    # staged r12 → registered + windowed round 13: the markdown
-    # links+headings oracle slice — more of F3-F5
-    # (handlers/comments.js:43-55) earns hash rows
+    # the markdown links+headings oracle slice of F3-F5
+    # (handlers/comments.js:43-55)
     "markdown_links_headings": markdown_links_headings,
 }
 

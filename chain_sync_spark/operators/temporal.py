@@ -473,7 +473,7 @@ FROM cells JOIN sizes USING (cohort_week)
 
 
 # ---------------------------------------------------------------------------
-# SCD2 dimension history — staged round-6 operator
+# SCD2 dimension history
 # ---------------------------------------------------------------------------
 
 def scd2_event_type_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -655,9 +655,8 @@ QUERIES = {
     "percentile_order_prices": percentile_order_prices,
     "profile_drift_events": profile_drift_events,
     "retention_cohort_weeks": retention_cohort_weeks,
-    # staged r5→r6, registered round 7 per registry.py's rotation plan
     "scd2_event_type_history": scd2_event_type_history,
-    # new round-7 registration: the SCD2 consumption side
+    # the SCD2 consumption side
     "scd2_asof_lookup": scd2_asof_events,
 }
 

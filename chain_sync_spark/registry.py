@@ -1,77 +1,9 @@
-"""Aggregates QUERIES/ORACLE dicts from every operator module.
+"""The query registry: every operator module's ``QUERIES`` (name ->
+``fn(spark, sf_dir) -> DataFrame``) and ``ORACLE`` (name -> DuckDB SQL
+over the same tables) dicts, merged into one flat dict each.
 
-Ordering contract
------------------
-The driver's per-round correctness artifact records the FIRST
-``DRIVER_WINDOW`` (= 50, observed r01-r06) registry entries only, in
-iteration order.  Iteration order is therefore part of the driver
-contract, and the explicit ``WINDOW`` list below IS the round's
-certification window: those names are emitted first (in that order),
-then every remaining query in module order.
-
-Rotation ledger (round 13)
---------------------------
-The ledger of record is "every query holds a green row in a recent
-CORRECTNESS_r* artifact".  End-of-round-12 state (recomputed from
-the raw r01-r12 artifacts, confirmed by the r12 VERDICT's
-independent recount): 50 latest-green r12, 50 r11, 50 r10, 15 r9 —
-nothing older than the 4-round backstop; 1 rows-only by design
-(sync_markdown_parse).
-Round-13 window composition (exactly 50, produced verbatim by
-tools/next_window.py --check after the r12 artifact landed):
-
-  - the 15 r12-deferred r9-latest names FIRST
-    (scalar_subquery_above_avg … winnow_dup_clusters — the latter
-    re-certifying the r12 checkpointed-edges CC plan on a driver
-    row; they land at exactly the 4-round pytest backstop)
-  - 30 of the r10-latest cohort (its alphabetical tail — 20 names
-    from quality_by_source through winnow_probe_newdocs — defers
-    to r14 as the oldest debt cohort: the steady state)
-  - the first 5 staged entrants in STAGED_PRIORITY order, now
-    registered: markdown_links_headings (the r12 sanctioned
-    entrant — more of F3-F5 earns hash rows), dedup_funnel_report,
-    ngram_novelty_score, length_percentile_by_lang,
-    ccnet_quality_buckets
-
-``rotation_debt()`` is COMPUTED from the CORRECTNESS_r*.json
-artifacts: it returns the registered oracled names whose latest
-green row would fall below the 3-round target if left out of the
-next window.  Staged entrants register through
-tools/next_window.py, which reserves STAGED_RESERVE (= 5) slots for
-staged names before the debt fill; the matching number of freshest
-debt names defer one round.  Capacity arithmetic is COMPUTED and
-asserted by ``tools/next_window.py --check`` (which prints the live
-registered/staged/capacity counts — cite the tool, not a number
-here; ``tests/test_registry.py`` pins the printed arithmetic
-against the registry), so every deferred name re-enters as the
-oldest cohort and lands at a gap of exactly 4 — the pytest-backstop
-bound.  A deferral is therefore the steady state of a >150-name
-registry, NOT a covenant break; --check distinguishes the two and
-hard-fails on a true break (a deferred name already at the backstop
-age).
-
-Round-14 recomposition recipe: ``tools/next_window.py --check``
-prints the window ONLY AFTER CORRECTNESS_r13.json lands — expect
-the 20 r13-deferred r10 names first (quality_by_source …
-winnow_probe_newdocs), then the r11-latest cohort fill, then the
-remaining 5 of STAGED_PRIORITY (quality_classifier_margin fronts) —
-draining the queue to 0 and lifting the net-new freeze with
-sync_mutings_digest as the sanctioned first post-freeze entrant.
-Pre-flight the exact WINDOW with tools/oracle_check.py at sf0.01,
-both transports, before the round submits.
-
-Staging protocol (unchanged since round 4): a NEW query or one whose
-implementation/oracle changed mid-round ships behind the module-level
-``PENDING_QUERIES``/``PENDING_ORACLE`` dicts — fully implemented,
-DuckDB-oracled, dual-transport-certified by pytest — and moves into
-QUERIES/ORACLE + the WINDOW at the next recomposition.
-``pending_queries()`` is the one shared source every tool (bench,
-oracle_check, explain_all, the staging tests) resolves them through.
-
-Pre-flight: ``tools/oracle_check.py`` canonicalizes through BOTH
-transports (object path and pandas path) — run it over the WINDOW
-before each round submits; a pandas-path failure is exactly the
-round-4 local-green/driver-red class.
+A query without an oracle is rows-only; ``tests/test_registry.py``
+pins which ones are.
 """
 
 from __future__ import annotations
@@ -80,6 +12,8 @@ from collections.abc import Callable
 from importlib import import_module
 
 from pyspark.sql import DataFrame, SparkSession
+
+Query = Callable[[SparkSession, str], DataFrame]
 
 _MODULES = [
     "chain_sync_spark.operators.llm_pipeline",
@@ -92,245 +26,26 @@ _MODULES = [
     "chain_sync_spark.operators.corpus_ops",
 ]
 
-# Size of the driver's correctness-artifact window (observed, r01-r06).
-DRIVER_WINDOW = 50
 
-# Round-13 certification window — exactly DRIVER_WINDOW names, emitted
-# first, produced verbatim by tools/next_window.py --check after the
-# r12 artifact landed.  See the rotation ledger in the module docstring.
-WINDOW = [
-    # -- the 15 r12-deferred r9-latest names (oldest debt, sorts
-    #    first; lands at exactly the 4-round pytest backstop;
-    #    winnow_dup_clusters re-certifies the r12 checkpointed-edges
-    #    CC plan on a driver row) --
-    "scalar_subquery_above_avg",
-    "segment_dedup_ratio",
-    "set_ops_all_multiset",
-    "set_ops_segments",
-    "sort_limit_top_orders",
-    "stats_corr_lineitem",
-    "string_funcs_projection",
-    "surrogate_key_md5",
-    "tpch_q13_order_distribution",
-    "tpch_q14_promo_revenue",
-    "tpch_q5_local_supplier_volume",
-    "unpivot_customer_metrics",
-    "window_lag_event_gap",
-    "window_running_revenue",
-    "winnow_dup_clusters",
-    # -- rotation debt: 30 of the 50 r10-latest greens (alphabetical
-    #    tail of 20 defers to r14 as the oldest debt cohort) --
-    "approx_distinct_users",
-    "approx_percentile_prices",
-    "bm25_topk_documents",
-    "bpe_pair_merges",
-    "date_math_orders",
-    "dedup_embedding_semantic",
-    "dedup_exact_documents",
-    "embedding_ann_lsh_pairs",
-    "embedding_cosine_topk",
-    "embedding_ivf_assign",
-    "embedding_ivf_topk",
-    "embedding_label_centroids",
-    "explode_outer_rare_tokens",
-    "explode_token_frequency",
-    "funnel_session_conversion",
-    "histogram_order_prices",
-    "join_multiway_revenue",
-    "kmeans_embedding_clusters",
-    "lang_id_confusion",
-    "lm_probe_newdocs",
-    "map_funcs_events",
-    "math_funcs_lineitem",
-    "minhash_estimate_error_audit",
-    "multimodal_binary_stats",
-    "multimodal_frame_sample",
-    "multimodal_media_features",
-    "neardup_levenshtein_names",
-    "neardup_prefix_filter_pairs",
-    "neardup_simhash_pairs",
-    "percentile_order_prices",
-    # -- round-13 staged entrants, first driver rows (STAGED_PRIORITY
-    #    order; markdown_links_headings extends the F3-F5 oracle
-    #    surface — VERDICT r11 item 3 / r12 item 1) --
-    "markdown_links_headings",
-    "dedup_funnel_report",
-    "ngram_novelty_score",
-    "length_percentile_by_lang",
-    "ccnet_quality_buckets",
-]
-
-
-def _modules():
-    return [import_module(m) for m in _MODULES]
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    flat: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for mod in _modules():
-        for name, fn in getattr(mod, "QUERIES", {}).items():
-            if name in flat:
-                raise ValueError(f"duplicate query name: {name}")
-            flat[name] = fn
-    missing = [n for n in WINDOW if n not in flat]
-    if missing:
-        raise ValueError(f"WINDOW names not in any module: {missing}")
-    out = {n: flat[n] for n in WINDOW}
-    out.update((n, f) for n, f in flat.items() if n not in out)
+def _merged(attr: str) -> dict:
+    out: dict = {}
+    for mod in map(import_module, _MODULES):
+        for name, value in getattr(mod, attr).items():
+            if name in out:
+                raise ValueError(f"duplicate {attr} name: {name}")
+            out[name] = value
     return out
+
+
+def all_queries() -> dict[str, Query]:
+    return _merged("QUERIES")
 
 
 def all_oracles() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for mod in _modules():
-        out.update(getattr(mod, "ORACLE", {}))
-    return out
+    return _merged("ORACLE")
 
 
-def pending_queries() -> tuple[
-    dict[str, Callable[[SparkSession, str], DataFrame]], dict[str, str]
-]:
-    """Staged next-round entrants (the PENDING_QUERIES/PENDING_ORACLE
-    dicts in operator modules): fully implemented + oracled +
-    pytest-certified, awaiting a WINDOW slot. Deliberately NOT part of
-    all_queries()/all_oracles() — the one shared source for every tool
-    that wants to exercise them anyway (bench, oracle_check,
-    explain_all, the staging tests)."""
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    o: dict[str, str] = {}
-    for mod in _modules():
-        for name, fn in getattr(mod, "PENDING_QUERIES", {}).items():
-            if name in q:
-                raise ValueError(f"duplicate staged query name: {name}")
-            q[name] = fn
-            o[name] = getattr(mod, "PENDING_ORACLE")[name]
-    return q, o
-
-
-# Registration priority for the staged entrants at the next window
-# recomposition — the ledger's displacement rule made executable
-# (tools/next_window.py consumes it): names register in THIS order
-# after the rotation-debt fill; whatever doesn't fit stays PENDING
-# for the round after.  A test pins this list as a permutation of
-# pending_queries(), so staging a new entrant forces an explicit
-# priority decision here.
-# Queued implementation swaps (the round-9 skew class: windows over
-# raw content keys) — each becomes due in the round its query next
-# holds a WINDOW slot; tools/next_window.py --check prints the ones
-# due in the planned window.  Remove an entry when its swap lands
-# (value-identity re-verified, the lm_known_bigram_score precedent).
-#
-# EMPTY since round 10: all four queued sites swapped in one pass —
-# neardup_prefix_filter_pairs' token-df and tfidf_top_terms' term-df
-# to skew.attach_group_count, dedup_segment_rewrite's seg_md5 and
-# dedup_incremental_batch's content_md5 keep-first to
-# skew.keep_first_by_key.  Each was re-run against its DuckDB oracle
-# at sf0.01 (4/4, dual transport) the day it changed, and
-# tests/test_scale_patterns.py pins the PRODUCTION plans: no window
-# partitions by a raw content key anywhere in the four queries.
-# neardup_prefix_filter_pairs holds an r10 window slot (HARDENING-DUE
-# honored); the other three are r8-latest debt and re-window at r11
-# on the new plans — the changed-impl covenant is met by the oracle
-# re-sweep now plus the natural r11 re-certification (VERDICT r9
-# item 3 sanctioned exactly this sequencing).
-#
-# Round-10 eager-loop pass (same covenant, same evidence standard):
-# connected_components dropped its per-round label-vs-label
-# convergence shuffle (a `changed` flag rides the propagation join),
-# the Lloyd family serves trained centroids from the frozen-codebook
-# store (llm_pipeline._km_trained_centroids) instead of re-running
-# identical deterministic training per query, and every
-# localCheckpoint site registers with the scope pool for
-# deterministic block release (llm_pipeline._scoped_checkpoint).
-# All consumers re-certified against their DuckDB oracles at sf0.001
-# AND sf0.01 dual-transport the day they changed (8/8 CC+kmeans,
-# 4/4 BPE); the affected WINDOW holders (kmeans_embedding_clusters,
-# bpe_pair_merges) earn their r10 rows on the new code, the CC
-# consumers re-window naturally at r11/r12. BENCH.md round-10
-# section records the numbers.
-HARDENING_QUEUE: dict[str, str] = {}
-
-STAGED_PRIORITY = [
-    # Round-13 registered the markdown links+headings slice plus the
-    # four remaining late-r9 entrants (dedup_funnel_report,
-    # ngram_novelty_score, length_percentile_by_lang,
-    # ccnet_quality_buckets) — the queue is now exactly at the
-    # 5-slot reserve.  Net-new staging stays FROZEN until the queue
-    # drains below STAGED_RESERVE (VERDICT r9 item 4 / r10 item 3 /
-    # r11 item 6); r14 drains it to 0 and lifts the freeze.
-    # First candidate WHEN the freeze lifts (r14, queue at 0): a
-    # sync_mutings_digest — DuckDB upsert-replay oracle over the
-    # mutings side-job (sync/mutings.py), converting the four
-    # pytest-only coverage rows (S10 update-by-query, J4 two-key
-    # update join, P9 muted-role filter, the periodic side-job) into
-    # driver-green certificates the way sync_round_digest did for the
-    # main loop.  Second sanctioned candidate (VERDICT r12 item 6):
-    # the markdown lists+blockquotes+fenced-code slice, extending
-    # markdown_links_headings' corpus under the same Java/RE2
-    # shared-subset regex discipline.
-    # round-9 wave 4: distilled linear quality classifier margin
-    # (fastText/DCLM serving shape, integer class-odds weights)
-    "quality_classifier_margin",
-    # round-9 wave 4: Broder containment (asymmetric subset-dup)
-    # verification over the banded MinHash candidates
-    "neardup_containment_pairs",
-    # round-9 wave 4: Sorscher-et-al prototypicality data-pruning
-    # metric (distance to own-label centroid, integer micros)
-    "embedding_prototypicality",
-    # round-9 wave 4: dedup-aware splitting (near-dup clusters share
-    # one split, so held-out stays held out)
-    "split_assign_leakage_safe",
-    # round-9 wave 4: Matryoshka dim-prefix truncation recall audit
-    # (Kusupati et al. 2022)
-    "matryoshka_recall_audit",
-]
-
-
-def _latest_green() -> dict[str, int]:
-    """Latest driver-green round per query, recomputed from the raw
-    CORRECTNESS_r*.json artifacts in the repo root (green = rows +
-    schema + value-hash match, the driver's criterion).  Rounds with
-    no artifact on disk simply contribute nothing."""
-    import json
-    import re
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parent.parent
-    latest: dict[str, int] = {}
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        for name, rec in json.load(p.open()).items():
-            if (
-                rec.get("rows_match")
-                and rec.get("schema_match")
-                and rec.get("hash_match", True)
-            ):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def rotation_debt() -> list[str]:
-    """Next-round rotation candidates, COMPUTED from the artifacts:
-    registered oracled names, not already in the current WINDOW,
-    whose latest green row would fall below the 3-round freshness
-    target if they miss the next window.  The round being planned is
-    newest-artifact + 1 (the current WINDOW's names earn their rows
-    when that artifact lands, which is why they are excluded rather
-    than aged); a name with no green row at all (latest 0) sorts
-    first — the registered-but-never-windowed backstop.  Sorted
-    (latest, name) so truncation by the planner drops the freshest
-    names, never the oldest."""
-    latest = _latest_green()
-    if not latest:
-        return []
-    planning_round = max(latest.values()) + 1
-    oracled = set(all_queries()) & set(all_oracles())
-    stale = [
-        n
-        for n in oracled
-        if n not in WINDOW and latest.get(n, 0) <= planning_round - 3
-    ]
-    return sorted(stale, key=lambda n: (latest.get(n, 0), n))
+def pending_queries() -> tuple[dict[str, Query], dict[str, str]]:
+    # Kept only because perfbench/workloads.py imports it; nothing is
+    # staged any more. Remove with the next change to perfbench/.
+    return {}, {}

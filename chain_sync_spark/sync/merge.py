@@ -60,71 +60,6 @@ def set_union(t: Column, s: Column) -> Column:
     )
 
 
-def delta_available() -> bool:
-    """True when the delta-spark package is importable (the Delta jars
-    must also be on the session's classpath for execute() to work)."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _merge_set_map(
-    target_cols: list[str],
-    update_cols: list[str],
-    key_cols: list[str],
-    merge_exprs: dict[str, MergeExpr] | None,
-) -> dict[str, Column]:
-    """WHEN MATCHED UPDATE SET assignments — the same per-column merge
-    expressions merge_parquet applies, rendered against the t/s merge
-    aliases. Pure so it is testable without Delta on the classpath."""
-    merge_exprs = merge_exprs or {}
-    return {
-        c: merge_exprs.get(c, take_source)(F.col(f"t.{c}"), F.col(f"s.{c}"))
-        for c in target_cols
-        if c not in key_cols and c in update_cols
-    }
-
-
-def merge_delta(
-    spark: SparkSession,
-    target: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    merge_exprs: dict[str, MergeExpr] | None = None,
-) -> None:
-    """Transactional MERGE INTO against a Delta table — the drop-in
-    backend for merge_parquet when a lakehouse format is present
-    (concurrent writers, time travel, no manual swap/recovery).
-
-    Contract parity with merge_parquet: identical handler outputs
-    drive either backend unchanged — same key condition (null-safe),
-    same per-column merge expressions, insert-all for new keys.
-    ``target`` is a path when it contains a '/', else a table name.
-    Partition pruning is Delta's job here: the ON condition plus
-    file-level stats replace merge_parquet's explicit touched-partition
-    resolution, and OPTIMIZE replaces compact_partitions.
-    """
-    from delta.tables import DeltaTable
-
-    dt = (
-        DeltaTable.forPath(spark, target)
-        if "/" in target
-        else DeltaTable.forName(spark, target)
-    )
-    cond = " AND ".join(f"t.{k} <=> s.{k}" for k in key_cols)
-    set_map = _merge_set_map(dt.toDF().columns, updates.columns, key_cols, merge_exprs)
-    (
-        dt.alias("t")
-        .merge(updates.alias("s"), cond)
-        .whenMatchedUpdate(set=set_map)
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-
-
 def recover_table(target_dir: str, partition_depth: int | None = None) -> None:
     """Crash recovery for the swap windows: restore a whole-table
     backup if the table itself is absent, restore any partition-level

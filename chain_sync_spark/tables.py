@@ -26,7 +26,7 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

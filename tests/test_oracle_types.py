@@ -45,19 +45,30 @@ def test_no_oracle_outputs_hugeint(con):
     )
 
 
+
 def test_no_pending_oracle_outputs_hugeint(con):
-    """Staged (PENDING_QUERIES) oracles obey the same boundary
-    convention before they ever take a WINDOW slot."""
+    """Oracles outside the registry (the pending_queries() shim and the
+    two unregistered query/oracle pairs) obey the same boundary
+    convention before they are ever registered."""
+    from chain_sync_spark.operators.sync_queries import (
+        _MD_BLOCKS_ORACLE,
+        _MUTINGS_DIGEST_ORACLE,
+    )
     from chain_sync_spark.registry import pending_queries
 
+    pending = {
+        **pending_queries()[1],
+        "markdown_lists_blocks": _MD_BLOCKS_ORACLE,
+        "sync_mutings_digest": _MUTINGS_DIGEST_ORACLE,
+    }
     offenders = []
-    for name, sql in pending_queries()[1].items():
+    for name, sql in pending.items():
         for row in con.execute(f"DESCRIBE {sql}").fetchall():
             col, typ = row[0], row[1]
             base = typ.split("(")[0].strip().upper()
             if base in _FORBIDDEN:
                 offenders.append(f"{name}.{col}: {typ}")
     assert not offenders, (
-        "staged oracle output columns with pandas-divergent integer "
+        "unregistered oracle output columns with pandas-divergent integer "
         f"types (CAST them to BIGINT): {offenders}"
     )

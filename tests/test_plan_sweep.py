@@ -1,6 +1,6 @@
 """Whole-registry plan sweeps (fast tier).
 
-Three screens over every registered + staged query's PLAN — inspected
+Three screens over every registered query's PLAN — inspected
 without executing (the pre-execution AQE plan), so the whole sweep is
 one DataFrame-construction pass shared by a module fixture:
 
@@ -23,7 +23,7 @@ from chain_sync_spark.plans.audit import (
     executed_plan,
     formatted_plan,
 )
-from chain_sync_spark.registry import all_queries, pending_queries
+from chain_sync_spark.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -37,13 +37,11 @@ SKIP = {"neardup_clusters"}
 @pytest.fixture(scope="module")
 def all_plans(spark):
     """name -> (executed, formatted, optimized) plan strings for every
-    registered + staged query, constructed ONCE for all three sweeps
+    registered query, constructed ONCE for all three sweeps
     (the two r13-era sweeps each paid their own full construction
     pass — ~200 s of the old suite's budget)."""
-    qs = dict(all_queries())
-    qs.update(pending_queries()[0])
     out = {}
-    for name, fn in qs.items():
+    for name, fn in all_queries().items():
         if name in SKIP:
             continue
         df = fn(spark, SF_DIR)

@@ -1,33 +1,63 @@
-"""Registry ordering contract: the driver's correctness artifact only
-records the first ``DRIVER_WINDOW`` entries, so the explicit ``WINDOW``
-list IS the round's certification window (see registry.py docstring).
+"""The registry is the flat merge of every operator module's QUERIES and
+ORACLE dicts. Oracle parity over the whole registry is the slow
+``tests/test_staged.py::test_registry_oracle_parity_dual_transport``.
 """
 
-import json
+import importlib.util
+import sys
+import types
+from importlib import import_module
 from pathlib import Path
 
-from chain_sync_spark.registry import (
-    DRIVER_WINDOW,
-    WINDOW,
-    all_oracles,
-    all_queries,
-    rotation_debt,
-)
+import pytest
+
+from chain_sync_spark import registry
+from chain_sync_spark.registry import all_oracles, all_queries, pending_queries
 
 _ROOT = Path(__file__).resolve().parent.parent
 
 
+def _per_module(attr):
+    return [(name, value) for m in registry._MODULES
+            for name, value in getattr(import_module(m), attr).items()]
+
+
 def test_window_is_exactly_full_and_unique():
-    # A short window wastes driver-green capacity; an overflow silently
-    # drops the tail. Keep it exactly one driver window, no dup names.
-    assert len(WINDOW) == DRIVER_WINDOW
-    assert len(set(WINDOW)) == len(WINDOW)
+    """The merged registry is the whole window every tool runs: each
+    module's QUERIES and ORACLE entries land in it exactly once."""
+    for attr, merged in (("QUERIES", all_queries()), ("ORACLE", all_oracles())):
+        names = [n for n, _ in _per_module(attr)]
+        assert len(names) == len(set(names)) == len(merged), attr
+        assert set(names) == set(merged), attr
 
 
 def test_window_names_resolve_and_lead_iteration():
-    names = list(all_queries())
-    assert names[:DRIVER_WINDOW] == WINDOW
-    assert len(names) >= DRIVER_WINDOW
+    """Every name resolves to its own module's function, and iteration
+    follows _MODULES order: the first module's names lead."""
+    per_module = _per_module("QUERIES")
+    assert list(all_queries().items()) == per_module
+
+
+def test_bench_headline_names_resolve():
+    """Every query perfbench's query_mix runs is registered with an
+    oracle; a renamed query would otherwise fail the benchmark run."""
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_metrics", _ROOT / "perfbench" / "metrics.py"
+    )
+    metrics = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(metrics)
+    missing = [n for n in metrics.QUERIES
+               if n not in all_queries() or n not in all_oracles()]
+    assert not missing, f"perfbench query names not resolvable: {missing}"
+
+
+def test_window_and_staged_sets_are_disjoint():
+    """perfbench merges pending_queries() over the registry; the shim
+    stages nothing, so the merge leaves the registry as it is."""
+    staged_q, staged_o = pending_queries()
+    assert (staged_q, staged_o) == ({}, {})
+    assert {**all_queries(), **staged_q} == all_queries()
+    assert {**all_oracles(), **staged_o} == all_oracles()
 
 
 def test_every_query_has_oracle_or_is_documented_rows_only():
@@ -36,274 +66,14 @@ def test_every_query_has_oracle_or_is_documented_rows_only():
     assert rows_only == {"sync_markdown_parse"}, (
         f"unexpected rows-only queries: {rows_only}"
     )
+    assert set(oracles) <= set(all_queries()), "oracle without a query"
 
 
-def _artifacts():
-    """(round, path) for every CORRECTNESS_r*.json in the repo root —
-    globbed, never a hand-maintained round list (the round-7 failure
-    class: a literal range goes stale at every recomposition)."""
-    import re
-
-    out = []
-    for p in sorted(_ROOT.glob("CORRECTNESS_r*.json")):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
-        if m:
-            out.append((int(m.group(1)), p))
-    return out
-
-
-def test_rotation_ledger_covenant():
-    """Completeness: every registry query holds a driver row in some
-    prior artifact or sits inside THIS round's window (the whole
-    point of the rotation).  Freshness backstop: no query's latest
-    GREEN row may trail the newest artifact by MORE than 4 rounds
-    unless it is windowed this round.  (The planner in
-    tools/next_window.py aims at a 3-round cycle; this test is the
-    looser 4-round backstop so that the deferral slips the >150-name
-    registry forces — deferred names re-certify at gap 4 exactly,
-    per the registry docstring's capacity arithmetic — never
-    false-fail it.  The r10 verdict caught this encoded as
-    ``newest - 3``, which is the planner TARGET, not the backstop:
-    that form is guaranteed red the round after any deferral.)"""
-    artifacts = _artifacts()
-    assert artifacts, "no CORRECTNESS artifacts found"
-    seen = set(WINDOW)
-    for _, p in artifacts:
-        seen |= set(json.load(p.open()))
-    missing = [n for n in all_queries() if n not in seen]
-    assert not missing, f"queries with no driver row and no window slot: {missing}"
-
-    last_green = {}
-    for r, p in artifacts:
-        for name, rec in json.load(p.open()).items():
-            if (rec.get("rows_match") and rec.get("schema_match")
-                    and rec.get("hash_match", True)):
-                last_green[name] = max(last_green.get(name, 0), r)
-    newest = max(r for r, _ in artifacts)
-    oracled = set(all_queries()) & set(all_oracles())
-    stale = sorted(
-        n for n in oracled
-        if n not in WINDOW and last_green.get(n, 0) <= newest - 4
-    )
-    assert not stale, f"stale greens left out of the window: {stale}"
-
-
-def test_rotation_debt_names_resolve():
-    q = all_queries()
-    for name in rotation_debt():
-        assert name in q
-        assert name not in WINDOW
-
-
-def test_bench_headline_names_resolve():
-    """Every bench HEADLINE name must exist in the registry or the
-    staged set (sync_round is synthesized inside bench itself) — a
-    renamed or registered-without-updating-bench query would silently
-    vanish from the artifact otherwise."""
-    import bench
-    from chain_sync_spark.registry import pending_queries
-
-    known = (set(all_queries()) | set(pending_queries()[0])
-             | set(bench._bench_extra()) | {"sync_round"})
-    missing = [n for n in bench.HEADLINE if n not in known]
-    assert not missing, f"bench HEADLINE names not resolvable: {missing}"
-
-
-def test_window_and_staged_sets_are_disjoint():
-    """A staged query must not occupy a WINDOW slot until it is
-    registered (the slot would emit nothing and waste driver-green
-    capacity)."""
-    from chain_sync_spark.registry import pending_queries
-
-    overlap = set(WINDOW) & set(pending_queries()[0])
-    assert not overlap, f"staged names inside the WINDOW: {overlap}"
-
-
-def test_capacity_arithmetic_is_computed_and_printed(capsys, monkeypatch):
-    """The registry's capacity covenant is COMPUTED, never prose
-    (VERDICT r12 finding 3: a hand-written '174 oracled names' in the
-    docstring went stale the day the markdown slice staged).  This
-    pins both halves: (a) the arithmetic itself — every oracled name,
-    registered or staged, fits the four-round debt capacity — and
-    (b) that `tools/next_window.py --check` PRINTS those same live
-    numbers, so the covenant argument in any round's docs can cite
-    the tool instead of a number."""
-    import sys
-
-    from chain_sync_spark.registry import pending_queries
-    from tools import next_window
-
-    pq = pending_queries()[0]
-    oracled = (set(all_queries()) & set(all_oracles())) | set(pq)
-    capacity = (
-        DRIVER_WINDOW - next_window.STAGED_RESERVE
-    ) * next_window.FRESHNESS_BACKSTOP
-    assert len(oracled) <= capacity
-
-    monkeypatch.setattr(sys, "argv", ["next_window.py", "--check"])
-    assert next_window.main() == 0
-    err = capsys.readouterr().err
-    expected = (
-        f"# invariants ok: {len(rotation_debt())} debt + {len(pq)} staged; "
-        f"{len(oracled)}/{capacity} of four-round capacity"
-    )
-    assert expected in err, f"--check printed arithmetic drifted:\n{err}"
-
-
-def test_bench_line_stays_inside_driver_capture():
-    """Projected driver stdout line with every current HEADLINE entry
-    present stays parseable inside the ~2000-char tail capture, and
-    the soft trim preserves per-query visibility for the expensive
-    (>= 0.3 s) queries instead of dropping the whole dict."""
-    import bench
-
-    # worst-case realistic shape: every headline name present, values
-    # spread across the trim cutoffs (sf0.1 warm runs span ~0.1-3 s)
-    queries = {n: round(0.11 + i * 0.07, 2) for i, n in enumerate(bench.HEADLINE)}
-    orig = dict(queries)  # _compact_line trims headline["queries"] in place
-    slow = {n for n, t in orig.items() if t >= 1.0}
-    headline = {
-        "metric": "headline_queries_wall_clock",
-        "value": 12.34,
-        "unit": "sec",
-        "queries": queries,
-        "baseline_set_total_cold": 23.45,
-        "extended_set_total": 34.56,
-        "sf_ratio": {n: 12.3 for n in bench.BASELINE_SET},
-        "sf_flag": list(bench.BASELINE_SET[:3]),
-        "cpu_probe_sec": 0.5,
-        "v": {"pyspark": "4.1.2", "duckdb": "1.0.0", "pandas": "2.2.0"},
-        "sf": 0.1,
-    }
-    line = bench._compact_line(headline)
-    assert len(line) <= 1800
-    parsed = __import__("json").loads(line)
-    assert "queries" in parsed, "soft trim must not drop the whole dict"
-    kept = parsed["queries"]
-    # shedding is fastest-first: everything kept is at least as slow
-    # as everything dropped, and the slowest five never vanish
-    top5 = sorted(slow, key=orig.get)[-5:]
-    assert set(top5) <= set(kept), "slowest queries must stay visible"
-    if set(kept) != set(orig):
-        assert min(kept.values()) >= max(
-            v for n, v in orig.items() if n not in kept
-        )
-
-
-def test_bench_idle_gate_waits_then_proceeds(monkeypatch):
-    """_await_idle_probes (the r12 artifact-of-record fix): contended
-    probe pairs hold the recorded run at the door and re-probe; an
-    idle pair releases it immediately; a never-idle host exhausts the
-    bounded budget and proceeds with the last pair recorded rather
-    than spinning forever."""
-    import bench
-
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-
-    # contended twice (mc/sc > 1.2), then idle
-    seq = iter([(1.0, 1.5), (1.0, 1.4), (0.8, 0.82)])
-    cur = {}
-
-    def fake_sc():
-        cur["pair"] = next(seq)
-        return cur["pair"][0]
-
-    monkeypatch.setattr(bench, "_cpu_probe", fake_sc)
-    monkeypatch.setattr(
-        bench, "_cpu_probe_multicore", lambda n=None: cur["pair"][1]
-    )
-    sc, mc, waits = bench._await_idle_probes(max_waits=4, wait_s=0)
-    assert (sc, mc, waits) == (0.8, 0.82, 2)
-
-    # idle immediately: zero waits
-    seq = iter([(0.75, 0.78)])
-    sc, mc, waits = bench._await_idle_probes(max_waits=4, wait_s=0)
-    assert waits == 0 and sc == 0.75
-
-    # never idles: budget exhausted, proceeds anyway
-    seq = iter([(2.0, 2.1)] * 10)
-    sc, mc, waits = bench._await_idle_probes(max_waits=3, wait_s=0)
-    assert waits == 3 and sc == 2.0
-
-    # single-core throttle alone (mc/sc fine, sc > 1.5) also gates
-    seq = iter([(1.8, 1.9), (0.9, 0.95)])
-    sc, mc, waits = bench._await_idle_probes(max_waits=4, wait_s=0)
-    assert (sc, waits) == (0.9, 1)
-
-
-def test_staged_priority_is_a_permutation_of_pending():
-    """STAGED_PRIORITY is the executable displacement rule: every
-    pending name has an explicit priority and nothing stale lingers
-    after a registration — staging or registering an entrant forces
-    this list to be updated in the same change."""
-    from chain_sync_spark.registry import STAGED_PRIORITY, pending_queries
-
-    assert sorted(STAGED_PRIORITY) == sorted(pending_queries()[0])
-
-
-def test_next_window_plan_fills_driver_window():
-    """The planned next-round window: staged reserve first, then debt
-    oldest-first, then remaining staged by priority — full to exactly
-    DRIVER_WINDOW whenever debt+staged can fill it, no duplicates,
-    and only priority-tail entrants spill to the round after."""
-    from chain_sync_spark.registry import (
-        DRIVER_WINDOW,
-        STAGED_PRIORITY,
-        all_queries,
-        rotation_debt,
-    )
-    from tools.next_window import STAGED_RESERVE, planned_window
-
-    window, leftover, slipped = planned_window()
-    debt = rotation_debt()
-    n_staged = len(STAGED_PRIORITY)
-    expect = min(len(debt) + n_staged, DRIVER_WINDOW)
-    assert len(window) == len(set(window)) == expect
-    q = all_queries()
-    assert all(n in q for n in debt)
-    # debt fills oldest-first; only the tail past the staged reserve
-    # may slip, and what slips is exactly the freshest debt
-    taken_debt = debt[: DRIVER_WINDOW - min(n_staged, STAGED_RESERVE)]
-    assert window[: len(taken_debt)] == taken_debt
-    assert slipped == debt[len(taken_debt):]
-    # staged entrants spill only from the priority tail
-    room = DRIVER_WINDOW - len(taken_debt)
-    assert leftover == STAGED_PRIORITY[max(room, 0):]
-
-
-def test_bench_line_sheds_aux_dicts_before_queries():
-    """The round-4 capture-overflow class, for the new auxiliary
-    dicts: when the line exceeds the hard guard, construct_hot and
-    sf_ratio shed BEFORE the queries dict is sacrificed."""
-    import bench
-
-    queries = {f"some_realistically_named_query_{i:03d}": 2.5 for i in range(70)}
-    headline = {
-        "metric": "headline_queries_wall_clock",
-        "value": 12.34,
-        "queries": dict(queries),
-        "construct_hot": {
-            f"some_eager_operator_name_{i:02d}": 9.99 for i in range(30)
-        },
-        "sf_ratio": {f"some_realistically_named_query_{i:03d}": 3.3 for i in range(10)},
-    }
-    import json as _pre
-    assert len(_pre.dumps(headline, separators=(",", ":"))) > 1800
-    line = bench._compact_line(headline)
-    assert len(line) <= 1800
-    import json as _json
-
-    parsed = _json.loads(line)
-    assert "construct_hot" not in parsed
-    assert "queries" in parsed and len(parsed["queries"]) >= 1
-
-
-def test_hardening_queue_names_are_registered():
-    """Every queued implementation swap must reference a registered
-    query (a renamed/retired query would silently orphan its swap),
-    and the planner must surface queue names that land in a window."""
-    from chain_sync_spark.registry import HARDENING_QUEUE, all_queries
-
-    q = all_queries()
-    missing = [n for n in HARDENING_QUEUE if n not in q]
-    assert not missing, missing
+def test_duplicate_name_across_modules_raises(monkeypatch):
+    fake = types.ModuleType("fake_ops")
+    fake.QUERIES = {"tpch_q1_pricing_summary": None}
+    fake.ORACLE = {}
+    monkeypatch.setitem(sys.modules, "fake_ops", fake)
+    monkeypatch.setattr(registry, "_MODULES", [*registry._MODULES, "fake_ops"])
+    with pytest.raises(ValueError, match="tpch_q1_pricing_summary"):
+        all_queries()

@@ -235,13 +235,10 @@ def test_new_entrant_plan_shapes(spark):
     the mixture weights run no Window and exactly one corpus
     aggregate feeding a broadcast total; the KMV audit's only
     windows are the two-phase salted bottom-k (never a window over
-    the raw hash without the partition salt).  Resolved through the
-    registry AND the staged set — these entrants registered at the
-    r11 recomposition and the pins must survive that move."""
-    from chain_sync_spark.registry import all_queries, pending_queries
+    the raw hash without the partition salt)."""
+    from chain_sync_spark.registry import all_queries
 
-    q, _ = pending_queries()
-    q = {**all_queries(), **q}
+    q = all_queries()
     sf = "/root/testdata/sf0.001"
 
     gopher = _plan(q["gopher_dup_ngram_profile"](spark, sf))

@@ -1,17 +1,8 @@
-"""Staging battery + known-answer tests for late-registered operators.
-
-Two populations:
-  * the generic staged set (module-level PENDING_QUERIES dicts,
-    resolved through registry.pending_queries()) — operators fully
-    implemented + oracled but awaiting a WINDOW slot; they get the
-    driver-faithful dual-transport parity check here as the stand-in
-    for the driver row they cannot earn yet, plus a guard that they
-    stay out of the registry until recomposition;
-  * the round-7 registrations (kmeans_embedding_clusters,
-    scd2_event_type_history, bpe_pair_merges, scd2_asof_lookup) —
-    their known-answer tests stay pinned here after registration, and
-    a dual-transport parity pin guards the exact oracle text the
-    WINDOW now carries."""
+"""Whole-registry oracle parity (dual transport) plus known-answer
+tests for the LLM-data operators: k-means, SCD2, BPE, sketches, ANN
+audits, dedup and quality screens.  Two unregistered query/oracle
+pairs (markdown_lists_blocks, sync_mutings_digest) get the same
+parity check by name."""
 
 from datetime import datetime
 
@@ -24,6 +15,7 @@ from pyspark.sql import functions as F
 
 from chain_sync_spark.operators import llm_pipeline as lp
 from chain_sync_spark.operators import temporal as tp
+from chain_sync_spark.registry import all_oracles, all_queries
 
 SF = "/root/testdata/sf0.001"
 
@@ -172,14 +164,6 @@ def test_scd2_every_user_chain_is_well_formed(spark):
 # Driver-faithful certification (dual transport, as tools/oracle_check)
 # ---------------------------------------------------------------------------
 
-def _pending():
-    from chain_sync_spark.registry import pending_queries
-
-    q, o = pending_queries()
-    for name, fn in q.items():
-        yield name, fn, o[name]
-
-
 def _dual_transport_parity(spark, name, fn, oracle):
     """Spark vs DuckDB through BOTH driver transports (object path and
     pandas path) via the exact canonicalizer tools/oracle_check shares
@@ -210,78 +194,16 @@ def _dual_transport_parity(spark, name, fn, oracle):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("name,fn,oracle", list(_pending()))
-def test_staged_oracle_parity_dual_transport(spark, name, fn, oracle):
-    """The stand-in for the driver row staged queries cannot earn
-    until the next WINDOW recomposition."""
-    _dual_transport_parity(spark, name, fn, oracle)
-
-
-R7_REGISTRATIONS = [
-    "kmeans_embedding_clusters",
-    "scd2_event_type_history",
-    "bpe_pair_merges",
-    "scd2_asof_lookup",
-]
-
-R8_REGISTRATIONS = [
-    "embed_hashing_fixedpoint",
-    "kmeans_balanced_sample",
-    "kmeans_assign_serving",
-    "bpe_encode_frozen",
-    "quantile_sketch_orders",
-]
-
-R9_REGISTRATIONS = [
-    "cms_probe_terms",
-    "kmeans_centroids_fixedpoint",
-    "dedup_token_spans",
-    "dedup_span_cut",
-    "dedup_incremental_spans",
-    "bloom_probe_fingerprints",
-    "neardup_winnow_pairs",
-    "winnow_dup_clusters",
-    "bpe_fertility_frozen",
-    "ann_recall_audit",
-]
-
-R10_REGISTRATIONS = [
-    "source_overlap_matrix",
-    "quality_by_source",
-    "lm_probe_newdocs",
-    "winnow_probe_newdocs",
-    "minhash_estimate_error_audit",
-    # the four round-10 hardening swaps: changed impls, oracles
-    # unchanged — this pin is the regression net until their r11 rows
-    "neardup_prefix_filter_pairs",
-    "dedup_segment_rewrite",
-    "dedup_incremental_batch",
-    "tfidf_top_terms",
-]
-
-
-@pytest.mark.parametrize(
-    "name",
-    R7_REGISTRATIONS + R8_REGISTRATIONS + R9_REGISTRATIONS + R10_REGISTRATIONS,
-)
-@pytest.mark.slow
-def test_registration_oracle_parity_dual_transport(spark, name):
-    """Parity pin on the QUERIES/ORACLE entries registered in rounds
-    7-9 (staged→registered promotions plus direct registrations)
-    — the regression net for queries whose driver row is not in the
-    current WINDOW."""
-    from chain_sync_spark.registry import all_oracles, all_queries
-
+@pytest.mark.parametrize("name", sorted(all_oracles()))
+def test_registry_oracle_parity_dual_transport(spark, name):
+    """Every registered query with an oracle matches it at sf0.001
+    through both transports tools/oracle_check.py compares."""
     _dual_transport_parity(spark, name, all_queries()[name], all_oracles()[name])
 
 
 def test_prepared_markdown_lists_blocks_parity_dual_transport(spark):
-    """The r14 PREPARED entrant (VERDICT r12 item 6): lists +
-    blockquotes + fenced-code stripping, implemented and certified
-    this round but NOT staged — net-new staging is frozen while the
-    queue sits at the 5-slot reserve, so the module ships the
-    query/oracle pair outside PENDING and r14's recomposition stages
-    it.  Same dual-transport certification as a staged entrant."""
+    """Lists + blockquotes + fenced-code stripping: an unregistered
+    query/oracle pair, checked like a registered one."""
     from chain_sync_spark.operators.sync_queries import (
         _MD_BLOCKS_ORACLE,
         markdown_lists_blocks,
@@ -333,14 +255,12 @@ def test_markdown_lists_blocks_fence_semantics(spark):
 
 
 def test_prepared_sync_mutings_digest_parity_dual_transport(spark):
-    """The r14 PREPARED post-freeze entrant (registry STAGED_PRIORITY
-    comment): the real community-mutings side-job run end-to-end
-    against a deterministic posts store — P9 role filter, J4 two-key
-    update join, S10 update-by-query MERGE, and the periodic-job
-    replay (third application is a verbatim repeat whose no-op-ness
-    the oracle certifies, since it derives final state from single
-    applications).  Dual-transport certified here until it takes a
-    PENDING slot at the r14 recomposition."""
+    """An unregistered query/oracle pair: the real community-mutings
+    side-job run end-to-end against a deterministic posts store — P9
+    role filter, J4 two-key update join, S10 update-by-query MERGE,
+    and the periodic-job replay (third application is a verbatim
+    repeat whose no-op-ness the oracle certifies, since it derives
+    final state from single applications)."""
     from chain_sync_spark.operators.sync_queries import (
         _MUTINGS_DIGEST_ORACLE,
         sync_mutings_digest,
@@ -372,12 +292,17 @@ def test_sync_mutings_digest_flags_expected_posts(spark):
 
 
 def test_staged_names_not_yet_registered():
-    from chain_sync_spark.registry import all_oracles, all_queries, pending_queries
+    """Nothing is staged (pending_queries() is perfbench's empty shim),
+    and the two unregistered query/oracle pairs stay out of the
+    registry until a change registers them on purpose."""
+    from chain_sync_spark.registry import pending_queries
 
     pending_q, pending_o = pending_queries()
     assert set(pending_q) == set(pending_o)
     assert not set(pending_q) & set(all_queries())
     assert not set(pending_o) & set(all_oracles())
+    for name in ("markdown_lists_blocks", "sync_mutings_digest"):
+        assert name not in all_queries() and name not in all_oracles()
 
 
 # ---------------------------------------------------------------------------
@@ -470,7 +395,7 @@ def test_scd2_asof_lookup_point_in_time(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# embed_hashing_fixedpoint (staged round 8)
+# embed_hashing_fixedpoint
 # ---------------------------------------------------------------------------
 
 def _py_hash_embed(text: str, dim: int) -> list[int] | None:
@@ -524,7 +449,7 @@ def test_embed_hashing_fixedpoint_matches_python_replica(spark, tmp_path):
 
 
 def test_embed_hashing_fixedpoint_is_the_trick_serialized(spark):
-    """The staged query is exactly embed_hashing_trick + fixed-point
+    """The query is exactly embed_hashing_trick + fixed-point
     serialization — same doc set, and each string deserializes to the
     micro-rounded embedding (unit-norm within rounding error)."""
     from chain_sync_spark.operators import llm_pipeline as lp2
@@ -546,7 +471,7 @@ def test_embed_hashing_fixedpoint_is_the_trick_serialized(spark):
 
 
 # ---------------------------------------------------------------------------
-# kmeans_balanced_sample (staged round 8)
+# kmeans_balanced_sample
 # ---------------------------------------------------------------------------
 
 def test_kmeans_balanced_sample_matches_python_replica(spark):
@@ -586,7 +511,7 @@ def test_kmeans_balanced_sample_matches_python_replica(spark):
 
 
 # ---------------------------------------------------------------------------
-# kmeans_centroids_fixedpoint (staged round 9)
+# kmeans_centroids_fixedpoint
 # ---------------------------------------------------------------------------
 
 def test_kmeans_centroids_fixedpoint_serializes_centroids(spark):
@@ -605,7 +530,7 @@ def test_kmeans_centroids_fixedpoint_serializes_centroids(spark):
 
 
 # ---------------------------------------------------------------------------
-# winnow_dup_clusters (staged)
+# winnow_dup_clusters
 # ---------------------------------------------------------------------------
 
 def test_winnow_clusters_hand_computed(spark, tmp_path):
@@ -639,7 +564,7 @@ def test_winnow_clusters_hand_computed(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# ann_recall_audit (staged)
+# ann_recall_audit
 # ---------------------------------------------------------------------------
 
 def test_ann_recall_audit_replica(spark):
@@ -692,7 +617,7 @@ def test_ann_recall_audit_replica(spark):
 
 
 # ---------------------------------------------------------------------------
-# bpe_fertility_frozen (staged)
+# bpe_fertility_frozen
 # ---------------------------------------------------------------------------
 
 def test_bpe_fertility_hand_computed(spark, tmp_path):
@@ -746,7 +671,7 @@ def test_ann_recall_monotone_in_probe_radius(spark):
 
 
 # ---------------------------------------------------------------------------
-# quality_by_source (staged, round-10-queued)
+# quality_by_source
 # ---------------------------------------------------------------------------
 
 def test_quality_by_source_hand_computed(spark, tmp_path):
@@ -781,7 +706,7 @@ def test_quality_by_source_hand_computed(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# minhash_estimate_error_audit (staged round 9)
+# minhash_estimate_error_audit
 # ---------------------------------------------------------------------------
 
 def test_minhash_error_audit_matches_python_replica(spark, tmp_path):
@@ -888,7 +813,7 @@ def test_minhash_error_audit_bounds_at_sf0001(spark):
 
 
 # ---------------------------------------------------------------------------
-# sample_exact_k_per_lang (staged round 9)
+# sample_exact_k_per_lang
 # ---------------------------------------------------------------------------
 
 def test_sample_exact_k_replica_and_partition_invariance(spark, tmp_path):
@@ -938,7 +863,7 @@ def test_sample_exact_k_replica_and_partition_invariance(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# gopher_dup_ngram_profile (staged late round 9)
+# gopher_dup_ngram_profile
 # ---------------------------------------------------------------------------
 
 def _py_gopher(texts: dict[int, str]):
@@ -1019,7 +944,7 @@ def test_gopher_profile_hand_computed_edges(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# lm_stupid_backoff_newdocs (staged late round 9)
+# lm_stupid_backoff_newdocs
 # ---------------------------------------------------------------------------
 
 def _py_stupid_backoff(texts: dict[int, str], mod: int):
@@ -1109,7 +1034,7 @@ def test_stupid_backoff_all_three_paths_hand_computed(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# kmv_distinct_shingles (staged late round 9)
+# kmv_distinct_shingles
 # ---------------------------------------------------------------------------
 
 def _py_kmv(texts_by_source: dict[str, list[str]]):
@@ -1182,7 +1107,7 @@ def test_kmv_exact_branch_below_k(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# ann_two_stage_rerank (staged late round 9)
+# ann_two_stage_rerank
 # ---------------------------------------------------------------------------
 
 def test_rerank_scores_are_exact_and_recall_high(spark):
@@ -1229,7 +1154,7 @@ def test_rerank_equals_exact_when_pool_covers_corpus(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# mixture_temperature_weights (staged late round 9)
+# mixture_temperature_weights
 # ---------------------------------------------------------------------------
 
 def test_temperature_mixture_replica_and_boost_direction(spark):
@@ -1279,7 +1204,7 @@ def test_temperature_mixture_replica_and_boost_direction(spark):
 
 
 # ---------------------------------------------------------------------------
-# quality_composite_filter (staged late round 9)
+# quality_composite_filter
 # ---------------------------------------------------------------------------
 
 def test_composite_filter_is_the_conjunction_of_its_components(spark):
@@ -1315,7 +1240,7 @@ def test_composite_filter_is_the_conjunction_of_its_components(spark):
 
 
 # ---------------------------------------------------------------------------
-# dedup_funnel_report (staged late round 9)
+# dedup_funnel_report
 # ---------------------------------------------------------------------------
 
 def test_funnel_counts_match_components_and_monotone(spark):
@@ -1358,7 +1283,7 @@ def test_funnel_counts_match_components_and_monotone(spark):
 
 
 # ---------------------------------------------------------------------------
-# ngram_novelty_score + length_percentile_by_lang (staged late round 9)
+# ngram_novelty_score + length_percentile_by_lang
 # ---------------------------------------------------------------------------
 
 def test_novelty_matches_python_replica_and_discriminates(spark):
@@ -1453,7 +1378,7 @@ def test_length_percentile_single_doc_lang(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# ccnet_quality_buckets (staged round-9 wave 4)
+# ccnet_quality_buckets
 # ---------------------------------------------------------------------------
 
 def _py_lm_scores(texts):
@@ -1552,7 +1477,7 @@ def test_ccnet_buckets_tie_group_rule(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# quality_classifier_margin (staged round-9 wave 4)
+# quality_classifier_margin
 # ---------------------------------------------------------------------------
 
 def _py_classifier_margin(texts):
@@ -1645,7 +1570,7 @@ def test_classifier_margin_unseen_term_prior(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# neardup_containment_pairs (staged round-9 wave 4)
+# neardup_containment_pairs
 # ---------------------------------------------------------------------------
 
 def test_containment_pairs_match_oracle_math_at_sf0001(spark):
@@ -1716,7 +1641,7 @@ def test_containment_directional_fixture(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# pq_probe_newvecs (staged round-9 wave 4) — streamed-PQ serving certifier
+# pq_probe_newvecs — streamed-PQ serving certifier
 # ---------------------------------------------------------------------------
 
 def test_pq_probe_matches_streamed_store_serving(spark, tmp_path):
@@ -1783,7 +1708,7 @@ def test_pq_probe_matches_streamed_store_serving(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# embedding_prototypicality (staged round-9 wave 4)
+# embedding_prototypicality
 # ---------------------------------------------------------------------------
 
 def test_prototypicality_matches_numpy_replica(spark):
@@ -1857,7 +1782,7 @@ def test_prototypicality_single_vector_label(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# split_assign_leakage_safe (staged round-9 wave 4)
+# split_assign_leakage_safe
 # ---------------------------------------------------------------------------
 
 def test_split_leakage_safe_invariants(spark):
@@ -1904,7 +1829,7 @@ def test_split_leakage_safe_invariants(spark):
 
 
 # ---------------------------------------------------------------------------
-# matryoshka_recall_audit (staged round-9 wave 4)
+# matryoshka_recall_audit
 # ---------------------------------------------------------------------------
 
 def test_matryoshka_audit_matches_numpy_replica(spark):

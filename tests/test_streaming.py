@@ -6,6 +6,7 @@ windows."""
 import json
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from chain_sync_spark.streaming.stream_sync import (
@@ -636,7 +637,6 @@ def test_stream_pq_index_rejects_seedless_first_batch(spark, tmp_path):
     import os
 
     import numpy as np
-    import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from chain_sync_spark.operators import llm_pipeline as lp
@@ -886,7 +886,6 @@ def test_append_store_rejects_foreign_checkpoint(spark, tmp_path):
     import json as _json
     import os
 
-    import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from chain_sync_spark.streaming.stream_sync import (
@@ -1145,7 +1144,6 @@ def test_stream_cluster_assign_frozen_centroids_and_replay(spark, tmp_path):
     import os
 
     import numpy as np
-    import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from chain_sync_spark.operators import llm_pipeline as lp

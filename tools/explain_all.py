@@ -25,13 +25,8 @@ def main() -> None:
     only = set(sys.argv[2:])
     spark = get_spark("explain-all", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
-    queries = dict(all_queries())
-    # staged (pending) queries audit like registered ones
-    from chain_sync_spark.registry import pending_queries
-
-    queries.update(pending_queries()[0])
     rows = []
-    for name, fn in queries.items():
+    for name, fn in all_queries().items():
         if only and name not in only:
             continue
         try:

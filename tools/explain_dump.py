@@ -14,7 +14,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from chain_sync_spark.operators.llm_pipeline import release_caches  # noqa: E402
-from chain_sync_spark.registry import all_queries, pending_queries  # noqa: E402
+from chain_sync_spark.registry import all_queries  # noqa: E402
 from chain_sync_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
@@ -25,8 +25,7 @@ def main() -> None:
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark("explain-dump")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = dict(all_queries())
-    queries.update(pending_queries()[0])
+    queries = all_queries()
     for name in names:
         df = queries[name](spark, SF_DIR)
         plan = df._jdf.queryExecution().explainString(

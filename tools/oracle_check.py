@@ -153,16 +153,7 @@ def main() -> int:
     for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    queries, oracles = dict(all_queries()), dict(all_oracles())
-    # staged (pending) queries resolve too, so next round's entrants
-    # can be pre-flighted at any sf before they take a WINDOW slot
-    from chain_sync_spark.registry import pending_queries
-
-    pq, po = pending_queries()
-    for pname in pq:
-        if pname in only:
-            queries[pname] = pq[pname]
-            oracles[pname] = po[pname]
+    queries, oracles = all_queries(), all_oracles()
     failures = []
     n_run = 0
     for name, fn in queries.items():
