@@ -13,21 +13,60 @@ each way (the write alone measured ~0.3 s idle / 8 s under host load
 in the r13 action census). Both paths now go through pyarrow on the
 driver: the on-disk format is unchanged (a directory holding one
 parquet file, exactly what `coalesce(1).write.parquet` produced — a
-store written by either revision reads back under the other), the
-atomic tmp-dir + rename protocol is unchanged, and zero Spark jobs
-run. The `spark` parameter stays in both signatures so every caller
-is source-compatible.
+store written by either revision reads back under the other) and zero
+Spark jobs run. The `spark` parameter stays in both signatures so
+every caller is source-compatible.
+
+The cursor directory is replaced with `swap_dir`, the recoverable
+directory swap the streaming merged-state stores commit through too:
+a crash at any step leaves either the new or the previous cursor,
+never none, and `recover_swap` (run by both cursor functions) repairs
+the leftover state.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
 
+def recover_swap(path: str) -> None:
+    """Repair any crash window of `swap_dir(path, ...)` (idempotent):
+    leftover staging is discarded (its write never committed), a
+    missing `path` with `path.old` present is restored (crash between
+    the two renames), and a `path.old` beside a committed `path` is
+    cleared (crash before cleanup)."""
+    staging, old = path + ".staging", path + ".old"
+    if os.path.isdir(staging):
+        shutil.rmtree(staging)
+    if os.path.isdir(old):
+        if os.path.isdir(path):
+            shutil.rmtree(old)
+        else:
+            os.replace(old, path)
+
+
+def swap_dir(path: str, write: Callable[[str], None]) -> None:
+    """Replace directory `path` with the one `write(staging)` builds.
+    Commit order: write staging → rename path → path.old → rename
+    staging → path → remove path.old. The previous directory is
+    renamed aside, never removed before the new one is in place, so
+    every crash window is one `recover_swap` repairs."""
+    recover_swap(path)
+    staging, old = path + ".staging", path + ".old"
+    write(staging)
+    if os.path.isdir(path):
+        os.replace(path, old)
+    os.replace(staging, path)
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+
+
 def read_cursor(spark: SparkSession, path: str, default: int = 0) -> int:
+    recover_swap(path)
     if not os.path.exists(path):
         return default
     import pyarrow.parquet as pq
@@ -47,14 +86,11 @@ def write_cursor(spark: SparkSession, path: str, block_num: int, dry_run: bool =
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tmp = path + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    pq.write_table(
-        pa.table({"block_num": pa.array([block_num], type=pa.int64())}),
-        os.path.join(tmp, "part-00000.parquet"),
-    )
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
+    def _write(staging: str) -> None:
+        os.makedirs(staging)
+        pq.write_table(
+            pa.table({"block_num": pa.array([block_num], type=pa.int64())}),
+            os.path.join(staging, "part-00000.parquet"),
+        )
+
+    swap_dir(path, _write)

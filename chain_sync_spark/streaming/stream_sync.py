@@ -22,11 +22,17 @@ the watermark horizon, not the stream length.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from chain_sync_spark.sources.blocks import OP_STREAM_SCHEMA
+from chain_sync_spark.sources.checkpoint import recover_swap as _recover_store
+from chain_sync_spark.sources.checkpoint import swap_dir
 
 
 def stream_ops_from_json(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -143,18 +149,19 @@ def run_stream_sync(
     return writer.start()
 
 
-# --- rollup store commit protocol -----------------------------------------
+# --- merged-state store commit protocol -----------------------------------
 #
-# The stored rollup and its replay marker must commit ATOMICALLY, and a
-# crash at any point must be recoverable:
-#   staging = store.staging   (new merged table, written first)
-#   old     = store.old       (previous table, renamed aside — never rmtree'd
-#                              before the new table is in place)
-# Commit order: write staging (incl. _rollup_commit.json inside it, so
-# marker and data land in the same rename) → rename store → store.old →
-# rename staging → store → remove store.old.  _recover_store() repairs
-# every crash window: leftover staging is discarded (batch replays),
-# a missing store with store.old present is restored, a surviving
+# A merged-state store (rollup, CMS, Bloom, KMV, lang counts, profile,
+# histogram) is rewritten whole every batch; the table and its replay
+# marker must commit ATOMICALLY, and a crash at any point must be
+# recoverable.  _commit_store writes the merged table into
+# store.staging with _rollup_commit.json inside it (marker and data
+# land in the same rename), then sources.checkpoint.swap_dir swaps it
+# in: rename store → store.old → rename staging → store → remove
+# store.old — the same recoverable swap the sync cursor commits
+# through.  _recover_store (sources.checkpoint.recover_swap) repairs
+# every crash window: leftover staging is discarded (batch replays), a
+# missing store with store.old present is restored, a surviving
 # store.old next to a committed store is cleared.
 #
 # The marker is keyed on (checkpoint identity, batch_id): batch ids
@@ -168,25 +175,7 @@ def run_stream_sync(
 _COMMIT_META = "_rollup_commit.json"
 
 
-def _recover_store(store_dir: str) -> None:
-    """Repair any crash window of the rollup-store swap (idempotent)."""
-    import os
-    import shutil
-
-    staging, old = store_dir + ".staging", store_dir + ".old"
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)  # incomplete write — the batch will replay
-    if os.path.isdir(old):
-        if os.path.isdir(store_dir):
-            shutil.rmtree(old)  # crash after commit, before cleanup
-        else:
-            os.replace(old, store_dir)  # crash mid-swap — restore previous
-
-
 def _read_commit_meta(store_dir: str) -> dict:
-    import json
-    import os
-
     path = os.path.join(store_dir, _COMMIT_META)
     if not os.path.exists(path):
         return {}
@@ -194,52 +183,24 @@ def _read_commit_meta(store_dir: str) -> dict:
         return json.load(fh)
 
 
+def _write_marker(store_dir: str, meta: dict) -> None:
+    """Commit ``meta`` as the store's marker with one atomic replace."""
+    tmp = os.path.join(store_dir, _COMMIT_META + ".tmp")
+    with open(tmp, "w") as fh:
+        json.dump(meta, fh)
+    os.replace(tmp, os.path.join(store_dir, _COMMIT_META))
+
+
 def _commit_store(merged: DataFrame, store_dir: str, meta: dict) -> None:
     """Write merged+marker to staging, then swap in recoverably."""
-    import json
-    import os
-    import shutil
 
-    staging, old = store_dir + ".staging", store_dir + ".old"
-    merged.write.mode("overwrite").parquet(staging)
-    # marker inside the staged dir: data and replay mark commit in ONE
-    # rename (underscore prefix → invisible to parquet readers)
-    with open(os.path.join(staging, _COMMIT_META), "w") as fh:
-        json.dump(meta, fh)
-    if os.path.isdir(store_dir):
-        os.replace(store_dir, old)
-    os.replace(staging, store_dir)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    def _write(staging: str) -> None:
+        merged.write.mode("overwrite").parquet(staging)
+        # marker inside the staged dir: data and replay mark commit in ONE
+        # rename (underscore prefix → invisible to parquet readers)
+        _write_marker(staging, meta)
 
-
-def _commit_store_tables(
-    tables: dict[str, DataFrame], store_dir: str, meta: dict
-) -> None:
-    """Multi-table variant of _commit_store: each table lands in a
-    subdirectory of ONE staged parent, the marker at the staging root,
-    and the whole parent swaps in with the same recoverable double
-    rename — several relations + the replay mark commit atomically.
-
-    This full-rewrite swap is the right protocol for MERGED state (the
-    rollup/CMS/profile stores, whose every row changes per batch); the
-    grow-only index stores use the append-only protocol below."""
-    import json
-    import os
-    import shutil
-
-    staging, old = store_dir + ".staging", store_dir + ".old"
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(os.path.join(staging, name))
-    with open(os.path.join(staging, _COMMIT_META), "w") as fh:
-        json.dump(meta, fh)
-    if os.path.isdir(store_dir):
-        os.replace(store_dir, old)
-    os.replace(staging, store_dir)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    swap_dir(store_dir, _write)
 
 
 # --- append-only store commit protocol -------------------------------------
@@ -293,8 +254,6 @@ WINNOW_STORE_TABLES = {
 
 
 def _delta_path(store_dir: str, name: str, batch_id: int) -> str:
-    import os
-
     return os.path.join(store_dir, name, f"{_DELTA_PREFIX}{batch_id:08d}")
 
 
@@ -316,9 +275,6 @@ def _recover_append_store(store_dir: str) -> None:
     staging dirs, compact dirs the marker doesn't reference (a crashed
     compaction), and delta dirs a committed compaction superseded (a
     crash before compaction cleanup)."""
-    import os
-    import shutil
-
     if not os.path.isdir(store_dir):
         return
     committed = _committed_batch(store_dir)
@@ -377,9 +333,6 @@ def _commit_append(
     checkpoint and its orphans overwritten — acceptable because
     orphan deltas are invisible to readers (read_store_table serves
     only marker-covered deltas) and recovery deletes them anyway."""
-    import json
-    import os
-
     committed = _read_commit_meta(store_dir)
     if committed and committed.get("checkpoint") != meta.get("checkpoint"):
         raise ValueError(
@@ -403,10 +356,7 @@ def _commit_append(
     compacted = _compacted_through(store_dir)
     if compacted >= 0:
         meta = {**meta, "compacted_through": compacted}
-    tmp = os.path.join(store_dir, _COMMIT_META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(store_dir, _COMMIT_META))
+    _write_marker(store_dir, meta)
 
 
 def read_store_table(
@@ -417,8 +367,6 @@ def read_store_table(
     (compacted_through, committed].  Uncommitted (crash-orphaned)
     deltas and unreferenced compact dirs are invisible.  The one read
     path for serving queries AND the maintenance stream itself."""
-    import os
-
     meta = _read_commit_meta(store_dir)
     committed = meta.get("batch_id", -1)
     compacted = meta.get("compacted_through", -1)
@@ -477,10 +425,6 @@ def compact_store(
     ≤ compacted_through (readers ignore them, recovery deletes them).
     Returns the batch id the store is now compacted through, or -1 if
     the store has no committed batches yet."""
-    import json
-    import os
-    import shutil
-
     _recover_append_store(store_dir)
     meta = _read_commit_meta(store_dir)
     committed = meta.get("batch_id", -1)
@@ -499,27 +443,95 @@ def compact_store(
             staging,
             os.path.join(store_dir, name, f"{_COMPACT_PREFIX}{committed:08d}"),
         )
-    new_meta = {**meta, "compacted_through": committed}
-    tmp = os.path.join(store_dir, _COMMIT_META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(new_meta, fh)
-    os.replace(tmp, os.path.join(store_dir, _COMMIT_META))
-    # cleanup (recovery redoes this after a crash): superseded deltas
-    # and any previous compact base
-    for name in tables:
-        table_dir = os.path.join(store_dir, name)
-        for d in os.listdir(table_dir):
-            path = os.path.join(table_dir, d)
-            if d.startswith(_DELTA_PREFIX):
-                try:
-                    bid = int(d[len(_DELTA_PREFIX):])
-                except ValueError:
-                    continue
-                if bid <= committed:
-                    shutil.rmtree(path)
-            elif d.startswith(_COMPACT_PREFIX) and d != f"{_COMPACT_PREFIX}{committed:08d}":
-                shutil.rmtree(path)
+    _write_marker(store_dir, {**meta, "compacted_through": committed})
+    # cleanup is exactly what recovery does after a crash here: drop the
+    # superseded deltas and any previous compact base
+    _recover_append_store(store_dir)
     return committed
+
+
+def _maintain(
+    stream: DataFrame,
+    store_dir: str,
+    checkpoint_dir: str,
+    step,
+    *,
+    merge=None,
+    key: str | None = None,
+    once: tuple[str, ...] = (),
+) -> StreamingQuery:
+    """The one store-maintainer loop behind every run_stream_* store —
+    the reference's fetch → transform → upsert → advance loop
+    (listener.js:157-195) with foreachBatch delivering at-least-once:
+    per micro-batch, repair any crash window of the store's commit,
+    skip a batch the marker already covers under this checkpoint (the
+    (checkpoint identity, batch_id) replay mark commits atomically with
+    the data, so this is the same advance-after-commit argument as the
+    sync engine's cursor, listener.js:140-142), drop in-batch repeats
+    of ``key``, transform, commit.
+
+    Merged-state store (``merge`` given): ``step(batch)`` is the
+    batch's delta and ``merge(stored, delta)`` folds it into the stored
+    table; the result replaces the store through the full-rewrite swap.
+    The first batch commits its delta as is, so a delta must itself be
+    a valid store.  At scale the same delta feeds the partition-pruned
+    MERGE path (sync/merge.py) or a transactional MERGE INTO.
+
+    Append store: ``step(batch, batch_id, cache)`` returns ``{table:
+    rows}``; tables named in ``once`` are write-once (created when
+    missing, never rewritten), every other table appends one delta dir,
+    and one marker replace commits them all.  ``cache(df)`` persists a
+    batch intermediate the step reuses; the loop releases it after the
+    commit, also when the commit raises (e.g. the foreign-checkpoint
+    fail-fast)."""
+    ckpt_id = os.path.realpath(checkpoint_dir)
+    recover = _recover_append_store if merge is None else _recover_store
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        recover(store_dir)
+        meta = _read_commit_meta(store_dir)
+        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
+            return  # replayed batch under the same checkpoint — already committed
+        if key is not None:
+            # at-least-once sources can repeat an immutable record WITHIN
+            # one micro-batch as well as across batches; the store is
+            # keyed, so dedup the batch by key up front (repeats are
+            # identical by the immutable-record contract, making the pick
+            # value-deterministic).  Without this a doubled row doubles
+            # its stored rows permanently — e.g. a PQ vector's ADC sums.
+            batch_df = batch_df.dropDuplicates([key])
+        mark = {"checkpoint": ckpt_id, "batch_id": batch_id}
+        if merge is not None:
+            merged = step(batch_df)
+            if os.path.isdir(store_dir):
+                merged = merge(batch_df.sparkSession.read.parquet(store_dir), merged)
+            _commit_store(merged, store_dir, mark)
+            return
+        held: list[DataFrame] = []
+
+        def cache(df: DataFrame) -> DataFrame:
+            held.append(df.persist())
+            return held[-1]
+
+        try:
+            tables = step(batch_df, batch_id, cache)
+            _commit_append(
+                store_dir,
+                {n: df for n, df in tables.items() if n not in once},
+                batch_id,
+                mark,
+                once_tables={n: tables[n] for n in once},
+            )
+        finally:
+            for df in held:
+                df.unpersist()
+
+    return (
+        stream.writeStream.foreachBatch(_process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _doc_shingles(docs: DataFrame) -> DataFrame:
@@ -628,8 +640,6 @@ def probe_neardup_index(
     decision parity for a batch with no in-batch duplicates), minus
     the in-batch smaller-id rule — membership is against the store
     only."""
-    import os
-
     from chain_sync_spark.operators.llm_pipeline import CLUSTER_MIN_JACCARD
 
     threshold = CLUSTER_MIN_JACCARD if min_jaccard is None else min_jaccard
@@ -685,72 +695,41 @@ def run_stream_neardup_index(
     <3 words are ineligible and get no decision row, mirroring the
     batch operator.  Read the store through read_store_table (it
     filters to committed deltas)."""
-    import os
-
     from chain_sync_spark.operators.llm_pipeline import CLUSTER_MIN_JACCARD
 
     threshold = CLUSTER_MIN_JACCARD if min_jaccard is None else min_jaccard
-    ckpt_id = os.path.realpath(checkpoint_dir)
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_append_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return
+    def _tables(batch_df: DataFrame, batch_id: int, cache) -> dict:
         spark = batch_df.sparkSession
-        # at-least-once sources can repeat an immutable record WITHIN
-        # one micro-batch as well as across batches; the store is
-        # keyed, so dedup the batch by key up front (repeats are
-        # identical by the immutable-record contract, making the pick
-        # value-deterministic).  Without this a doubled row doubles
-        # its stored rows permanently — e.g. a PQ vector's ADC sums.
-        batch_df = batch_df.dropDuplicates(["doc_id"])
-        sh_b = _doc_shingles(batch_df.select("doc_id", "text")).persist()
-        # try/finally so the persist is released even when
-        # _commit_append raises (e.g. the foreign-checkpoint
-        # fail-fast); the query terminates then, but the persist
-        # discipline stays consistent
-        try:
-            bands_b = _band_relation(sh_b)
-            idx_bands = read_store_table(
-                spark, store_dir, "bands", NEARDUP_STORE_TABLES["bands"]
+        sh_b = cache(_doc_shingles(batch_df.select("doc_id", "text")))
+        bands_b = _band_relation(sh_b)
+        idx_bands = read_store_table(
+            spark, store_dir, "bands", NEARDUP_STORE_TABLES["bands"]
+        )
+        idx_sh = read_store_table(
+            spark, store_dir, "shingles", NEARDUP_STORE_TABLES["shingles"]
+        )
+        dups = _probe_collisions(
+            idx_bands, idx_sh, bands_b, sh_b, threshold, in_batch=True
+        )
+        dec_b = (
+            sh_b.select("doc_id")
+            .join(dups, F.col("doc_id") == F.col("doc_b"), "left")
+            .select(
+                "doc_id",
+                F.col("dup_of").isNotNull().alias("is_dup"),
+                "dup_of",
+                F.lit(batch_id).cast("long").alias("batch_id"),
             )
-            idx_sh = read_store_table(
-                spark, store_dir, "shingles", NEARDUP_STORE_TABLES["shingles"]
-            )
-            dups = _probe_collisions(
-                idx_bands, idx_sh, bands_b, sh_b, threshold, in_batch=True
-            )
-            dec_b = (
-                sh_b.select("doc_id")
-                .join(dups, F.col("doc_id") == F.col("doc_b"), "left")
-                .select(
-                    "doc_id",
-                    F.col("dup_of").isNotNull().alias("is_dup"),
-                    "dup_of",
-                    F.lit(batch_id).cast("long").alias("batch_id"),
-                )
-            )
-            survivors = dec_b.filter(~F.col("is_dup")).select("doc_id")
-            _commit_append(
-                store_dir,
-                {
-                    "bands": bands_b.join(survivors, "doc_id", "left_semi"),
-                    "shingles": sh_b.join(survivors, "doc_id", "left_semi"),
-                    "decisions": dec_b,
-                },
-                batch_id,
-                {"checkpoint": ckpt_id, "batch_id": batch_id},
-            )
-        finally:
-            sh_b.unpersist()
+        )
+        survivors = dec_b.filter(~F.col("is_dup")).select("doc_id")
+        return {
+            "bands": bands_b.join(survivors, "doc_id", "left_semi"),
+            "shingles": sh_b.join(survivors, "doc_id", "left_semi"),
+            "decisions": dec_b,
+        }
 
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _maintain(stream_docs, store_dir, checkpoint_dir, _tables, key="doc_id")
 
 
 def probe_shingle_index(
@@ -805,58 +784,28 @@ def run_stream_shingle_index(
     row per distinct shingle ever seen); commit IO is O(batch).  The
     cut/rebuild math is the shared pipeline_extras machinery, so the
     batch certifier's driver green covers the serving arithmetic."""
-    import os
-
     from chain_sync_spark.operators.pipeline_extras import (
         _rebuild_after_cut,
         _shingle_pos,
     )
 
-    ckpt_id = os.path.realpath(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_append_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return
-        spark = batch_df.sparkSession
-        # at-least-once sources can repeat an immutable record WITHIN
-        # one micro-batch as well as across batches; the store is
-        # keyed, so dedup the batch by key up front (repeats are
-        # identical by the immutable-record contract, making the pick
-        # value-deterministic).  Without this a doubled row doubles
-        # its stored rows permanently — e.g. a PQ vector's ADC sums.
-        batch_df = batch_df.dropDuplicates(["doc_id"])
+    def _tables(batch_df: DataFrame, batch_id: int, cache) -> dict:
         d = batch_df.select("doc_id", "text")
-        pos = _shingle_pos(d).persist()
-        try:
-            hist_h = read_store_table(
-                spark, store_dir, "shingles", SHINGLE_STORE_TABLES["shingles"]
-            )
-            cut_hits = (
-                pos.join(hist_h, "h", "left_semi").select("doc_id", "pos")
-            )
-            dec = _rebuild_after_cut(d, cut_hits).withColumn(
-                "batch_id", F.lit(batch_id).cast("long")
-            )
-            new_h = (
-                pos.select("h").distinct().join(hist_h, "h", "left_anti")
-            )
-            _commit_append(
-                store_dir,
-                {"shingles": new_h, "decisions": dec},
-                batch_id,
-                {"checkpoint": ckpt_id, "batch_id": batch_id},
-            )
-        finally:
-            pos.unpersist()
+        pos = cache(_shingle_pos(d))
+        hist_h = read_store_table(
+            batch_df.sparkSession,
+            store_dir,
+            "shingles",
+            SHINGLE_STORE_TABLES["shingles"],
+        )
+        cut_hits = pos.join(hist_h, "h", "left_semi").select("doc_id", "pos")
+        dec = _rebuild_after_cut(d, cut_hits).withColumn(
+            "batch_id", F.lit(batch_id).cast("long")
+        )
+        new_h = pos.select("h").distinct().join(hist_h, "h", "left_anti")
+        return {"shingles": new_h, "decisions": dec}
 
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _maintain(stream_docs, store_dir, checkpoint_dir, _tables, key="doc_id")
 
 
 def _winnow_capped_index(spark, store_dir: str) -> DataFrame:
@@ -918,60 +867,29 @@ def run_stream_winnow_index(
     any store rewrite.  In-batch pairs are intentionally not recorded
     (the batch certifier covers the full-corpus form); commit IO is
     O(batch); the stored index is ~1/WN_W of the gram stream."""
-    import os
-
     from chain_sync_spark.operators.pipeline_extras import (
         WN_MIN_SHARED,
         winnow_fingerprints,
     )
 
-    ckpt_id = os.path.realpath(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_append_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return
-        spark = batch_df.sparkSession
-        # at-least-once sources can repeat an immutable record WITHIN
-        # one micro-batch as well as across batches; the store is
-        # keyed, so dedup the batch by key up front (repeats are
-        # identical by the immutable-record contract, making the pick
-        # value-deterministic).  Without this a doubled row doubles
-        # its stored rows permanently — e.g. a PQ vector's ADC sums.
-        batch_df = batch_df.dropDuplicates(["doc_id"])
-        fp_b = winnow_fingerprints(
-            batch_df.select("doc_id", "text")
-        ).persist()
-        try:
-            idx = _winnow_capped_index(spark, store_dir)
-            pairs = (
-                idx.alias("a")
-                .join(fp_b.alias("b"), F.col("a.h") == F.col("b.h"))
-                .groupBy(
-                    F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                )
-                .agg(F.count(F.lit(1)).alias("shared_fps"))
-                .filter(F.col("shared_fps") >= WN_MIN_SHARED)
-                .withColumn("batch_id", F.lit(batch_id).cast("long"))
+    def _tables(batch_df: DataFrame, batch_id: int, cache) -> dict:
+        fp_b = cache(winnow_fingerprints(batch_df.select("doc_id", "text")))
+        idx = _winnow_capped_index(batch_df.sparkSession, store_dir)
+        pairs = (
+            idx.alias("a")
+            .join(fp_b.alias("b"), F.col("a.h") == F.col("b.h"))
+            .groupBy(
+                F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
             )
-            hdf_delta = fp_b.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-            _commit_append(
-                store_dir,
-                {"fps": fp_b, "hdf": hdf_delta, "pairs": pairs},
-                batch_id,
-                {"checkpoint": ckpt_id, "batch_id": batch_id},
-            )
-        finally:
-            fp_b.unpersist()
+            .agg(F.count(F.lit(1)).alias("shared_fps"))
+            .filter(F.col("shared_fps") >= WN_MIN_SHARED)
+            .withColumn("batch_id", F.lit(batch_id).cast("long"))
+        )
+        hdf_delta = fp_b.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
+        return {"fps": fp_b, "hdf": hdf_delta, "pairs": pairs}
 
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _maintain(stream_docs, store_dir, checkpoint_dir, _tables, key="doc_id")
 
 
 def run_stream_pq_index(
@@ -1009,32 +927,15 @@ def run_stream_pq_index(
     O(batch) IO regardless of index size, the lakehouse-APPEND cost.
     ADC queries (embedding_pq_adc_topk's shape) read codebook + the
     committed codes deltas via read_store_table."""
-    import os
-
     from chain_sync_spark.functions import sketches as sk
     from chain_sync_spark.operators import llm_pipeline as lp
 
-    ckpt_id = os.path.realpath(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_append_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return
+    def _tables(batch_df: DataFrame, batch_id: int, _cache) -> dict:
         spark = batch_df.sparkSession
-        # at-least-once sources can repeat an immutable record WITHIN
-        # one micro-batch as well as across batches; the store is
-        # keyed, so dedup the batch by key up front (repeats are
-        # identical by the immutable-record contract, making the pick
-        # value-deterministic).  Without this a doubled row doubles
-        # its stored rows permanently — e.g. a PQ vector's ADC sums.
-        batch_df = batch_df.dropDuplicates(["vec_id"])
         emb = batch_df.select(
             "vec_id", sk.vec_double(F.col("embedding")).alias("e")
         )
-        have_store = os.path.isdir(os.path.join(store_dir, "codebook"))
-        once: dict[str, DataFrame] = {}
-        if have_store:
+        if os.path.isdir(os.path.join(store_dir, "codebook")):
             cb = spark.read.parquet(os.path.join(store_dir, "codebook"))
         else:
             cb = lp._pq_codebook(emb)
@@ -1050,7 +951,6 @@ def run_stream_pq_index(
                     f"(vec_id < {lp.PQ_K}) — reorder the stream or defer "
                     "training"
                 )
-            once["codebook"] = cb
         old_codes = read_store_table(
             spark, store_dir, "codes", PQ_STORE_TABLES["codes"]
         )
@@ -1063,19 +963,11 @@ def run_stream_pq_index(
         fresh = assigned.join(
             old_codes.select("vec_id").distinct(), "vec_id", "left_anti"
         )
-        _commit_append(
-            store_dir,
-            {"codes": fresh},
-            batch_id,
-            {"checkpoint": ckpt_id, "batch_id": batch_id},
-            once_tables=once,
-        )
+        return {"codes": fresh, "codebook": cb}
 
-    return (
-        stream_emb.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream_emb, store_dir, checkpoint_dir, _tables,
+        key="vec_id", once=("codebook",),
     )
 
 
@@ -1100,8 +992,6 @@ def search_pq_index(
     ``query_emb`` is (vec_id, embedding array<float>); queries are
     NOT excluded from results unless their vec_id matches an indexed
     id (self-match suppressed, mirroring the batch operator)."""
-    import os
-
     from chain_sync_spark.functions import sketches as sk
     from chain_sync_spark.operators import llm_pipeline as lp
 
@@ -1133,40 +1023,17 @@ def run_stream_rollup(
     per-key totals — O(batch) per trigger, the streaming twin of the
     batch incremental.merge_rollup round.
 
-    Idempotence: foreachBatch delivers at-least-once; a (checkpoint
-    identity, batch-id) high-water mark committed atomically WITH the
-    table (see the commit-protocol note above) skips replayed batches
-    — replay-safe across restarts and crash-recoverable at every step
-    (same advance-after-commit argument as the sync engine's cursor,
-    listener.js:140-142). The store is bound to its checkpoint: reset
-    the two together. The local store swap is staging-dir + recoverable
-    double rename; at scale the same delta feeds the partition-pruned
-    MERGE path (sync/merge.py) or a transactional MERGE INTO.
+    Sums are not idempotent, so the replay mark _maintain commits
+    with the table is what keeps a redelivered batch from
+    double-counting.  The store is bound to its checkpoint: reset the
+    two together.
     """
-    import os
-
     from chain_sync_spark.operators.incremental import merge_rollup, rollup_events
 
-    ckpt_id = os.path.realpath(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return  # replayed batch under the same checkpoint — already merged
-        spark = batch_df.sparkSession
-        delta = rollup_events(batch_df, keys)
-        if os.path.isdir(store_dir):
-            merged = merge_rollup(spark.read.parquet(store_dir), delta, keys)
-        else:
-            merged = delta
-        _commit_store(merged, store_dir, {"checkpoint": ckpt_id, "batch_id": batch_id})
-
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream_df, store_dir, checkpoint_dir,
+        lambda batch: rollup_events(batch, keys),
+        merge=lambda stored, delta: merge_rollup(stored, delta, keys),
     )
 
 
@@ -1183,36 +1050,14 @@ def run_stream_cms(
     per-term counts would need a vocabulary-sized state store. The
     batch certifier (corpus_ops.heavy_hitters_cms) proves the
     estimate's >=-exact bound against true counts on static data;
-    this maintainer keeps the same sketch fresh per trigger.
-
-    Same idempotence/commit contract as run_stream_rollup: the
-    (checkpoint identity, batch-id) high-water mark commits atomically
-    with the table, replays are no-ops, the store is bound to its
-    checkpoint."""
-    import os
-
+    this maintainer keeps the same sketch fresh per trigger.  Cells are
+    sums, so the replay mark is a correctness guard here."""
     from chain_sync_spark.operators.incremental import cms_stats, merge_cms
 
-    ckpt_id = os.path.realpath(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return  # replayed batch under the same checkpoint — already merged
-        spark = batch_df.sparkSession
-        delta = cms_stats(batch_df, term_col)
-        if os.path.isdir(store_dir):
-            merged = merge_cms(spark.read.parquet(store_dir), delta)
-        else:
-            merged = delta
-        _commit_store(merged, store_dir, {"checkpoint": ckpt_id, "batch_id": batch_id})
-
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream_df, store_dir, checkpoint_dir,
+        lambda batch: cms_stats(batch, term_col),
+        merge=merge_cms,
     )
 
 
@@ -1269,35 +1114,13 @@ def run_stream_bloom(
     maintainer keeps the same bit set fresh per trigger.  The union is
     idempotent as well as order-independent, so even a replayed batch
     merging twice could not corrupt the sketch — the batch-id
-    high-water mark still skips it for cost, not correctness.
-
-    Same idempotence/commit contract as run_stream_rollup: the
-    (checkpoint identity, batch-id) high-water mark commits atomically
-    with the table, the store is bound to its checkpoint."""
-    import os
-
+    high-water mark still skips it for cost, not correctness."""
     from chain_sync_spark.operators.incremental import bloom_bits, merge_bloom
 
-    ckpt_id = os.path.realpath(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return  # replayed batch under the same checkpoint — already merged
-        spark = batch_df.sparkSession
-        delta = bloom_bits(batch_df, key_col)
-        if os.path.isdir(store_dir):
-            merged = merge_bloom(spark.read.parquet(store_dir), delta)
-        else:
-            merged = delta
-        _commit_store(merged, store_dir, {"checkpoint": ckpt_id, "batch_id": batch_id})
-
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream_df, store_dir, checkpoint_dir,
+        lambda batch: bloom_bits(batch, key_col),
+        merge=merge_bloom,
     )
 
 
@@ -1336,43 +1159,24 @@ def run_stream_kmv(
     skips it for cost, not correctness.  State is <= K_KMV rows per
     source however long the stream history; distinct-count serving at
     any point is probe_kmv, which shares corpus_ops.kmv_estimate with
-    the audit.
-
-    Same commit contract as run_stream_rollup: the (checkpoint
-    identity, batch-id) high-water mark commits atomically with the
-    table."""
-    import os
-
+    the audit.  The delta is the batch's own bottom-k, because the
+    first batch commits its delta as the store; merging it yields the
+    same store as merging the batch's full hash set, since bottom-k of
+    a union equals bottom-k of the union of bottom-ks."""
     from chain_sync_spark.functions import sketches as sk
     from chain_sync_spark.operators.corpus_ops import kmv_bottomk, kmv_hashes
 
-    ckpt_id = os.path.realpath(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return  # replayed batch under the same checkpoint — already merged
-        spark = batch_df.sparkSession
-        d = batch_df.select(
+    def _delta(batch: DataFrame) -> DataFrame:
+        d = batch.select(
             "source", sk.words(sk.normalize_text(F.col("text"))).alias("w")
         )
-        delta = kmv_hashes(d)
-        if os.path.isdir(store_dir):
-            merged = spark.read.parquet(store_dir).unionByName(delta).distinct()
-        else:
-            merged = delta
-        _commit_store(
-            kmv_bottomk(merged),
-            store_dir,
-            {"checkpoint": ckpt_id, "batch_id": batch_id},
-        )
+        return kmv_bottomk(kmv_hashes(d))
 
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream_docs, store_dir, checkpoint_dir, _delta,
+        merge=lambda stored, delta: kmv_bottomk(
+            stored.unionByName(delta).distinct()
+        ),
     )
 
 
@@ -1385,42 +1189,25 @@ def run_stream_lang_counts(
     micro-batch's (lang, n_docs, n_tokens) partial
     (pipeline_extras.lang_token_counts) SUM-merges into the stored
     totals — the count grain the temperature-sampling weights read,
-    kept fresh per trigger with language-cardinality state.  Same
-    commit contract as run_stream_rollup: the (checkpoint identity,
-    batch-id) high-water mark commits atomically with the table, so
-    replayed batches never double-count."""
-    import os
-
+    kept fresh per trigger with language-cardinality state.  Sums are
+    not idempotent, so the replay mark is the correctness guard against
+    a redelivered batch, and the doc_id dedup against a doc repeated
+    inside one batch."""
     from chain_sync_spark.operators.pipeline_extras import lang_token_counts
 
-    ckpt_id = os.path.realpath(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return  # replayed batch under the same checkpoint — already merged
-        spark = batch_df.sparkSession
-        delta = lang_token_counts(batch_df)
-        if os.path.isdir(store_dir):
-            merged = (
-                spark.read.parquet(store_dir)
-                .unionByName(delta)
-                .groupBy("lang")
-                .agg(
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("n_tokens").cast("long").alias("n_tokens"),
-                )
+    def _merge(stored: DataFrame, delta: DataFrame) -> DataFrame:
+        return (
+            stored.unionByName(delta)
+            .groupBy("lang")
+            .agg(
+                F.sum("n_docs").cast("long").alias("n_docs"),
+                F.sum("n_tokens").cast("long").alias("n_tokens"),
             )
-        else:
-            merged = delta
-        _commit_store(merged, store_dir, {"checkpoint": ckpt_id, "batch_id": batch_id})
+        )
 
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream_docs, store_dir, checkpoint_dir, lang_token_counts,
+        merge=_merge, key="doc_id",
     )
 
 
@@ -1493,29 +1280,12 @@ def run_stream_lm(
     DISTINCT bigrams (Zipf-bounded vocabulary², not corpus size);
     compact_store folds the deltas when they accumulate — at cluster
     scale both the store and the probe join are hash-partitioned on
-    (w1, w2), nothing broadcasts."""
-    import os
-
-    ckpt_id = os.path.realpath(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_append_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return  # replayed batch under the same checkpoint — already merged
-        delta = _bigram_counts(batch_df)
-        _commit_append(
-            store_dir,
-            {"bigrams": delta},
-            batch_id,
-            {"checkpoint": ckpt_id, "batch_id": batch_id},
-        )
-
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    (w1, w2), nothing broadcasts.  Counts are sums, so a doc repeated
+    inside one batch is dropped by doc_id before counting."""
+    return _maintain(
+        stream_docs, store_dir, checkpoint_dir,
+        lambda batch, _batch_id, _cache: {"bigrams": _bigram_counts(batch)},
+        key="doc_id",
     )
 
 
@@ -1579,38 +1349,17 @@ def run_stream_profile(
     row/null counts, lexicographic min/max per column) merges into the
     stored profile, O(columns) per trigger — the observability monitor
     that watches an ingestion stream's shape drift without ever
-    rescanning history.
-
-    Same idempotence/commit contract as run_stream_rollup: the
-    (checkpoint identity, batch-id) high-water mark commits atomically
-    with the table, replays are no-ops, the store is bound to its
-    checkpoint. Exact distinct counts are holistic and intentionally
-    absent (profile_stats docstring); schedule the batch profiler
-    (corpus_ops.profile_column_stats) for those on full recomputes."""
-    import os
-
+    rescanning history.  Counts are sums, so the replay mark is a
+    correctness guard here.  Exact distinct counts are holistic and
+    intentionally absent (profile_stats docstring); schedule the batch
+    profiler (corpus_ops.profile_column_stats) for those on full
+    recomputes."""
     from chain_sync_spark.operators.incremental import merge_profile, profile_stats
 
-    ckpt_id = os.path.realpath(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return  # replayed batch under the same checkpoint — already merged
-        spark = batch_df.sparkSession
-        delta = profile_stats(batch_df, cols)
-        if os.path.isdir(store_dir):
-            merged = merge_profile(spark.read.parquet(store_dir), delta)
-        else:
-            merged = delta
-        _commit_store(merged, store_dir, {"checkpoint": ckpt_id, "batch_id": batch_id})
-
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream_df, store_dir, checkpoint_dir,
+        lambda batch: profile_stats(batch, cols),
+        merge=merge_profile,
     )
 
 
@@ -1632,38 +1381,17 @@ def run_stream_histogram(
     family: run_stream_profile covers algebraic stats, run_stream_cms
     heavy hitters, this the distribution shape.
 
-    Same idempotence/commit contract as run_stream_rollup: the
-    (checkpoint identity, batch-id) high-water mark commits atomically
-    with the table, replays are no-ops, the store is bound to its
-    checkpoint (merged-state table → full-rewrite swap is the correct
-    commit; the table is constant-size).  Multi-column monitoring runs
-    one maintainer per column (one store each) — the stores are
+    Merged-state table → full-rewrite swap is the correct commit; the
+    table is constant-size.  Multi-column monitoring runs one
+    maintainer per column (one store each) — the stores are
     constant-size, so N columns cost N tiny tables, and quantile
     serving stays per-column-independent."""
-    import os
-
     from chain_sync_spark.operators.incremental import hist_stats, merge_hist
 
-    ckpt_id = os.path.realpath(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return
-        spark = batch_df.sparkSession
-        delta = hist_stats(batch_df, value_col)
-        if os.path.isdir(store_dir):
-            merged = merge_hist(spark.read.parquet(store_dir), delta)
-        else:
-            merged = delta
-        _commit_store(merged, store_dir, {"checkpoint": ckpt_id, "batch_id": batch_id})
-
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream_df, store_dir, checkpoint_dir,
+        lambda batch: hist_stats(batch, value_col),
+        merge=merge_hist,
     )
 
 
@@ -1710,26 +1438,10 @@ def run_stream_cluster_assign(
     argmin plus the anti-join id probe against stored assignments;
     the commit writes ONLY the fresh rows — O(batch) IO, like the
     neardup/PQ stores. compact_store bounds delta growth."""
-    import os
-
-    from chain_sync_spark.functions import sketches as sk  # noqa: F401
     from chain_sync_spark.operators import llm_pipeline as lp
 
-    ckpt_id = os.path.realpath(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_append_store(store_dir)
-        meta = _read_commit_meta(store_dir)
-        if meta.get("checkpoint") == ckpt_id and meta.get("batch_id", -1) >= batch_id:
-            return
+    def _tables(batch_df: DataFrame, batch_id: int, _cache) -> dict:
         spark = batch_df.sparkSession
-        # at-least-once sources can repeat an immutable record WITHIN
-        # one micro-batch as well as across batches; the store is
-        # keyed, so dedup the batch by key up front (repeats are
-        # identical by the immutable-record contract, making the pick
-        # value-deterministic).  Without this a doubled row doubles
-        # its stored rows permanently — e.g. a PQ vector's ADC sums.
-        batch_df = batch_df.dropDuplicates(["vec_id"])
         vecs = batch_df.select(
             "vec_id",
             F.transform(
@@ -1737,9 +1449,7 @@ def run_stream_cluster_assign(
                 lambda x: F.floor(x.cast("double") * lp._KM_SCALE + F.lit(0.5)),
             ).alias("ei"),
         )
-        have_store = os.path.isdir(os.path.join(store_dir, "centroids"))
-        once: dict[str, DataFrame] = {}
-        if have_store:
+        if os.path.isdir(os.path.join(store_dir, "centroids")):
             cents = spark.read.parquet(os.path.join(store_dir, "centroids"))
         else:
             n_seeds = vecs.filter(F.col("vec_id") < lp.KMEANS_K).count()
@@ -1750,7 +1460,6 @@ def run_stream_cluster_assign(
                     "micro-batch — reorder the stream or defer training"
                 )
             cents = lp._km_train(vecs)
-            once["centroids"] = cents
         assigned = lp._km_assign(vecs, cents).select(
             "vec_id",
             F.col("cid").cast("int").alias("cluster_id"),
@@ -1762,17 +1471,9 @@ def run_stream_cluster_assign(
         fresh = assigned.join(
             old.select("vec_id").distinct(), "vec_id", "left_anti"
         )
-        _commit_append(
-            store_dir,
-            {"assignments": fresh},
-            batch_id,
-            {"checkpoint": ckpt_id, "batch_id": batch_id},
-            once_tables=once,
-        )
+        return {"assignments": fresh, "centroids": cents}
 
-    return (
-        stream_emb.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain(
+        stream_emb, store_dir, checkpoint_dir, _tables,
+        key="vec_id", once=("centroids",),
     )

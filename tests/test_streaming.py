@@ -2094,3 +2094,223 @@ def test_stream_shingle_index_in_batch_duplicate_doc(spark, tmp_path):
         spark, store, "decisions", SHINGLE_STORE_TABLES["decisions"]
     ).collect()
     assert len(dec) == 1 and dec[0].doc_id == 1
+
+
+def _lm_store_counts(spark, store):
+    from chain_sync_spark.streaming.stream_sync import _LM_STORE_SCHEMA, read_store_table
+
+    rows = (
+        read_store_table(spark, store, "bigrams", _LM_STORE_SCHEMA)
+        .groupBy("w1", "w2")
+        .agg(F.sum("cnt").alias("cnt"))
+        .collect()
+    )
+    return {(r.w1, r.w2): r.cnt for r in rows}
+
+
+def _lm_batch_counts(docs):
+    from chain_sync_spark.streaming.stream_sync import _bigram_counts
+
+    return {(r.w1, r.w2): r.cnt for r in _bigram_counts(docs).collect()}
+
+
+def _lang_store_counts(spark, store):
+    return {
+        r.lang: (r.n_docs, r.n_tokens) for r in spark.read.parquet(store).collect()
+    }
+
+
+def _lang_batch_counts(docs):
+    from chain_sync_spark.operators.pipeline_extras import lang_token_counts
+
+    return {r.lang: (r.n_docs, r.n_tokens) for r in lang_token_counts(docs).collect()}
+
+
+@pytest.mark.parametrize(
+    "runner, stored, expected",
+    [
+        ("run_stream_lm", _lm_store_counts, _lm_batch_counts),
+        ("run_stream_lang_counts", _lang_store_counts, _lang_batch_counts),
+    ],
+    ids=["lm", "lang_counts"],
+)
+def test_stream_sum_store_in_batch_duplicate_doc(
+    spark, tmp_path, runner, stored, expected
+):
+    """In-batch redelivery for the additive doc stores: a doc repeated
+    inside one micro-batch must count once — a doubled doc doubles
+    its bigram cnt (LM) or its language's n_docs/n_tokens, and no
+    replay guard undoes that.  The store must equal the one-pass
+    counts over the distinct docs."""
+    import json as _json
+    import os
+
+    from chain_sync_spark.streaming import stream_sync
+
+    text = "alpha beta gamma delta alpha beta epsilon zeta"
+    rows = [(1, "en", text), (1, "en", text), (2, "de", "eins zwei drei vier")]
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    with open(os.path.join(src, "b0.json"), "w") as fh:
+        for doc_id, lang, body in rows:
+            fh.write(_json.dumps({"doc_id": doc_id, "lang": lang, "text": body}) + "\n")
+    schema = "doc_id long, lang string, text string"
+    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+    stream = spark.readStream.schema(schema).json(src)
+    getattr(stream_sync, runner)(stream, store, ckpt).awaitTermination(120)
+    distinct = spark.createDataFrame(sorted(set(rows)), schema)
+    assert stored(spark, store) == expected(distinct)
+
+
+# --- one replay contract for every store maintainer -----------------------
+
+_REPLAY_DOC_SCHEMA = (
+    "doc_id long, source string, lang string, text string, value double, ts timestamp"
+)
+_REPLAY_VEC_SCHEMA = "vec_id long, embedding array<float>"
+
+
+def _replay_doc_batches():
+    base = (
+        "the quick brown fox jumps over the lazy dog while the rain keeps "
+        "falling on the quiet grey town tonight and every night after"
+    )
+    other = (
+        "a completely different sentence about streaming stores and their "
+        "commit markers which never repeats any earlier phrase at all"
+    )
+    docs = [
+        (1, "web", "en", base),
+        (2, "web", "en", base + " again"),
+        (3, "books", "de", other),
+        (4, "books", "en", "short text here"),
+        (5, "web", "fr", other + " " + base),
+        (6, "news", "en", base.replace("fox", "cat")),
+    ]
+
+    def _row(i, d):
+        doc_id, source, lang, text = d
+        return {
+            "doc_id": doc_id, "source": source, "lang": lang, "text": text,
+            "value": float(doc_id) * 3.5, "ts": f"2024-03-05T12:00:0{i}Z",
+        }
+
+    rows = [_row(i, d) for i, d in enumerate(docs)]
+    return [rows[:4], rows[4:]]
+
+
+def _replay_vec_batches():
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    rows = [
+        {"vec_id": i, "embedding": [float(x) for x in rng.normal(size=64)]}
+        for i in range(22)
+    ]
+    return [rows[:18], rows[18:]]  # the first batch holds every seed vector
+
+
+def _replay_cases():
+    """name → (run(stream, store, ckpt), source kind, append tables
+    {name: schema} or None for a merged-state store, write-once tables)."""
+    from chain_sync_spark.streaming import stream_sync as ss
+
+    return {
+        "rollup": (
+            lambda s, st, ck: ss.run_stream_rollup(s, st, ["source", "lang"], ck),
+            "doc", None, (),
+        ),
+        "cms": (lambda s, st, ck: ss.run_stream_cms(s, st, "lang", ck), "doc", None, ()),
+        "bloom": (
+            lambda s, st, ck: ss.run_stream_bloom(s, st, "source", ck), "doc", None, (),
+        ),
+        "kmv": (ss.run_stream_kmv, "doc", None, ()),
+        "lang_counts": (ss.run_stream_lang_counts, "doc", None, ()),
+        "profile": (
+            lambda s, st, ck: ss.run_stream_profile(s, st, ["source", "text"], ck),
+            "doc", None, (),
+        ),
+        "histogram": (
+            lambda s, st, ck: ss.run_stream_histogram(s, st, "value", ck),
+            "doc", None, (),
+        ),
+        "neardup": (ss.run_stream_neardup_index, "doc", ss.NEARDUP_STORE_TABLES, ()),
+        "shingle": (ss.run_stream_shingle_index, "doc", ss.SHINGLE_STORE_TABLES, ()),
+        "winnow": (ss.run_stream_winnow_index, "doc", ss.WINNOW_STORE_TABLES, ()),
+        "lm": (ss.run_stream_lm, "doc", {"bigrams": ss._LM_STORE_SCHEMA}, ()),
+        "pq": (ss.run_stream_pq_index, "vec", ss.PQ_STORE_TABLES, ("codebook",)),
+        "cluster_assign": (
+            ss.run_stream_cluster_assign, "vec", ss.CLUSTER_STORE_TABLES, ("centroids",),
+        ),
+    }
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize(
+    "name",
+    [
+        "rollup", "cms", "bloom", "kmv", "lang_counts", "profile", "histogram",
+        "neardup", "shingle", "winnow", "lm", "pq", "cluster_assign",
+    ],
+)
+def test_stream_maintainer_replay_leaves_store_identical(spark, tmp_path, name):
+    """Every store maintainer under the same replay contract: run it
+    over two micro-batches, drop the checkpoint's commit record of the
+    last batch (a crash after the store committed but before Spark
+    logged the batch), and run it again on the same source and
+    checkpoint.  Spark redelivers that batch under the same batch id;
+    the (checkpoint, batch_id) mark must skip it, leaving every
+    committed table row-identical and the marker unchanged."""
+    import json as _json
+    import os
+
+    from chain_sync_spark.streaming.stream_sync import (
+        _read_commit_meta,
+        read_store_table,
+    )
+
+    run, kind, tables, once = _replay_cases()[name]
+    batches = _replay_doc_batches() if kind == "doc" else _replay_vec_batches()
+    schema = _REPLAY_DOC_SCHEMA if kind == "doc" else _REPLAY_VEC_SCHEMA
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for b, rows in enumerate(batches):
+        path = os.path.join(src, f"b{b}.json")
+        with open(path, "w") as fh:
+            for r in rows:
+                fh.write(_json.dumps(r) + "\n")
+        os.utime(path, (1_700_000_000 + b, 1_700_000_000 + b))
+    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+
+    def _run():
+        stream = (
+            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
+        )
+        run(stream, store, ckpt).awaitTermination(180)
+
+    def _snapshot():
+        def _rows(df):
+            return sorted(map(str, df.select(sorted(df.columns)).collect()))
+
+        if tables is None:
+            snap = {"store": _rows(spark.read.parquet(store))}
+        else:
+            snap = {
+                t: _rows(read_store_table(spark, store, t, sch))
+                for t, sch in tables.items()
+            }
+            for t in once:
+                snap[t] = _rows(spark.read.parquet(os.path.join(store, t)))
+        return snap, _read_commit_meta(store)
+
+    _run()
+    before, meta = _snapshot()
+    assert meta["batch_id"] == 1
+    assert any(before.values())
+    for f in ("1", ".1.crc"):  # batch 1's commit record and its checksum
+        path = os.path.join(ckpt, "commits", f)
+        if os.path.exists(path):
+            os.remove(path)
+    _run()
+    assert _snapshot() == (before, meta)
+    assert os.path.exists(os.path.join(ckpt, "commits", "1"))  # batch 1 re-ran

@@ -598,6 +598,38 @@ def test_cursor_format_cross_compat(spark, tmp_path):
     assert read_cursor(spark, f"{tmp_path}/absent", default=3) == 3
 
 
+def test_cursor_write_crash_before_new_cursor_lands(spark, tmp_path, monkeypatch):
+    """A crash inside write_cursor after the live cursor was moved or
+    removed, but before the new one is renamed into place, must not
+    lose the cursor: read_cursor returns the previous value (not the
+    genesis default, which would replay from block 0) and the next
+    write_cursor succeeds."""
+    import os
+
+    from chain_sync_spark.sources.checkpoint import read_cursor, write_cursor
+
+    path = f"{tmp_path}/checkpoint"
+    write_cursor(spark, path, 7)
+
+    def _crash_on_install(real):
+        def _rename(src, dst, *a, **kw):
+            if os.fspath(dst) == path:
+                raise OSError("injected crash before the new cursor lands")
+            return real(src, dst, *a, **kw)
+
+        return _rename
+
+    monkeypatch.setattr(os, "rename", _crash_on_install(os.rename))
+    monkeypatch.setattr(os, "replace", _crash_on_install(os.replace))
+    with pytest.raises(OSError, match="injected crash"):
+        write_cursor(spark, path, 8)
+    monkeypatch.undo()
+
+    assert read_cursor(spark, path, default=0) == 7
+    write_cursor(spark, path, 9)
+    assert read_cursor(spark, path, default=0) == 9
+
+
 def test_first_write_empty_updates_materializes_no_table(spark, tmp_path):
     """r13: the first-write path stages once instead of probing
     isEmpty() first — but a zero-row update batch must STILL leave no
