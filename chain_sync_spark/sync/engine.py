@@ -17,6 +17,16 @@ Scale design (100 TB):
 * **accounts bucketing** — accounts are partitioned by a stable hash
   bucket of the name, so the per-round accounts MERGE rewrites only
   the buckets the batch touches instead of the whole table.
+* **store reads start no Spark job** — the store is a POSIX tree the
+  driver already renames and walks (``recover_table`` runs an
+  ``os.walk`` of the same directories before every read), so the
+  engine lists it on the driver: it raises Spark's
+  parallel-partition-discovery threshold to the widest directory
+  level it writes (the bucket count), where the default would start
+  a distributed listing job for the 64 ``bucket=`` dirs. Every read
+  of posts, posts_index and accounts passes its declared schema
+  (``POSTS_SCHEMA`` / ``INDEX_SCHEMA`` / ``ACCOUNTS_SCHEMA``), so no
+  footer is read to infer one.
 * Each merge consumes its updates plan once (merge.py caches across
   the touched-partition scan and the final write), and empty op
   sub-streams short-circuit before any join.
@@ -40,6 +50,7 @@ from chain_sync_spark.sources.checkpoint import read_cursor, write_cursor
 from chain_sync_spark.sync.classify import VOTE_SCHEMA, classify
 from chain_sync_spark.functions.hashing import surrogate_id
 from chain_sync_spark.sync.handlers import (
+    PROFILE_SCHEMA,
     account_activity_upserts,
     comments_to_post_upserts,
     replies_to_tag_updates,
@@ -71,12 +82,19 @@ POSTS_SCHEMA = (
 
 INDEX_SCHEMA = "post_id long, year int, month int, bucket int"
 
+ACCOUNTS_SCHEMA = f"name string, last_active timestamp, {PROFILE_SCHEMA}, bucket int"
+
 # Bucket counts are layout constants: sized so one bucket of the
 # target table fits an executor comfortably at the design scale
 # (1e9 accounts / 64 ≈ 16M rows/bucket; the posts index is 3 columns,
 # 1e9 posts / 64 ≈ 16M rows/bucket ≈ a few hundred MB).
 N_INDEX_BUCKETS = 64
 N_ACCOUNT_BUCKETS = 64
+
+# Above this many subdirectories in one directory level, Spark lists a
+# table with a distributed job; the engine keeps its listings on the
+# driver by raising it to the widest level it writes.
+_LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 def _bucket(col: str, n: int) -> F.Column:
@@ -107,6 +125,11 @@ class SyncEngine:
     heartbeat: Callable[[dict], None] | None = None
     _migrated: bool = field(default=False, init=False, repr=False)
 
+    def __post_init__(self) -> None:
+        widest = max(N_INDEX_BUCKETS, N_ACCOUNT_BUCKETS)
+        if int(self.spark.conf.get(_LISTING_THRESHOLD_CONF)) < widest:
+            self.spark.conf.set(_LISTING_THRESHOLD_CONF, str(widest))
+
     @property
     def posts_dir(self) -> str:
         return os.path.join(self.store_dir, "posts")
@@ -126,7 +149,7 @@ class SyncEngine:
     def existing_posts(self) -> DataFrame:
         recover_table(self.posts_dir, partition_depth=2)
         if os.path.exists(self.posts_dir):
-            return self.spark.read.parquet(self.posts_dir)
+            return self.spark.read.schema(POSTS_SCHEMA).parquet(self.posts_dir)
         return self.spark.createDataFrame([], POSTS_SCHEMA)
 
     def migrate_store(self) -> list[str]:
@@ -178,16 +201,22 @@ class SyncEngine:
     def posts_index(self) -> DataFrame:
         """The slim (post_id, year, month) location index. Bootstraps
         from the posts table for stores created before the index
-        existed."""
+        existed, through merge_parquet's staged first write, so a crash
+        mid-bootstrap leaves no partial index behind."""
         recover_table(self.posts_index_dir, partition_depth=1)
-        if os.path.exists(self.posts_index_dir):
-            return self.spark.read.parquet(self.posts_index_dir)
-        if os.path.exists(self.posts_dir):
-            idx = self.existing_posts().select(
-                "post_id", "year", "month", _bucket("post_id", N_INDEX_BUCKETS).alias("bucket")
+        if not os.path.exists(self.posts_index_dir) and os.path.exists(self.posts_dir):
+            merge_parquet(
+                self.spark,
+                self.posts_index_dir,
+                self.existing_posts().select(
+                    "post_id", "year", "month", _bucket("post_id", N_INDEX_BUCKETS).alias("bucket")
+                ),
+                key_cols=["post_id"],
+                partition_cols=["bucket"],
+                partition_stable=True,
             )
-            idx.write.mode("overwrite").partitionBy("bucket").parquet(self.posts_index_dir)
-            return self.spark.read.parquet(self.posts_index_dir)
+        if os.path.exists(self.posts_index_dir):
+            return self.spark.read.schema(INDEX_SCHEMA).parquet(self.posts_index_dir)
         return self.spark.createDataFrame([], INDEX_SCHEMA)
 
     def process_batch(
@@ -251,6 +280,7 @@ class SyncEngine:
             merge_exprs={"last_active": max_of, "profile": take_source},
             partition_cols=["bucket"],
             partition_stable=True,
+            target_schema=ACCOUNTS_SCHEMA,
         )
 
     def _process_posts_chain(
@@ -306,6 +336,7 @@ class SyncEngine:
                 },
                 partition_cols=["year", "month"],
                 partition_source=slim_idx,
+                target_schema=POSTS_SCHEMA,
             )
             # maintain the index (insert-only: the resolved location of
             # an existing post never changes)
@@ -319,6 +350,7 @@ class SyncEngine:
                 merge_exprs={"year": keep_target, "month": keep_target},
                 partition_cols=["bucket"],
                 partition_stable=True,
+                target_schema=INDEX_SCHEMA,
             )
             idx = self.posts_index()  # same-batch comment+vote resolves
             slim_idx = idx.select("post_id", "year", "month")
@@ -336,6 +368,7 @@ class SyncEngine:
                     key_cols=["post_id"],
                     partition_cols=["year", "month"],
                     partition_stable=True,  # year/month come from the index
+                    target_schema=POSTS_SCHEMA,
                 )
 
         # votes: set-add into the posts table (S11/A1). The existence
@@ -379,6 +412,7 @@ class SyncEngine:
                 merge_exprs={"upvotes": set_union, "downvotes": set_union},
                 partition_cols=["year", "month"],
                 partition_stable=True,  # year/month come from the index
+                target_schema=POSTS_SCHEMA,
             )
 
     def run(self, source: DataFrame, batch_size: int = 30, stop_block: int | None = None) -> int:

@@ -115,6 +115,7 @@ def merge_parquet(
     partition_cols: list[str] | None = None,
     partition_source: DataFrame | None = None,
     partition_stable: bool = False,
+    target_schema: str | None = None,
 ) -> None:
     """MERGE `updates` into the parquet table at `target_dir`.
 
@@ -129,6 +130,10 @@ def merge_parquet(
     `partition_stable`: set when the partition columns are a pure
     function of the key (e.g. a hash bucket) — an update can never
     move a key across partitions, so the resolution join is skipped.
+
+    `target_schema` (optional DDL string): the target's declared
+    schema, partition columns included. The target read then runs no
+    schema-inference job; when omitted, Spark infers it.
 
     NB (partitioned targets): merges rewrite only touched partition
     directories, so a column added by a later merge would reach only
@@ -163,7 +168,8 @@ def merge_parquet(
             shutil.rmtree(staging)
         return
 
-    target = spark.read.parquet(target_dir)
+    reader = spark.read if target_schema is None else spark.read.schema(target_schema)
+    target = reader.parquet(target_dir)
 
     cached = None
     if partition_cols:

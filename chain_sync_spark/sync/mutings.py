@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chain_sync_spark.sync.engine import POSTS_SCHEMA
 from chain_sync_spark.sync.merge import merge_parquet, recover_table, take_source
 
 
@@ -28,12 +29,17 @@ def muted_accounts(roles: DataFrame) -> DataFrame:
 def apply_community_mutings(
     spark: SparkSession, posts_dir: str, roles: DataFrame, community: str
 ) -> None:
-    """J4/S10: flag posts by muted authors in `community`."""
+    """J4/S10: flag posts by muted authors in `community`. Posts that
+    are already flagged are left out of the merge, so a re-run with
+    unchanged roles rewrites no partition."""
     muted = muted_accounts(roles)
     recover_table(posts_dir, partition_depth=2)  # posts: year/month
-    posts = spark.read.parquet(posts_dir)
+    posts = spark.read.schema(POSTS_SCHEMA).parquet(posts_dir)
     flagged = (
-        posts.filter(F.col("parent_permlink") == community)
+        posts.filter(
+            (F.col("parent_permlink") == community)
+            & ~F.coalesce(F.col("muted_in_community"), F.lit(False))
+        )
         .join(F.broadcast(muted), posts.author == muted.account, "left_semi")
         .select("post_id", "year", "month", F.lit(True).alias("muted_in_community"))
     )
@@ -45,4 +51,5 @@ def apply_community_mutings(
         merge_exprs={"muted_in_community": take_source},
         partition_cols=["year", "month"],
         partition_stable=True,  # year/month read from the target rows
+        target_schema=POSTS_SCHEMA,
     )

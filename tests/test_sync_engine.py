@@ -403,6 +403,8 @@ def test_compaction_bounds_file_counts(spark, tmp_path, ops_batch1):
 
 
 def test_mutings(spark, tmp_path):
+    import os
+
     eng = SyncEngine(spark, str(tmp_path))
     ops = spark.createDataFrame(
         [
@@ -420,6 +422,20 @@ def test_mutings(spark, tmp_path):
     apply_community_mutings(spark, f"{tmp_path}/posts", roles, "hive-118554")
     rows = {r["permlink"]: r["muted_in_community"] for r in _posts(spark, tmp_path).collect()}
     assert rows == {"s1": True, "s2": None, "other": None}
+
+    # already-flagged posts are left out of the merge: a re-run with
+    # unchanged roles rewrites no posts partition
+    def posts_files():
+        return sorted(
+            os.path.join(root, f)
+            for root, _dirs, files in os.walk(eng.posts_dir)
+            for f in files
+            if f.endswith(".parquet")
+        )
+
+    before = posts_files()
+    apply_community_mutings(spark, f"{tmp_path}/posts", roles, "hive-118554")
+    assert posts_files() == before
 
 
 def test_reply_tag_updates_off_by_default(spark, tmp_path):
@@ -741,3 +757,96 @@ def test_process_batch_vote_buckets_matches_probe(spark, tmp_path, ops_batch1):
         assert rows("a", sub) == rows("b", sub), (
             f"{sub} diverged between probe and handed-bucket paths"
         )
+
+
+def test_posts_index_bootstrap_crash_leaves_no_partial_index(spark, tmp_path, ops_batch1, monkeypatch):
+    """A store that predates the index bootstraps it from posts. The
+    bootstrap writes through staging + rename, so a crash mid-write
+    leaves no live index directory (a partial one would be read as the
+    whole index: votes for missing posts dropped, posts routed to the
+    wrong partition) and the next call bootstraps the full index."""
+    import os
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    eng = SyncEngine(spark, str(tmp_path))
+    eng.run(ops_batch1, batch_size=10)
+    shutil.rmtree(eng.posts_index_dir)
+    real_parquet = DataFrameWriter.parquet
+
+    def crash_midway(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        if os.path.basename(path.rstrip("/")).startswith("posts_index"):
+            buckets = sorted(e for e in os.listdir(path) if e.startswith("bucket="))
+            for b in buckets[::2]:
+                shutil.rmtree(os.path.join(path, b))
+            raise OSError("simulated crash mid-write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_midway)
+    with pytest.raises(OSError, match="simulated crash"):
+        eng.posts_index()
+    monkeypatch.undo()
+    assert not os.path.exists(eng.posts_index_dir)
+    got = sorted(r[0] for r in eng.posts_index().select("post_id").collect())
+    want = sorted(r[0] for r in eng.existing_posts().select("post_id").collect())
+    assert len(want) == 3 and got == want
+
+
+@pytest.fixture(scope="module")
+def wide_store(spark, tmp_path_factory):
+    """An engine-written store whose posts_index and accounts occupy
+    more than 32 of their bucket directories: over Spark's default
+    threshold for listing a directory level with a distributed job."""
+    rows = [
+        _op(1, "2024-03-05 12:00:00" if i % 2 else "2024-04-05 12:00:00", "comment",
+            _comment(f"u{i}", f"p{i}"))
+        for i in range(120)
+    ]
+    rows += [
+        _op(2, TS, "vote", _vote("v1", "u0", "p0", 100)),
+        _op(2, TS, "account_update",
+            {"account": "u1", "json_metadata": json.dumps({"profile": {"name": "U", "about": "a"}})}),
+    ]
+    eng = SyncEngine(spark, str(tmp_path_factory.mktemp("wide_store")))
+    eng.run(spark.createDataFrame(rows, OP_STREAM_SCHEMA), batch_size=10)
+    return eng
+
+
+def test_store_reads_start_no_spark_jobs(spark, wide_store):
+    """Store tables are listed on the driver and read with their
+    declared schemas, so opening one starts no listing job and no
+    schema-inference job."""
+    import os
+
+    for d in (wide_store.posts_index_dir, wide_store.accounts_dir):
+        assert sum(e.startswith("bucket=") for e in os.listdir(d)) > 32
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_started(open_table):
+        mark = max(tracker.getJobIdsForGroup(), default=-1)
+        open_table()
+        return max(tracker.getJobIdsForGroup(), default=-1) - mark
+
+    assert jobs_started(wide_store.posts_index) == 0
+    assert jobs_started(wide_store.existing_posts) == 0
+    # no declared schema here: only the footer-inference job remains
+    assert jobs_started(lambda: spark.read.parquet(wide_store.accounts_dir)) <= 1
+
+
+def test_declared_schemas_match_inferred(spark, wide_store):
+    """Guard against drift: a declared schema silently reads a renamed
+    or retyped column as null, so each must equal what Spark infers
+    from an engine-written store (names and types; nullability aside)."""
+    from chain_sync_spark.sync.engine import ACCOUNTS_SCHEMA, INDEX_SCHEMA, POSTS_SCHEMA
+
+    def shape(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+    for table_dir, declared in (
+        (wide_store.posts_dir, POSTS_SCHEMA),
+        (wide_store.posts_index_dir, INDEX_SCHEMA),
+        (wide_store.accounts_dir, ACCOUNTS_SCHEMA),
+    ):
+        inferred = spark.read.parquet(table_dir).schema
+        assert shape(inferred) == shape(spark.createDataFrame([], declared).schema), table_dir
