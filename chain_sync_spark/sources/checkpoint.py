@@ -17,11 +17,12 @@ store written by either revision reads back under the other) and zero
 Spark jobs run. The `spark` parameter stays in both signatures so
 every caller is source-compatible.
 
-The cursor directory is replaced with `swap_dir`, the recoverable
-directory swap the streaming merged-state stores commit through too:
-a crash at any step leaves either the new or the previous cursor,
-never none, and `recover_swap` (run by both cursor functions) repairs
-the leftover state.
+The cursor directory is replaced with `swap_dir`, the one
+recoverable directory swap of the repo: the sync tables (partition
+form, `depth` > 0) and the streaming merged-state stores commit
+through it too. A crash at any step leaves either the new or the
+previous cursor, never none, and `recover_swap` (run by both cursor
+functions) repairs the leftover state.
 """
 
 from __future__ import annotations
@@ -33,36 +34,89 @@ from collections.abc import Callable
 from pyspark.sql import SparkSession
 
 
-def recover_swap(path: str) -> None:
-    """Repair any crash window of `swap_dir(path, ...)` (idempotent):
-    leftover staging is discarded (its write never committed), a
-    missing `path` with `path.old` present is restored (crash between
-    the two renames), and a `path.old` beside a committed `path` is
-    cleared (crash before cleanup)."""
+def _leaves(root: str, depth: int) -> list[tuple[str, ...]]:
+    """The `col=value` dirs `depth` levels below `root`, as relative
+    path parts; depth 0 is `root` itself, `[()]`."""
+    leaves: list[tuple[str, ...]] = [()]
+    for _ in range(depth):
+        leaves = [
+            (*leaf, e.name)
+            for leaf in leaves
+            for e in os.scandir(os.path.join(root, *leaf))
+            if "=" in e.name and e.is_dir()
+        ]
+    return leaves
+
+
+def _move(src: str, dst: str) -> None:
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    os.replace(src, dst)
+
+
+def recover_swap(path: str, depth: int = 0) -> None:
+    """Repair any crash window of `swap_dir(path, ..., depth)`
+    (idempotent): leftover staging is discarded (its write never
+    committed); a missing `path` with `path.old` present is restored
+    (crash inside a whole-directory swap); otherwise each leaf of
+    `path.old` whose live leaf is missing is moved back (crash between
+    a leaf's two renames) and `path.old` is cleared."""
+    path = path.rstrip("/")
     staging, old = path + ".staging", path + ".old"
+    # Upgrade from the engine revision whose sync tables ran their own
+    # swaps (up to commit 95b3dc6): its crash leftovers
+    # `path.__staging__`, `path.__bak__` and `path/<leaf>.__bak__` are
+    # moved onto this swap's names and repaired by the steps below.
+    if os.path.isdir(path + ".__staging__"):
+        shutil.rmtree(path + ".__staging__")
+    if os.path.isdir(path + ".__bak__"):
+        os.replace(path + ".__bak__", old)
+    if depth and os.path.isdir(path):
+        for *parent, name in _leaves(path, depth):
+            if name.endswith(".__bak__"):
+                _move(os.path.join(path, *parent, name),
+                      os.path.join(old, *parent, name.removesuffix(".__bak__")))
     if os.path.isdir(staging):
         shutil.rmtree(staging)
-    if os.path.isdir(old):
-        if os.path.isdir(path):
-            shutil.rmtree(old)
-        else:
-            os.replace(old, path)
+    if not os.path.isdir(old):
+        return
+    if not os.path.isdir(path):
+        os.replace(old, path)
+        return
+    for leaf in _leaves(old, depth):
+        if not os.path.isdir(os.path.join(path, *leaf)):
+            _move(os.path.join(old, *leaf), os.path.join(path, *leaf))
+    shutil.rmtree(old)
 
 
-def swap_dir(path: str, write: Callable[[str], None]) -> None:
-    """Replace directory `path` with the one `write(staging)` builds.
-    Commit order: write staging → rename path → path.old → rename
-    staging → path → remove path.old. The previous directory is
-    renamed aside, never removed before the new one is in place, so
-    every crash window is one `recover_swap` repairs."""
-    recover_swap(path)
+def swap_dir(path: str, write: Callable[[str], bool | None], depth: int = 0) -> None:
+    """Replace directory `path` with the one `write(staging)` builds
+    (`write` returning False abandons the swap). `depth` > 0 swaps only
+    the `col=value` leaves that many levels down that staging holds;
+    other leaves of `path` stay. Per staged leaf: rename path/leaf →
+    path.old/leaf, rename staging/leaf → path/leaf; then remove
+    path.old and staging. Depth 0 is the same with the whole directory
+    as the one leaf, and an absent `path` is always created by one
+    rename of staging, so no crash leaves a partial table. Nothing is
+    removed before its replacement is in place, and backups sit beside
+    `path`, never in it: a reader listing `path` sees only live leaves,
+    and every crash window is one `recover_swap` repairs."""
+    path = path.rstrip("/")
+    recover_swap(path, depth)
     staging, old = path + ".staging", path + ".old"
-    write(staging)
-    if os.path.isdir(path):
-        os.replace(path, old)
-    os.replace(staging, path)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+    if write(staging) is False:
+        shutil.rmtree(staging)
+        return
+    if not os.path.isdir(path):
+        os.replace(staging, path)
+        return
+    for leaf in _leaves(staging, depth):
+        live = os.path.join(path, *leaf)
+        if os.path.isdir(live):
+            _move(live, os.path.join(old, *leaf))
+        _move(os.path.join(staging, *leaf), live)
+    for leftover in (old, staging):
+        if os.path.isdir(leftover):
+            shutil.rmtree(leftover)
 
 
 def read_cursor(spark: SparkSession, path: str, default: int = 0) -> int:

@@ -17,10 +17,15 @@ Scale design (100 TB):
 * **accounts bucketing** — accounts are partitioned by a stable hash
   bucket of the name, so the per-round accounts MERGE rewrites only
   the buckets the batch touches instead of the whole table.
+* **one commit protocol** — every table write is staged and swapped
+  in by ``sources.checkpoint.swap_dir`` (touched partition leaves
+  only; backups sit beside the table, never in it), the swap the
+  cursor commits through too; ``recover_table`` (its
+  ``recover_swap``) repairs any crash window before a read or merge.
 * **store reads start no Spark job** — the store is a POSIX tree the
-  driver already renames and walks (``recover_table`` runs an
-  ``os.walk`` of the same directories before every read), so the
-  engine lists it on the driver: it raises Spark's
+  driver already renames and lists (``recover_table`` lists the same
+  directories before every read), so the engine lists it on the
+  driver: it raises Spark's
   parallel-partition-discovery threshold to the widest directory
   level it writes (the bucket count), where the default would start
   a distributed listing job for the 64 ``bucket=`` dirs. Every read
@@ -38,15 +43,15 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import os
-import shutil
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chain_sync_spark.sources.checkpoint import read_cursor, write_cursor
+from chain_sync_spark.sources.checkpoint import recover_swap as recover_table
 from chain_sync_spark.sync.classify import VOTE_SCHEMA, classify
 from chain_sync_spark.functions.hashing import surrogate_id
 from chain_sync_spark.sync.handlers import (
@@ -57,12 +62,9 @@ from chain_sync_spark.sync.handlers import (
     votes_to_vote_upserts,
 )
 from chain_sync_spark.sync.merge import (
-    BACKUP_SUFFIX,
-    STAGING_SUFFIX,
     keep_target,
     max_of,
     merge_parquet,
-    recover_table,
     set_union,
     take_source,
 )
@@ -123,7 +125,6 @@ class SyncEngine:
     # {"cursor", "batch_lo", "batch_hi", "n_ops", "elapsed_s"} after
     # the cursor commits — wire it to HTTP/StatsD/logging as needed.
     heartbeat: Callable[[dict], None] | None = None
-    _migrated: bool = field(default=False, init=False, repr=False)
 
     def __post_init__(self) -> None:
         widest = max(N_INDEX_BUCKETS, N_ACCOUNT_BUCKETS)
@@ -147,63 +148,17 @@ class SyncEngine:
         return os.path.join(self.store_dir, "checkpoint")
 
     def existing_posts(self) -> DataFrame:
-        recover_table(self.posts_dir, partition_depth=2)
+        recover_table(self.posts_dir, depth=2)
         if os.path.exists(self.posts_dir):
             return self.spark.read.schema(POSTS_SCHEMA).parquet(self.posts_dir)
         return self.spark.createDataFrame([], POSTS_SCHEMA)
-
-    def migrate_store(self) -> list[str]:
-        """One-time format migrations for stores written by earlier
-        revisions of this engine (each is detected cheaply and skipped
-        on current-format stores). Returns the migrations applied.
-
-        * accounts: previously unpartitioned with no `bucket` column —
-          merges now filter on the bucket partition, which would throw.
-          Rewritten once with hash-bucket partitioning.
-        * posts: partitions written before the mutable columns (jobs /
-          upvotes / downvotes / muted_in_community) existed never get
-          them backfilled by partition-swap merges, and reads without
-          mergeSchema silently drop them. Rewritten once with the
-          complete schema (typed nulls).
-        """
-        applied: list[str] = []
-        if os.path.exists(self.accounts_dir) and not any(
-            e.startswith("bucket=") for e in os.listdir(self.accounts_dir)
-        ):
-            legacy = self.spark.read.parquet(self.accounts_dir)
-            if "bucket" not in legacy.columns:
-                migrated = legacy.withColumn("bucket", _bucket("name", N_ACCOUNT_BUCKETS))
-                staging = self.accounts_dir + STAGING_SUFFIX
-                migrated.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-                backup = self.accounts_dir + BACKUP_SUFFIX
-                os.rename(self.accounts_dir, backup)
-                os.rename(staging, self.accounts_dir)
-                shutil.rmtree(backup)
-                applied.append("accounts_bucketed")
-        if os.path.exists(self.posts_dir):
-            posts = self.spark.read.option("mergeSchema", "true").parquet(self.posts_dir)
-            want = self.spark.createDataFrame([], POSTS_SCHEMA)
-            missing = [f for f in want.schema.fields if f.name not in posts.columns]
-            if missing:
-                completed = posts.select(
-                    "*",
-                    *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing],
-                )
-                staging = self.posts_dir + STAGING_SUFFIX
-                completed.write.mode("overwrite").partitionBy("year", "month").parquet(staging)
-                backup = self.posts_dir + BACKUP_SUFFIX
-                os.rename(self.posts_dir, backup)
-                os.rename(staging, self.posts_dir)
-                shutil.rmtree(backup)
-                applied.append("posts_schema_completed")
-        return applied
 
     def posts_index(self) -> DataFrame:
         """The slim (post_id, year, month) location index. Bootstraps
         from the posts table for stores created before the index
         existed, through merge_parquet's staged first write, so a crash
         mid-bootstrap leaves no partial index behind."""
-        recover_table(self.posts_index_dir, partition_depth=1)
+        recover_table(self.posts_index_dir, depth=1)
         if not os.path.exists(self.posts_index_dir) and os.path.exists(self.posts_dir):
             merge_parquet(
                 self.spark,
@@ -255,9 +210,6 @@ class SyncEngine:
         callers may omit it; the collect then runs as before."""
         from concurrent.futures import ThreadPoolExecutor
 
-        if not self._migrated:
-            self.migrate_store()
-            self._migrated = True
         typed = classify(ops)
         comments, votes, accounts = typed["comment"], typed["vote"], typed["account_update"]
 

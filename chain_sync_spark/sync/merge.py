@@ -3,15 +3,19 @@
 The reference's sink is OpenSearch bulk update-with-upsert plus
 painless scripts (set-add, field reset, flag set). Without Delta we
 implement MERGE as: full-outer join target⋈updates on the key, per-
-column merge expressions, staging write, atomic swap.
+column merge expressions, a staging write, then the commit by
+`sources.checkpoint.swap_dir`, the one recoverable swap of every store
+(`recover_table` is its `recover_swap`).
 
 Scale design (100 TB): when the table is partitioned, only the
 partitions touched by the update batch are read and rewritten
-(partition-pruned read → dynamic-partition-style replace). The
-upsert batch per sync round is tiny relative to the table, so cost
-is proportional to touched partitions, not table size. On a real
-cluster the same logic maps 1:1 onto Delta/Iceberg MERGE INTO —
-the handler outputs are unchanged.
+(partition-pruned read → `swap_dir` at the partition depth swaps in
+just the staged leaf directories). The upsert batch per sync round is
+tiny relative to the table, so cost is proportional to touched
+partitions, not table size. A swap replaces a leaf directory whole,
+so a leaf holds only the files of the round that last wrote it: file
+counts do not accumulate. On a real cluster the same logic maps 1:1
+onto Delta/Iceberg MERGE INTO — the handler outputs are unchanged.
 
 Merge expressions receive (target_col, source_col) Columns and
 return the merged Column — e.g. the vote set-add painless script
@@ -22,20 +26,15 @@ return the merged Column — e.g. the vote set-add painless script
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MergeExpr = Callable[[Column, Column], Column]
+from chain_sync_spark.sources.checkpoint import recover_swap as recover_table
+from chain_sync_spark.sources.checkpoint import swap_dir
 
-# Reserved suffixes for swap staging/backup dirs. Double-underscore
-# wrapped so they can never collide with a `col=value` partition
-# directory name (partition values would need a literal '.__bak__'
-# suffix AND the walk only inspects dirs at the partition depth).
-BACKUP_SUFFIX = ".__bak__"
-STAGING_SUFFIX = ".__staging__"
+MergeExpr = Callable[[Column, Column], Column]
 
 
 def take_source(t: Column, s: Column) -> Column:
@@ -58,52 +57,6 @@ def set_union(t: Column, s: Column) -> Column:
     return F.array_distinct(
         F.array_union(F.coalesce(t, F.array()), F.coalesce(s, F.array()))
     )
-
-
-def recover_table(target_dir: str, partition_depth: int | None = None) -> None:
-    """Crash recovery for the swap windows: restore a whole-table
-    backup if the table itself is absent, restore any partition-level
-    `<dir>.__bak__` backups whose live dir is absent (partition-swap
-    crash), and discard stale staging output.
-
-    ``partition_depth``: number of partition levels (len of the
-    table's partition_cols). When given, only directories at exactly
-    that depth are inspected — the walk is O(partition dirs at that
-    depth), never O(all table dirs/files), and a partition VALUE that
-    happens to end in the suffix at another depth can't be mistaken
-    for a backup. When None (unknown layout), the full recursive walk
-    runs as a fallback."""
-    staging = target_dir.rstrip("/") + STAGING_SUFFIX
-    backup = target_dir.rstrip("/") + BACKUP_SUFFIX
-    if not os.path.exists(target_dir) and os.path.exists(backup):
-        os.rename(backup, target_dir)
-    for leftover in (staging, backup):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
-    if not os.path.exists(target_dir):
-        return
-    def restore(root: str, names: list[str]) -> None:
-        for d in names:
-            if not d.endswith(BACKUP_SUFFIX):
-                continue
-            bak = os.path.join(root, d)
-            live = bak[: -len(BACKUP_SUFFIX)]
-            if os.path.exists(live):
-                shutil.rmtree(bak)
-            else:
-                os.rename(bak, live)
-
-    for root, dirs, _files in os.walk(target_dir, topdown=True):
-        rel = os.path.relpath(root, target_dir)
-        depth = 0 if rel == "." else rel.count(os.sep) + 1
-        if partition_depth is None:
-            restore(root, list(dirs))
-            dirs[:] = [d for d in dirs if not d.endswith(BACKUP_SUFFIX)]
-        elif depth + 1 == partition_depth:
-            restore(root, list(dirs))
-            dirs[:] = []  # backups live at leaf depth only — stop here
-        elif depth >= partition_depth:
-            dirs[:] = []
 
 
 def merge_parquet(
@@ -143,29 +96,14 @@ def merge_parquet(
     """
     merge_exprs = merge_exprs or {}
     partition_cols = partition_cols or []
-    recover_table(target_dir, len(partition_cols) or None)
+    depth = len(partition_cols)
+    recover_table(target_dir, depth)
 
     if not os.path.exists(target_dir):
-        # First write runs ONCE through staging + rename instead of an
-        # isEmpty() probe followed by the real write: the probe
-        # evaluated the whole handler pipeline a second time just to
-        # decide emptiness (r13 action census: 3 first-writes per
-        # fresh store, each paying the pipeline twice). Emptiness is
-        # now read off the STAGED OUTPUT on the driver — and a
-        # zero-row table is still never materialized: a partitioned
-        # overwrite of 0 rows writes only _SUCCESS and later reads
-        # fail with UNABLE_TO_INFER_SCHEMA. A crash between write and
-        # rename leaves only a staging dir, which recover_table
-        # already discards.
-        staging = target_dir.rstrip("/") + STAGING_SUFFIX
-        writer = _sorted(updates, partition_cols, key_cols).write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(staging)
-        if _staged_has_rows(staging, partition_cols):
-            os.rename(staging, target_dir)
-        else:
-            shutil.rmtree(staging)
+        # First write: the updates ARE the table. Written once and
+        # committed by swap_dir as one rename of the whole staging dir,
+        # so a crash never leaves a partial table.
+        swap_dir(target_dir, _staged_write(updates, partition_cols, key_cols), depth)
         return
 
     reader = spark.read if target_schema is None else spark.read.schema(target_schema)
@@ -235,19 +173,34 @@ def merge_parquet(
 
     merged = joined.select(*[pick(c) for c in all_cols])
 
-    merged = _sorted(merged, partition_cols, key_cols)
     try:
-        if partition_cols:
-            _swap_touched_partitions(spark, target_dir, merged, partition_cols)
-        else:
-            _atomic_overwrite(spark, target_dir, merged, partition_cols)
+        swap_dir(target_dir, _staged_write(merged, partition_cols, key_cols), depth)
     finally:
         if cached is not None:
             cached.unpersist()
 
 
+def _staged_write(
+    df: DataFrame, partition_cols: list[str], key_cols: list[str]
+) -> Callable[[str], bool]:
+    """The `swap_dir` write of a merge result: stage `df`, and commit it
+    only if it holds rows. A zero-row table is never materialized — a
+    partitioned overwrite of 0 rows writes only _SUCCESS and later
+    reads fail with UNABLE_TO_INFER_SCHEMA. Emptiness is read off the
+    staged output on the driver, so the plan runs once."""
+
+    def write(staging: str) -> bool:
+        writer = _sorted(df, partition_cols, key_cols).write.mode("overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(staging)
+        return _staged_has_rows(staging, partition_cols)
+
+    return write
+
+
 def _staged_has_rows(staging: str, partition_cols: list[str]) -> bool:
-    """Did a staged first write produce any rows?  Partitioned: zero
+    """Did a staged write produce any rows?  Partitioned: zero
     rows leave no `col=value` dirs at all.  Unpartitioned: part files
     exist either way, so read row counts from the parquet footers
     (driver-side, a handful of files — no Spark job)."""
@@ -269,103 +222,3 @@ def _sorted(df: DataFrame, partition_cols: list[str], key_cols: list[str]) -> Da
     few row groups instead of whole files."""
     cols = [c for c in partition_cols + key_cols if c in df.columns]
     return df.sortWithinPartitions(*cols) if cols else df
-
-
-def _atomic_overwrite(
-    spark: SparkSession, target_dir: str, df: DataFrame, partition_cols: list[str]
-) -> None:
-    """Stage the result, then swap directories. Two writes, but never
-    reads and deletes the same files in one job (lazy-eval hazard).
-    On Delta/Iceberg this whole function is a transactional MERGE."""
-    staging = target_dir.rstrip("/") + STAGING_SUFFIX
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
-    backup = target_dir.rstrip("/") + BACKUP_SUFFIX
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-    os.rename(target_dir, backup)
-    os.rename(staging, target_dir)
-    shutil.rmtree(backup)
-
-
-def compact_partitions(
-    spark: SparkSession,
-    target_dir: str,
-    partition_cols: list[str],
-    max_files_per_partition: int = 8,
-) -> int:
-    """Small-file maintenance for merge-heavy tables: every sync
-    round rewrites its touched partitions with fresh files, so hot
-    partitions accumulate file counts over time. This rewrites each
-    partition whose file count exceeds the threshold into a single
-    coalesced file (same per-partition swap machinery as the merge —
-    untouched partitions are never opened). Returns the number of
-    partitions compacted. The reference has no analog (OpenSearch
-    segment merging does this implicitly); on Delta/Iceberg this is
-    OPTIMIZE / rewrite_data_files."""
-    recover_table(target_dir, len(partition_cols) or None)
-    if not os.path.exists(target_dir):
-        return 0
-    # find leaf partition dirs with too many data files
-    crowded: list[str] = []
-    for root, dirs, files in os.walk(target_dir):
-        rel = os.path.relpath(root, target_dir)
-        depth = 0 if rel == "." else rel.count(os.sep) + 1
-        if depth == len(partition_cols):
-            dirs[:] = []
-            n = sum(1 for f in files if f.endswith(".parquet"))
-            if n > max_files_per_partition:
-                crowded.append(rel)
-    staging_root = target_dir.rstrip("/") + STAGING_SUFFIX
-    for rel in crowded:
-        live = os.path.join(target_dir, rel)
-        # staging lives OUTSIDE the table root — a sibling dir inside
-        # the table would be picked up by partition discovery
-        staging = os.path.join(staging_root, rel)
-        spark.read.parquet(live).coalesce(1).write.mode("overwrite").parquet(staging)
-        bak = live + BACKUP_SUFFIX
-        if os.path.exists(bak):
-            shutil.rmtree(bak)
-        os.rename(live, bak)
-        os.rename(staging, live)
-        shutil.rmtree(bak)
-    if os.path.exists(staging_root):
-        shutil.rmtree(staging_root)
-    return len(crowded)
-
-
-def _swap_touched_partitions(
-    spark: SparkSession, target_dir: str, merged: DataFrame, partition_cols: list[str]
-) -> None:
-    """Write only the merged (touched) partitions to staging, then
-    swap each partition directory into the live table with a
-    per-partition backup. Untouched partition directories are never
-    opened, so write cost is proportional to the update batch, not
-    the table. A crash mid-swap leaves `<partition>.__bak__` backups that
-    recover_table restores. On Delta/Iceberg this is MERGE INTO with
-    dynamic partition overwrite."""
-    staging = target_dir.rstrip("/") + STAGING_SUFFIX
-    merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
-    # leaf partition dirs, relative to the staging root
-    leaves: list[str] = []
-    for root, dirs, _files in os.walk(staging):
-        rel = os.path.relpath(root, staging)
-        depth = 0 if rel == "." else rel.count(os.sep) + 1
-        if depth == len(partition_cols):
-            leaves.append(rel)
-            dirs[:] = []  # don't descend into data files
-    for rel in leaves:
-        src = os.path.join(staging, rel)
-        dst = os.path.join(target_dir, rel)
-        bak = dst + BACKUP_SUFFIX
-        if os.path.exists(bak):
-            shutil.rmtree(bak)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        if os.path.exists(dst):
-            os.rename(dst, bak)
-        os.rename(src, dst)
-        if os.path.exists(bak):
-            shutil.rmtree(bak)
-    shutil.rmtree(staging)

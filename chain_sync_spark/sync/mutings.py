@@ -15,8 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chain_sync_spark.sources.checkpoint import recover_swap as recover_table
 from chain_sync_spark.sync.engine import POSTS_SCHEMA
-from chain_sync_spark.sync.merge import merge_parquet, recover_table, take_source
+from chain_sync_spark.sync.merge import merge_parquet, take_source
 
 
 def muted_accounts(roles: DataFrame) -> DataFrame:
@@ -33,7 +34,7 @@ def apply_community_mutings(
     are already flagged are left out of the merge, so a re-run with
     unchanged roles rewrites no partition."""
     muted = muted_accounts(roles)
-    recover_table(posts_dir, partition_depth=2)  # posts: year/month
+    recover_table(posts_dir, depth=2)  # posts: year/month
     posts = spark.read.schema(POSTS_SCHEMA).parquet(posts_dir)
     flagged = (
         posts.filter(

@@ -35,6 +35,11 @@ def _vote(voter, author, permlink, weight):
 
 TS = "2024-03-05 12:00:00"
 
+# The swap names of the engine revision before the sync tables
+# committed through sources.checkpoint.swap_dir; recovery still
+# repairs a store that revision left mid-swap.
+LEGACY_BACKUP, LEGACY_STAGING = ".__bak__", ".__staging__"
+
 
 @pytest.fixture()
 def ops_batch1(spark):
@@ -165,25 +170,25 @@ def test_cross_partition_edit_keeps_single_row(spark, tmp_path, ops_batch1):
 
 @pytest.mark.slow
 def test_crash_recovery_restores_backup(spark, tmp_path, ops_batch1):
-    """A crash between the two renames of _atomic_overwrite leaves
-    only the backup; the next round must restore and proceed."""
+    """A crash between the two renames of the previous revision's
+    whole-table swap leaves only its backup; the next round must
+    restore it and proceed."""
     import os
     import shutil
-    from chain_sync_spark.sync.merge import BACKUP_SUFFIX, STAGING_SUFFIX
     eng = SyncEngine(spark, str(tmp_path))
     eng.run(ops_batch1, batch_size=10)
     posts_dir = f"{tmp_path}/posts"
-    os.rename(posts_dir, posts_dir + BACKUP_SUFFIX)      # simulate mid-swap crash
-    os.makedirs(posts_dir + STAGING_SUFFIX + "/garbage")  # stale staging output
+    os.rename(posts_dir, posts_dir + LEGACY_BACKUP)      # simulate mid-swap crash
+    os.makedirs(posts_dir + LEGACY_STAGING + "/garbage")  # stale staging output
     batch2 = spark.createDataFrame(
         [_op(20, TS, "vote", _vote("v9", "alice", "p1", 100))], OP_STREAM_SCHEMA
     )
     eng.run(batch2, batch_size=10)
-    assert not os.path.exists(posts_dir + BACKUP_SUFFIX)
-    assert not os.path.exists(posts_dir + STAGING_SUFFIX)
+    assert not os.path.exists(posts_dir + LEGACY_BACKUP)
+    assert not os.path.exists(posts_dir + LEGACY_STAGING)
     p1 = _posts(spark, tmp_path).filter(F.col("permlink") == "p1").first()
     assert "v9" in p1["upvotes"]
-    shutil.rmtree(posts_dir + STAGING_SUFFIX, ignore_errors=True)
+    shutil.rmtree(posts_dir + LEGACY_STAGING, ignore_errors=True)
 
 
 def test_synthesize_ops_smoke(spark):
@@ -366,42 +371,6 @@ def test_row_order_invariance(spark, tmp_path, ops_batch1):
         assert a == b, tbl
 
 
-@pytest.mark.slow
-def test_compaction_bounds_file_counts(spark, tmp_path, ops_batch1):
-    """Merge-heavy partitions accumulate files; compact_partitions
-    rewrites crowded partitions only, preserving every row."""
-    import os
-    from chain_sync_spark.sync.merge import compact_partitions
-    eng = SyncEngine(spark, str(tmp_path))
-    eng.run(ops_batch1, batch_size=10)
-    posts_dir = f"{tmp_path}/posts"
-    # crowd the (2024, 3) partition: at cluster scale each merge can
-    # leave one file per shuffle partition (appends simulate that)
-    part = f"{posts_dir}/year=2024/month=3"
-    # materialize on the driver first — appending to a path while
-    # lazily reading from it is the read-overwrite hazard
-    src = spark.read.parquet(part)
-    pdf = spark.createDataFrame(src.collect(), src.schema)
-    for _ in range(3):
-        pdf.write.mode("append").parquet(part)
-    before_rows = sorted(map(str, _posts(spark, tmp_path).collect()))
-
-    def _files(d):
-        return [
-            os.path.join(r, f)
-            for r, _dd, ff in os.walk(d)
-            for f in ff
-            if f.endswith(".parquet")
-        ]
-
-    assert len(_files(part)) > 2
-    n = compact_partitions(spark, posts_dir, ["year", "month"], max_files_per_partition=1)
-    assert n >= 1
-    part_files = [p for p in _files(posts_dir) if "year=2024/month=3" in p]
-    assert len(part_files) == 1                   # coalesced
-    assert sorted(map(str, _posts(spark, tmp_path).collect())) == before_rows
-
-
 def test_mutings(spark, tmp_path):
     import os
 
@@ -486,48 +455,6 @@ def test_authoritative_snapshot_wins(spark, tmp_path):
     assert posts["p1"]["text_title"] == "Authoritative title"   # snapshot wins
     assert posts["p1"]["text_body"] == "op body"                # null col → op wins
     assert posts["p2"]["text_title"] == "Bob title"             # not in snapshot
-
-
-@pytest.mark.slow
-def test_legacy_store_migration(spark, tmp_path, ops_batch1):
-    """Stores written by earlier engine revisions — unpartitioned
-    accounts without the bucket column, posts partitions missing the
-    later-added mutable columns — are migrated once and then sync
-    normally (ADVICE r2 #1)."""
-    import os
-
-    store = str(tmp_path)
-    # legacy accounts: unpartitioned, no bucket column
-    spark.createDataFrame(
-        [("olduser", datetime.fromisoformat("2023-01-01 00:00:00"))],
-        "name string, last_active timestamp",
-    ).write.parquet(f"{store}/accounts")
-    # legacy posts: partitioned but missing jobs/upvotes/downvotes/muted
-    spark.createDataFrame(
-        [(123, "olduser", "oldpost", "T", "b", "cat1",
-          datetime.fromisoformat("2023-01-01 00:00:00"), 2023, 1)],
-        "post_id long, author string, permlink string, text_title string,"
-        " text_body string, parent_permlink string, timestamp timestamp,"
-        " year int, month int",
-    ).write.partitionBy("year", "month").parquet(f"{store}/posts")
-
-    eng = SyncEngine(spark, store)
-    applied = eng.migrate_store()
-    assert set(applied) == {"accounts_bucketed", "posts_schema_completed"}
-    assert any(e.startswith("bucket=") for e in os.listdir(f"{store}/accounts"))
-    # migration is idempotent
-    assert eng.migrate_store() == []
-
-    # a normal round now merges into the migrated store without error
-    eng.run(ops_batch1, batch_size=10)
-    posts = _posts(spark, tmp_path)
-    assert {"jobs", "upvotes", "downvotes", "muted_in_community"} <= set(posts.columns)
-    old = posts.filter(F.col("permlink") == "oldpost").first()
-    assert old is not None and old["upvotes"] is None
-    accounts = spark.read.parquet(f"{store}/accounts")
-    assert accounts.filter(F.col("name") == "olduser").first()["last_active"] is not None
-    # new activity merged alongside the legacy row
-    assert accounts.filter(F.col("name") == "alice").count() == 1
 
 
 def test_heartbeat_fires_per_committed_round(spark, tmp_path):
@@ -662,7 +589,7 @@ def test_first_write_empty_updates_materializes_no_table(spark, tmp_path):
     tgt_flat = f"{tmp_path}/t_flat"
     merge_parquet(spark, tgt_flat, empty.drop("part"), key_cols=["k"])
     assert not os.path.exists(tgt_flat)
-    assert not [e for e in os.listdir(tmp_path) if "__staging__" in e]
+    assert not [e for e in os.listdir(tmp_path) if e.endswith(".staging")]
     # and a NON-empty first write lands with rows intact
     rows = spark.createDataFrame([(1, "a", 3), (2, "b", 4)], "k long, v string, part int")
     merge_parquet(spark, tgt_part, rows, key_cols=["k"], partition_cols=["part"])
@@ -850,3 +777,189 @@ def test_declared_schemas_match_inferred(spark, wide_store):
     ):
         inferred = spark.read.parquet(table_dir).schema
         assert shape(inferred) == shape(spark.createDataFrame([], declared).schema), table_dir
+
+
+def test_partition_missing_mutable_columns_reads_nulls_and_is_rewritten(spark, tmp_path):
+    """A posts partition written without the mutable columns (jobs,
+    upvotes, downvotes, muted_in_community) reads them as typed nulls
+    through the declared schema, and the next round that upserts into
+    that month rewrites the partition with the complete schema."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from chain_sync_spark.functions.hashing import surrogate_id
+    from chain_sync_spark.sync.engine import POSTS_SCHEMA
+
+    spark.createDataFrame(
+        [("olduser", "oldpost", "T", "b", "cat1", ["a"], [], None,
+          datetime.fromisoformat("2024-03-01 00:00:00"), 2024, 3)],
+        "author string, permlink string, text_title string,"
+        " text_body string, parent_permlink string, tags array<string>,"
+        " image array<string>, stockimage_tags string, timestamp timestamp,"
+        " year int, month int",
+    ).select(surrogate_id("author", "permlink").alias("post_id"), "*").write.partitionBy(
+        "year", "month"
+    ).parquet(f"{tmp_path}/posts")
+    mutable = {"jobs", "upvotes", "downvotes", "muted_in_community"}
+
+    eng = SyncEngine(spark, str(tmp_path))
+    posts = eng.existing_posts()
+    assert posts.schema == spark.createDataFrame([], POSTS_SCHEMA).schema
+    old = posts.filter(F.col("permlink") == "oldpost").first()
+    assert all(old[c] is None for c in mutable)
+
+    eng.run(spark.createDataFrame(
+        [_op(1, TS, "comment", _comment("alice", "p1")),
+         _op(1, TS, "vote", _vote("v1", "olduser", "oldpost", 100))],
+        OP_STREAM_SCHEMA,
+    ), batch_size=10)
+    files = glob.glob(f"{tmp_path}/posts/year=2024/month=3/*.parquet")
+    assert files and all(mutable <= set(pq.read_schema(f).names) for f in files)
+    rows = {r["permlink"]: r for r in _posts(spark, tmp_path).collect()}
+    assert set(rows) == {"oldpost", "p1"}
+    assert rows["oldpost"]["upvotes"] == ["v1"] and rows["oldpost"]["jobs"] is None
+
+
+def _table_layout_ok(table, partition_cols):
+    """Does `table` hold only `col=<int>` partition dirs, level by level
+    (plus the `_`/`.`-prefixed files every reader skips)?"""
+    import os
+    import re
+
+    level = [table]
+    for col in partition_cols:
+        nxt = []
+        for d in level:
+            for e in os.listdir(d):
+                p = os.path.join(d, e)
+                if e.startswith(("_", ".")) and os.path.isfile(p):
+                    continue
+                if not (os.path.isdir(p) and re.fullmatch(rf"{col}=\d+", e)):
+                    return False
+                nxt.append(p)
+        level = nxt
+    return True
+
+
+def test_partition_swap_crash_at_every_step_converges(spark, tmp_path, monkeypatch):
+    """Crash a partitioned merge at each filesystem step of its swap in
+    turn: after staging, after each live→old and staging→live rename,
+    before the cleanup. At every crash point the live table holds only
+    partition dirs (no backup inside it), and recovery plus a re-run of
+    the same merge yields the table of a merge that never crashed."""
+    import os
+    import shutil
+
+    from chain_sync_spark.sync.merge import merge_parquet, recover_table
+
+    schema = "k long, v string, year int, month int"
+    parts = ["year", "month"]
+    base = str(tmp_path / "base")
+    merge_parquet(spark, base, spark.createDataFrame(
+        [(1, "a", 2023, 1), (2, "b", 2023, 2), (3, "c", 2024, 1), (4, "d", 2023, 5)], schema
+    ), key_cols=["k"], partition_cols=parts)
+    # three live leaves touched, one new leaf, 2023/5 untouched
+    updates = spark.createDataFrame(
+        [(1, "A", 2023, 1), (2, "B", 2023, 2), (5, "e", 2023, 2), (3, "C", 2024, 1),
+         (6, "f", 2024, 2)], schema
+    )
+
+    def merge(table):
+        merge_parquet(spark, table, updates, key_cols=["k"], partition_cols=parts,
+                      partition_stable=True)
+
+    def rows(table):
+        return sorted(spark.read.parquet(table).select("k", "v", "year", "month").collect())
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(base, clean)
+    merge(clean)
+    want = rows(clean)
+
+    table = str(tmp_path / "t")
+    real = {"replace": os.replace, "rename": os.rename, "rmtree": shutil.rmtree}
+    step = 0
+    while True:
+        step += 1
+        shutil.rmtree(table, ignore_errors=True)
+        shutil.copytree(base, table)
+        calls = []
+
+        def inject(name):
+            def fs_step(path, *a, **kw):
+                if os.fspath(path).startswith(table):
+                    calls.append(name)
+                    if len(calls) == step:
+                        raise OSError(f"injected crash before {name} #{step}")
+                return real[name](path, *a, **kw)
+            return fs_step
+
+        for name, owner in (("replace", os), ("rename", os), ("rmtree", shutil)):
+            monkeypatch.setattr(owner, name, inject(name))
+        try:
+            merge(table)
+            crashed = False
+        except OSError:
+            crashed = True
+        finally:
+            monkeypatch.undo()
+        if not crashed:
+            break
+        assert _table_layout_ok(table, parts), (step, calls, os.listdir(table))
+        recover_table(table, len(parts))
+        assert _table_layout_ok(table, parts), step
+        merge(table)
+        assert rows(table) == want, step
+        assert sorted(os.listdir(tmp_path)) == ["base", "clean", "t"], step
+    # 3 live→old + 4 staging→live renames and the cleanup were all hit
+    assert step > 8, step
+
+
+@pytest.mark.parametrize("leftover", [
+    "table_staging", "table_backup_table_missing", "table_backup_table_present",
+    "leaf_backup_leaf_missing", "leaf_backup_leaf_present",
+])
+def test_recovery_repairs_previous_revision_leftovers(tmp_path, leftover):
+    """A store left mid-swap by the previous revision's own swaps
+    (`T.__staging__`, `T.__bak__`, `T/<leaf>.__bak__`) is repaired by
+    the one recovery to the same table, with nothing left beside it."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from chain_sync_spark.sync.merge import recover_table
+
+    table = str(tmp_path / "posts")
+    for year, month in ((2023, 12), (2024, 1), (2024, 2)):
+        leaf = f"{table}/year={year}/month={month}"
+        os.makedirs(leaf)
+        pq.write_table(pa.table({"k": [year * 100 + month]}), f"{leaf}/part-0.parquet")
+
+    def snapshot():
+        return {
+            os.path.relpath(os.path.join(r, f), table): open(os.path.join(r, f), "rb").read()
+            for r, _d, files in os.walk(table) for f in files
+        }
+
+    want = snapshot()
+    leaf = f"{table}/year=2024/month=2"
+    if leftover == "table_staging":
+        os.makedirs(f"{table}{LEGACY_STAGING}/year=2024/month=2")
+    elif leftover == "table_backup_table_missing":
+        os.rename(table, table + LEGACY_BACKUP)
+    elif leftover == "table_backup_table_present":
+        shutil.copytree(table, table + LEGACY_BACKUP)
+        os.remove(f"{table}{LEGACY_BACKUP}/year=2024/month=2/part-0.parquet")
+    elif leftover == "leaf_backup_leaf_missing":
+        os.rename(leaf, leaf + LEGACY_BACKUP)
+    else:
+        shutil.copytree(leaf, leaf + LEGACY_BACKUP)
+        os.remove(f"{leaf}{LEGACY_BACKUP}/part-0.parquet")
+
+    recover_table(table, 2)
+    assert snapshot() == want
+    assert os.listdir(tmp_path) == ["posts"]
+    assert _table_layout_ok(table, ["year", "month"])
