@@ -6,6 +6,9 @@ Defaults chosen for the 100 TB design point (SURVEY.md §4):
   - UTC session timezone: keeps Spark/DuckDB/parquet timestamp
     semantics aligned (SURVEY.md §7 hard part d).
   - Arrow enabled: pandas_udf / applyInPandas run vectorized.
+  - codegen cache sized above one live sync round's working set
+    (CODEGEN_CACHE_ENTRIES), so a warm round reuses its compiled
+    classes instead of recompiling them.
   - shuffle.partitions sized by env for local runs; on a real
     cluster this is superseded by AQE coalescing + initial
     partition num.
@@ -16,6 +19,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries in the JVM-wide generated-class cache (a static conf: it is
+# read once, when the session is built). Spark's default of 100 is
+# below the ~135 classes one live sync round compiles, so at 100 every
+# warm round recompiled them all. Performance only: no result depends
+# on it.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(app_name: str = "chain-sync-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -52,6 +62,7 @@ def get_spark(app_name: str = "chain-sync-spark", shuffle_partitions: int | None
             os.environ.get("SPARK_GRAFT_ADVISORY_PART", "64m"),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # events.parquet carries TIMESTAMP(NANOS); set once here for

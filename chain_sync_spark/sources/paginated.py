@@ -13,6 +13,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from chain_sync_spark.sources.frames import driver_frame
+
 ROLES_SCHEMA = "account string, role string"
 
 
@@ -41,6 +43,6 @@ def fetch_all_pages(
 def roles_snapshot(
     spark: SparkSession, fetch_page: Callable[[str], Sequence[tuple]]
 ) -> DataFrame:
-    """Community-roles snapshot as a DataFrame: (account, role) rows,
-    ready for sync.mutings.apply_community_mutings."""
-    return spark.createDataFrame(fetch_all_pages(fetch_page), ROLES_SCHEMA)
+    """Community-roles snapshot as a JVM-resident DataFrame (account,
+    role), ready for sync.mutings.apply_community_mutings."""
+    return driver_frame(spark, fetch_all_pages(fetch_page), ROLES_SCHEMA)

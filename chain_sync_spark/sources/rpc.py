@@ -25,10 +25,13 @@ from collections.abc import Callable, Sequence
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from chain_sync_spark.sources.blocks import OP_STREAM_SCHEMA
+from chain_sync_spark.sources.frames import driver_frame
 
 GET_OPS_METHOD = "condenser_api.get_ops_in_block"
+# OP_STREAM_SCHEMA with the block timestamp still an ISO string
+_RAW_OP_SCHEMA = "block_num long, ts string, op_type string, op string"
 
 
 def build_block_requests(start_block: int, n_blocks: int) -> list[dict]:
@@ -74,21 +77,14 @@ def ops_from_rpc(
     start_block: int,
     responses: Sequence[dict],
 ) -> DataFrame:
-    """Parsed responses as an op-stream DataFrame (ISO timestamp
-    strings are cast by the schema)."""
-    rows = [
-        (b, _parse_ts(ts), t, op)
-        for b, ts, t, op in parse_rpc_responses(start_block, responses)
-    ]
-    return spark.createDataFrame(rows, OP_STREAM_SCHEMA)
-
-
-def _parse_ts(ts):
-    from datetime import datetime
-
-    if ts is None or not isinstance(ts, str):
-        return ts
-    return datetime.fromisoformat(ts.replace("Z", "+00:00")).replace(tzinfo=None)
+    """Parsed responses as an op-stream DataFrame (``OP_STREAM_SCHEMA``),
+    held in the JVM (``sources.frames``). Spark casts the ISO block
+    timestamps in the session time zone, the same parse as
+    ``blocks.ops_from_json``, so both sources yield the same rows."""
+    rows = parse_rpc_responses(start_block, responses)
+    return driver_frame(spark, rows, _RAW_OP_SCHEMA).withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
 
 
 def http_transport(timeout: float = 10.0) -> Callable[[str, list[dict]], list[dict]]:

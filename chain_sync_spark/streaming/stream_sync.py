@@ -33,6 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 from chain_sync_spark.sources.blocks import OP_STREAM_SCHEMA
 from chain_sync_spark.sources.checkpoint import recover_swap as _recover_store
 from chain_sync_spark.sources.checkpoint import swap_dir
+from chain_sync_spark.sources.frames import driver_frame
 
 
 def stream_ops_from_json(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -385,7 +386,7 @@ def read_store_table(
                 if compacted < bid <= committed:
                     paths.append(os.path.join(table_dir, d))
     if not paths:
-        return spark.createDataFrame([], schema)
+        return driver_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(*paths)
 
 
@@ -1073,7 +1074,7 @@ def probe_cms(spark, store_dir: str, terms: list[str]) -> DataFrame:
 
     sketch = spark.read.parquet(store_dir)
     probes = (
-        spark.createDataFrame([(t,) for t in terms], "term string")
+        driver_frame(spark, [(t,) for t in terms], "term string")
         .select(
             "term",
             F.explode(F.array(*[F.lit(r) for r in range(CMS_ROWS)])).alias("r"),
@@ -1134,7 +1135,7 @@ def probe_bloom(spark, store_dir: str, keys: list[str]) -> DataFrame:
     from chain_sync_spark.operators.incremental import bloom_positions
 
     occ = spark.read.parquet(store_dir).withColumn("occ", F.lit(1))
-    probes = spark.createDataFrame([(k,) for k in keys], "key string").select(
+    probes = driver_frame(spark, [(k,) for k in keys], "key string").select(
         "key", F.explode(bloom_positions(F.col("key"))).alias("bit")
     )
     return (

@@ -32,6 +32,17 @@ Scale design (100 TB):
   of posts, posts_index and accounts passes its declared schema
   (``POSTS_SCHEMA`` / ``INDEX_SCHEMA`` / ``ACCOUNTS_SCHEMA``), so no
   footer is read to infer one.
+* **no Python on the scan path, no recompiles in a warm round** — a
+  round scans its batch about 15 times (the ``max(block_num)``
+  pre-scan, the stats fold, every handler and merge plan), so every
+  relation built from driver-side rows (the RPC batch, the roles
+  snapshot, the typed empty tables) goes through
+  ``sources.frames.driver_frame``: an Arrow-backed local relation
+  that lives in the JVM, where a ``createDataFrame(list)`` relation
+  would start Python-worker tasks on each scan. ``session.get_spark``
+  sizes the codegen cache above a round's ~135 generated classes, so
+  a warm round reuses them (performance only; results never depend
+  on it).
 * Each merge consumes its updates plan once (merge.py caches across
   the touched-partition scan and the final write), and empty op
   sub-streams short-circuit before any join.
@@ -52,6 +63,7 @@ from pyspark.sql import functions as F
 
 from chain_sync_spark.sources.checkpoint import read_cursor, write_cursor
 from chain_sync_spark.sources.checkpoint import recover_swap as recover_table
+from chain_sync_spark.sources.frames import driver_frame
 from chain_sync_spark.sync.classify import VOTE_SCHEMA, classify
 from chain_sync_spark.functions.hashing import surrogate_id
 from chain_sync_spark.sync.handlers import (
@@ -151,7 +163,7 @@ class SyncEngine:
         recover_table(self.posts_dir, depth=2)
         if os.path.exists(self.posts_dir):
             return self.spark.read.schema(POSTS_SCHEMA).parquet(self.posts_dir)
-        return self.spark.createDataFrame([], POSTS_SCHEMA)
+        return driver_frame(self.spark, [], POSTS_SCHEMA)
 
     def posts_index(self) -> DataFrame:
         """The slim (post_id, year, month) location index. Bootstraps
@@ -172,7 +184,7 @@ class SyncEngine:
             )
         if os.path.exists(self.posts_index_dir):
             return self.spark.read.schema(INDEX_SCHEMA).parquet(self.posts_index_dir)
-        return self.spark.createDataFrame([], INDEX_SCHEMA)
+        return driver_frame(self.spark, [], INDEX_SCHEMA)
 
     def process_batch(
         self,

@@ -220,3 +220,124 @@ def test_paginated_roles_over_http(spark, rpc_servers):
     got = {r["account"]: r["role"] for r in snap.collect()}
     assert len(got) == 5
     assert got["acct00"] == "muted" and got["acct01"] == "member"
+
+
+# ---------------------------------------------------------------------------
+# Driver-built relations (sources.frames): JVM-resident, session-TZ parse
+# ---------------------------------------------------------------------------
+
+import time
+
+
+def _lineage(df):
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+@pytest.fixture()
+def new_york_process_tz(monkeypatch):
+    """The driver process in a non-UTC local zone (the session stays UTC)."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_rpc_and_json_sources_yield_equal_rows(spark, tmp_path, new_york_process_tz):
+    """Both op sources parse block timestamps in the session time zone,
+    whatever the driver process's local zone: an end-of-month block
+    stays in its month, tz-aware stamps keep their instant, a missing
+    stamp stays null."""
+    from chain_sync_spark.sources.blocks import ops_from_json
+
+    stamps = [
+        "2024-01-31T23:30:00",          # one hour from a month edge
+        "2024-01-31T23:30:00.123456",
+        "2024-01-31T23:30:00Z",
+        "2024-02-01T01:30:00+05:00",     # = 2024-01-31 20:30 UTC
+        None,
+    ]
+    responses = []
+    with open(tmp_path / "ops.json", "w") as f:
+        for k, ts in enumerate(stamps):
+            payload = {"voter": f"v{k}", "author": "a", "permlink": "p", "weight": 1}
+            item = {"op": ["vote", payload]}
+            if ts is not None:
+                item["timestamp"] = ts
+            responses.append({"id": k, "result": [item]})
+            f.write(json.dumps({"block_num": 40 + k, "ts": ts, "op_type": "vote",
+                                "op": json.dumps(payload)}) + "\n")
+
+    def shown(df):
+        return sorted(
+            df.selectExpr("block_num", "cast(ts as string) AS ts", "op_type", "op").collect()
+        )
+
+    rpc = shown(ops_from_rpc(spark, 40, responses))
+    assert rpc == shown(ops_from_json(spark, str(tmp_path / "ops.json")))
+    assert [r["ts"] for r in rpc] == [
+        "2024-01-31 23:30:00", "2024-01-31 23:30:00.123456", "2024-01-31 23:30:00",
+        "2024-01-31 20:30:00", None,
+    ]
+
+
+def test_malformed_rpc_timestamp_aborts_before_any_write(spark, tmp_path):
+    """An RPC block timestamp Spark cannot parse fails run()'s first
+    query, before any merge or cursor write."""
+    import os
+
+    from chain_sync_spark.sync.engine import SyncEngine
+
+    bad = [{"id": 0, "result": [{"op": ["vote", {"voter": "v", "author": "a",
+                                                  "permlink": "p", "weight": 1}],
+                                 "timestamp": "not a time"}]}]
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        SyncEngine(spark, str(tmp_path)).run(ops_from_rpc(spark, 0, bad))
+    assert os.listdir(tmp_path) == []
+
+
+def test_driver_built_relations_run_no_python(spark, tmp_path):
+    """The relations the sync path builds from driver rows live in the
+    JVM: no scan of them starts a Python worker."""
+    from chain_sync_spark.streaming.stream_sync import read_store_table
+    from chain_sync_spark.sync.engine import SyncEngine
+
+    eng = SyncEngine(spark, str(tmp_path / "store"))
+    frames = {
+        "ops_from_rpc": ops_from_rpc(spark, 1000, _responses(1000)),
+        "roles_snapshot": roles_snapshot(
+            spark, lambda c: [] if c else [("acct1", "muted"), ("acct2", "member")]
+        ),
+        "existing_posts": eng.existing_posts(),
+        "posts_index": eng.posts_index(),
+        "read_store_table": read_store_table(
+            spark, str(tmp_path / "stream"), "t", "k string, n long"
+        ),
+    }
+    for name, df in frames.items():
+        assert "PythonRDD" not in _lineage(df), name
+    assert frames["ops_from_rpc"].count() == 2
+    assert frames["roles_snapshot"].count() == 2
+
+
+def test_rpc_batch_without_ops_is_typed_and_skipped(spark, tmp_path):
+    """A poll whose blocks carry no ops gives a typed empty frame, and
+    run() passes over empty blocks by the P3 path: the cursor advances
+    and the heartbeat fires with no ops; no merge runs for them."""
+    import os
+
+    from chain_sync_spark.sync.engine import SyncEngine
+
+    empty = ops_from_rpc(spark, 500, [{"id": k, "result": []} for k in range(3)])
+    assert empty.schema == spark.createDataFrame([], OP_STREAM_SCHEMA).schema
+    assert empty.count() == 0 and "PythonRDD" not in _lineage(empty)
+    beats = []
+    eng = SyncEngine(spark, str(tmp_path), heartbeat=beats.append)
+    assert eng.run(empty) == 0 and beats == []  # nothing to consume
+
+    # blocks 0-1 are empty, block 2 holds the ops
+    responses = [{"id": 0, "result": []}, {"id": 1, "result": []}]
+    responses += [{**r, "id": 2} for r in _responses(2)[:1]]
+    assert eng.run(ops_from_rpc(spark, 0, responses), batch_size=1) == 3
+    assert [(b["batch_lo"], b["n_ops"]) for b in beats] == [(0, 0), (1, 0), (2, 2)]
+    assert os.path.isdir(tmp_path / "posts")

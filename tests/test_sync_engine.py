@@ -963,3 +963,39 @@ def test_recovery_repairs_previous_revision_leftovers(tmp_path, leftover):
     assert snapshot() == want
     assert os.listdir(tmp_path) == ["posts"]
     assert _table_layout_ok(table, ["year", "month"])
+
+
+def test_warm_live_round_reuses_compiled_code(spark, tmp_path):
+    """A live round's generated classes stay in the codegen cache
+    between rounds: after one warm-up round, a second round of the
+    same shape compiles only the few classes whose code inlines a
+    round-specific literal. With Spark's default 100-entry cache the
+    round's ~135 classes evict each other and every round recompiles
+    all of them."""
+    from chain_sync_spark.sources.rpc import ops_from_rpc
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled():
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
+    def poll(lo, n=5):
+        stamp = lambda b: f"2024-03-05T12:{b // 60:02d}:{b % 60:02d}"  # noqa: E731
+        meta = json.dumps({"profile": {"name": "n"}})
+        return [
+            {"id": k, "result": [
+                {"op": ["comment", _comment(f"u{b % 7}", f"p{b}")], "timestamp": stamp(b)},
+                {"op": ["vote", _vote(f"v{b % 5}", f"u{(b - 1) % 7}", f"p{b - 1}", 100)],
+                 "timestamp": stamp(b)},
+                {"op": ["account_update", {"account": f"u{b % 7}", "json_metadata": meta}],
+                 "timestamp": stamp(b)},
+            ]}
+            for k, b in enumerate(range(lo, lo + n))
+        ]
+
+    eng = SyncEngine(spark, str(tmp_path))
+    for lo in (0, 5):  # the first round creates the store; the second warms up
+        eng.run(ops_from_rpc(spark, lo, poll(lo)))
+    before = compiled()
+    assert eng.run(ops_from_rpc(spark, 10, poll(10))) == 15
+    assert compiled() - before < 30
