@@ -11,9 +11,18 @@ Scale design (100 TB):
 * **posts_index** — a slim, hash-bucketed (post_id → year, month)
   table maintained alongside the posts table. The per-round vote
   existence probe (J1) and all partition resolution run against this
-  index, never against the full posts table: per-round read cost is
-  O(index), not O(posts). The index merge itself is partition-pruned
-  on `pmod(post_id, N_INDEX_BUCKETS)`.
+  index, never against the full posts table. The index merge itself
+  is partition-pruned on `pmod(post_id, N_INDEX_BUCKETS)`.
+* **O(batch) partition resolution, merges that read only their own
+  target** — the round's stats job already collects the (post_id,
+  bucket) of every post the batch can write, so the driver reads
+  just those rows of just those ``bucket=`` dirs of posts_index (a
+  row-group-pruned pyarrow read, no Spark job) before any merge
+  starts. That slice resolves partitions and votes, so a merge reads
+  its own target and driver-held frames only, never a directory
+  another merge swaps, and the posts, posts_index and accounts
+  merges of a round run concurrently. Per-round read cost is
+  O(batch), not O(index).
 * **accounts bucketing** — accounts are partitioned by a stable hash
   bucket of the name, so the per-round accounts MERGE rewrites only
   the buckets the batch touches instead of the whole table.
@@ -36,7 +45,7 @@ Scale design (100 TB):
   round scans its batch about 15 times (the ``max(block_num)``
   pre-scan, the stats fold, every handler and merge plan), so every
   relation built from driver-side rows (the RPC batch, the roles
-  snapshot, the typed empty tables) goes through
+  snapshot, the index slice, the typed empty tables) goes through
   ``sources.frames.driver_frame``: an Arrow-backed local relation
   that lives in the JVM, where a ``createDataFrame(list)`` relation
   would start Python-worker tasks on each scan. ``session.get_spark``
@@ -44,8 +53,8 @@ Scale design (100 TB):
   a warm round reuses them (performance only; results never depend
   on it).
 * Each merge consumes its updates plan once (merge.py caches across
-  the touched-partition scan and the final write), and empty op
-  sub-streams short-circuit before any join.
+  the touched-partition scan and the final write), and a batch with
+  no post or vote skips the posts-side merges.
 * P3/P4 stream guards (listener.js:114,128-132): empty batches skip
   handler work; malformed ops (null payload/type) abort the round
   before any merge, so the cursor never advances past bad data.
@@ -55,16 +64,18 @@ from __future__ import annotations
 
 import os
 import time
+from collections import defaultdict
 from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chain_sync_spark.sources.checkpoint import read_cursor, write_cursor
 from chain_sync_spark.sources.checkpoint import recover_swap as recover_table
 from chain_sync_spark.sources.frames import driver_frame
-from chain_sync_spark.sync.classify import VOTE_SCHEMA, classify
+from chain_sync_spark.sync.classify import COMMENT_SCHEMA, VOTE_SCHEMA, classify
 from chain_sync_spark.functions.hashing import surrogate_id
 from chain_sync_spark.sync.handlers import (
     PROFILE_SCHEMA,
@@ -77,7 +88,7 @@ from chain_sync_spark.sync.merge import (
     keep_target,
     max_of,
     merge_parquet,
-    set_union,
+    set_add,
     take_source,
 )
 
@@ -111,8 +122,8 @@ N_ACCOUNT_BUCKETS = 64
 _LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
-def _bucket(col: str, n: int) -> F.Column:
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n)).cast("int")
+def _bucket(col: str | Column, n: int) -> Column:
+    return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
 
 
 @dataclass
@@ -187,48 +198,54 @@ class SyncEngine:
         return driver_frame(self.spark, [], INDEX_SCHEMA)
 
     def process_batch(
-        self,
-        ops: DataFrame,
-        type_counts: dict[str, int] | None = None,
-        vote_buckets: list[int] | None = None,
+        self, ops: DataFrame, post_keys: list[tuple[int, int]] | None = None
     ) -> None:
-        """One sync round over an op-stream micro-batch.
+        """One sync round over an op-stream micro-batch: one posts
+        merge (comment upserts and vote set-adds together), the
+        posts_index merge and the accounts merge, run CONCURRENTLY.
 
-        The accounts merge runs CONCURRENTLY with the posts/index/
-        votes chain: it touches a disjoint store and derives only from
-        the batch, so the Spark scheduler overlaps its jobs with the
-        chain's (thread-submitted jobs interleave; on a cluster the
-        two stores' IO overlaps the same way). Replay safety is
-        unchanged — the cursor advances only after BOTH paths commit,
-        and every merge is idempotent. The posts chain itself is
-        order-dependent (posts → index → vote set-add on the same
-        tables) and stays sequential.
+        The three merges write disjoint tables, and none reads a table
+        another one swaps: partition resolution and the vote existence
+        probe (J1) read a slice of posts_index taken on the driver
+        before any merge starts (``_index_slice``), so each merge reads
+        only its own target and driver-held frames. Replay safety is
+        unchanged: the caller advances the cursor only after all three
+        commit, and every merge is idempotent. The reply-tag merge (off
+        by default) reads the index the round just wrote, so it runs
+        after the three.
 
-        ``type_counts``: optional exact per-op_type row counts for
-        this batch (keys matching classify's types). When provided —
-        run() folds them into the batch-stats aggregate it already
-        pays — the posts chain's two emptiness probes come from the
-        dict instead of one Spark job each (classify filters on
-        exactly ``op_type == <type>``, so the counts are the probe,
-        r13 action census). Direct callers may omit it; the probes
-        then run as before.
-
-        ``vote_buckets``: optional distinct posts_index bucket ids of
-        this batch's vote keys (bounded by N_INDEX_BUCKETS).  When
-        provided — run() folds the collect_set into the same stats
-        aggregate (identical key arithmetic: from_json op → surrogate
-        author/permlink hash → pmod, r14 action census) — the vote
-        path's per-round distinct+collect job is skipped.  Direct
-        callers may omit it; the collect then runs as before."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        ``post_keys``: the batch's ``batch_stats`` keys; computed with
+        one stats job when omitted."""
         typed = classify(ops)
         comments, votes, accounts = typed["comment"], typed["vote"], typed["account_update"]
+        if post_keys is None:
+            post_keys = batch_stats(ops)[2]
 
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            acct_future = pool.submit(self._merge_accounts, comments, votes, accounts)
-            self._process_posts_chain(comments, votes, type_counts, vote_buckets)
-            acct_future.result()  # re-raises merge errors before commit
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            # accounts first: it is the round's longest merge
+            futures = [pool.submit(self._merge_accounts, comments, votes, accounts)]
+            if post_keys:
+                futures += self._submit_posts_merges(pool, comments, votes, post_keys)
+            for future in futures:
+                future.result()  # re-raises merge errors before commit
+
+        if self.enable_reply_tag_updates:
+            # reply-driven tag updates (intended handleReply, P7/J5):
+            # update-only, so a reply to a nonexistent post is dropped.
+            # Off by default: dead code in the shipped reference (see
+            # the dataclass field note).
+            tag_updates = replies_to_tag_updates(comments).join(
+                self.posts_index().select("post_id", "year", "month"), "post_id"
+            )
+            merge_parquet(
+                self.spark,
+                self.posts_dir,
+                tag_updates,
+                key_cols=["post_id"],
+                partition_cols=["year", "month"],
+                partition_stable=True,  # year/month come from the index
+                target_schema=POSTS_SCHEMA,
+            )
 
     def _merge_accounts(self, comments, votes, accounts) -> None:
         # accounts: last_active max + latest profile (A2/F9), hash-
@@ -247,64 +264,80 @@ class SyncEngine:
             target_schema=ACCOUNTS_SCHEMA,
         )
 
-    def _process_posts_chain(
-        self,
-        comments: DataFrame,
-        votes: DataFrame,
-        type_counts: dict[str, int] | None = None,
-        vote_buckets: list[int] | None = None,
-    ) -> None:
-        idx = self.posts_index()
-        slim_idx = idx.select("post_id", "year", "month")
+    def _index_slice(self, post_keys: list[tuple[int, int]]) -> DataFrame:
+        """The posts_index rows of ``post_keys`` (post_id, bucket), read
+        on the driver from only the bucket directories the keys hash
+        to; ``merge._sorted`` clusters each file by post_id, so the
+        filter prunes row groups. O(batch), not O(index), and it starts
+        no Spark job."""
+        import pyarrow.parquet as pq
 
-        # posts: comment upserts (month/year partitioned, S9/S12).
-        # Partition resolution against the slim index — the full posts
-        # table is never scanned on the write path.
+        self.posts_index()  # recovery, and the bootstrap of an old store
+        ids: dict[int, list[int]] = defaultdict(list)
+        for post_id, bucket in post_keys:
+            ids[bucket].append(post_id)
+        rows: list[tuple] = []
+        for bucket, wanted in ids.items():
+            leaf = os.path.join(self.posts_index_dir, f"bucket={bucket}")
+            if os.path.isdir(leaf):
+                found = pq.read_table(
+                    leaf, columns=["post_id", "year", "month"], filters=[("post_id", "in", wanted)]
+                )
+                rows += zip(*(col.to_pylist() for col in found.columns))
+        return driver_frame(self.spark, rows, "post_id long, year int, month int")
+
+    def _submit_posts_merges(
+        self, pool: ThreadPoolExecutor, comments: DataFrame, votes: DataFrame,
+        post_keys: list[tuple[int, int]],
+    ) -> list[Future]:
+        """Build the round's posts and posts_index merges and submit
+        both to ``pool``."""
+        located = self._index_slice(post_keys)
+        batch_ids = comments.filter(F.col("parent_author") == "").select(
+            surrogate_id("author", "permlink").alias("post_id")
+        )
         auth = None
         if self.authoritative is not None:
             # prune the snapshot to the batch's post ids so the J3
             # override join stays O(batch) — the set-based analog of
             # the reference's per-id getContent fetch
-            batch_ids = comments.filter(F.col("parent_author") == "").select(
-                surrogate_id("author", "permlink").alias("post_id")
-            )
             auth = self.authoritative.join(batch_ids, "post_id", "left_semi")
         post_upserts = comments_to_post_upserts(comments, authoritative=auth)
-        have_comments = (
-            type_counts["comment"] > 0
-            if type_counts is not None
-            else not comments.isEmpty()
+        # votes (S11/A1): a vote counts when its post exists (J1): in the
+        # index, or among this batch's own posts (a same-batch comment +
+        # vote, the reference's handler order)
+        known = located.select("post_id").unionByName(batch_ids)
+        vote_upserts = votes_to_vote_upserts(votes, known).select(
+            "post_id",
+            F.col("upvotes_add").alias("upvotes"),
+            F.col("downvotes_add").alias("downvotes"),
         )
-        if have_comments:
-            # DELIBERATELY SEQUENTIAL: a round-9 experiment ran this
-            # merge concurrently with the index merge below (the
-            # accounts-path pattern; both derive from post_upserts)
-            # and measured ~11% off a 300-block round, noise-band at
-            # 1000 — but the posts merge's partition RESOLUTION reads
-            # posts_index (slim_idx) while the index merge SWAPS those
-            # bucket directories: a rename-under-reader race Spark's
-            # lazy file listing turns into FileNotFoundException task
-            # failures under load. The stores are not disjoint, unlike
-            # the accounts path, so the fold was reverted (BENCH.md
-            # round 9 records the measurement and the decision).
-            merge_parquet(
+        # one row per touched post: its upsert, its vote set-adds, or
+        # both. A vote-only row carries nulls elsewhere (take_source
+        # keeps the target) and no year/month (resolved from the slice).
+        updates = (
+            post_upserts.drop("upvotes", "downvotes")
+            .join(vote_upserts, "post_id", "full_outer")
+            .select(*post_upserts.columns)
+        )
+        return [
+            pool.submit(
+                merge_parquet,
                 self.spark,
                 self.posts_dir,
-                post_upserts,
+                updates,
                 key_cols=["post_id"],
-                merge_exprs={
-                    # votes accumulate across rounds; a re-upserted post
-                    # must not clear them (scripted set-add semantics)
-                    "upvotes": keep_target,
-                    "downvotes": keep_target,
-                },
+                # votes accumulate across rounds; a null source (a post
+                # upserted with no votes this round) keeps the target
+                merge_exprs={"upvotes": set_add, "downvotes": set_add},
                 partition_cols=["year", "month"],
-                partition_source=slim_idx,
+                partition_source=located,
                 target_schema=POSTS_SCHEMA,
-            )
-            # maintain the index (insert-only: the resolved location of
-            # an existing post never changes)
-            merge_parquet(
+            ),
+            # the index is insert-only: the resolved location of an
+            # existing post never changes
+            pool.submit(
+                merge_parquet,
                 self.spark,
                 self.posts_index_dir,
                 post_upserts.select("post_id", "year", "month").withColumn(
@@ -315,146 +348,41 @@ class SyncEngine:
                 partition_cols=["bucket"],
                 partition_stable=True,
                 target_schema=INDEX_SCHEMA,
-            )
-            idx = self.posts_index()  # same-batch comment+vote resolves
-            slim_idx = idx.select("post_id", "year", "month")
-
-            if self.enable_reply_tag_updates:
-                # reply-driven tag updates (intended handleReply,
-                # P7/J5): update-only — a reply to a nonexistent post
-                # is dropped. Off by default: dead code in the shipped
-                # reference (see the dataclass field note).
-                tag_updates = replies_to_tag_updates(comments).join(slim_idx, "post_id")
-                merge_parquet(
-                    self.spark,
-                    self.posts_dir,
-                    tag_updates,
-                    key_cols=["post_id"],
-                    partition_cols=["year", "month"],
-                    partition_stable=True,  # year/month come from the index
-                    target_schema=POSTS_SCHEMA,
-                )
-
-        # votes: set-add into the posts table (S11/A1). The existence
-        # probe (J1) runs against the slim index, not the posts table —
-        # and only against the index BUCKETS the batch's keys hash to,
-        # so probe cost is O(touched buckets), not O(index). (On a
-        # warehouse with dynamic partition pruning / Delta this filter
-        # is derived automatically from the join.)
-        have_votes = (
-            type_counts["vote"] > 0
-            if type_counts is not None
-            else not votes.isEmpty()
-        )
-        if have_votes:
-            if vote_buckets is None:
-                vote_buckets = [
-                    r["b"]
-                    for r in votes.select(
-                        F.pmod(
-                            F.xxhash64(surrogate_id("author", "permlink")),
-                            F.lit(N_INDEX_BUCKETS),
-                        ).cast("int").alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                ]
-            probe_idx = idx.filter(F.col("bucket").isin(vote_buckets)).select(
-                "post_id", "year", "month"
-            )
-            vote_upserts = votes_to_vote_upserts(votes, probe_idx).select(
-                "post_id",
-                F.col("upvotes_add").alias("upvotes"),
-                F.col("downvotes_add").alias("downvotes"),
-            )
-            keyed = vote_upserts.join(probe_idx, "post_id")
-            merge_parquet(
-                self.spark,
-                self.posts_dir,
-                keyed,
-                key_cols=["post_id"],
-                merge_exprs={"upvotes": set_union, "downvotes": set_union},
-                partition_cols=["year", "month"],
-                partition_stable=True,  # year/month come from the index
-                target_schema=POSTS_SCHEMA,
-            )
+            ),
+        ]
 
     def run(self, source: DataFrame, batch_size: int = 30, stop_block: int | None = None) -> int:
         """Reference main loop (listener.js:157-195): consume
         `source` from the checkpoint cursor in `batch_size` block
         rounds; advance the cursor only after all merges commit.
-        Returns the final cursor."""
+        With `stop_block`, cover `[cursor, stop_block)` whatever the
+        source holds (a block with no ops is an empty round); without
+        it, stop after the source's last block. Returns the final
+        cursor."""
         cursor = read_cursor(self.spark, self.cursor_path, default=0)
-        max_block_row = source.agg(F.max("block_num")).first()
-        if max_block_row is None or max_block_row[0] is None:
-            return cursor
-        last = int(max_block_row[0])
         if stop_block is not None:
-            last = min(last, stop_block - 1)
+            last = stop_block - 1
+        else:
+            max_block_row = source.agg(F.max("block_num")).first()
+            if max_block_row is None or max_block_row[0] is None:
+                return cursor
+            last = int(max_block_row[0])
         while cursor <= last:
             t0 = time.perf_counter()
             hi = min(cursor + batch_size, last + 1)
             batch = source.filter(
                 (F.col("block_num") >= cursor) & (F.col("block_num") < hi)
             )
-            # P3/P4 guards in one pass: count rows + malformed rows —
-            # plus the per-type counts the posts chain's emptiness
-            # probes need, so the same single job replaces the two
-            # isEmpty() jobs process_batch used to run (r13) — plus
-            # the distinct vote-key index buckets (bounded by
-            # N_INDEX_BUCKETS), so the vote path's per-round
-            # distinct+collect job folds in here too (r14).  The
-            # bucket arithmetic is byte-identical to the probe path:
-            # from_json(op) → surrogate author/permlink key →
-            # xxhash64 → pmod (classify extracts the same fields from
-            # the same payload; a test pins the equivalence).
-            vp = F.from_json("op", VOTE_SCHEMA)
-            vbucket = F.pmod(
-                F.xxhash64(surrogate_id(vp["author"], vp["permlink"])),
-                F.lit(N_INDEX_BUCKETS),
-            ).cast("int")
-            stats = batch.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.when(F.col("op").isNull() | F.col("op_type").isNull(), 1).otherwise(0)
-                ).alias("bad"),
-                F.count(F.when(F.col("op_type") == "comment", 1)).alias("n_comment"),
-                F.count(F.when(F.col("op_type") == "vote", 1)).alias("n_vote"),
-                F.collect_set(
-                    F.when(F.col("op_type") == "vote", vbucket)
-                ).alias("vote_buckets"),
-            ).first()
-            if stats["bad"]:
+            n_ops, n_bad, post_keys = batch_stats(batch)
+            if n_bad:
                 # reference exits hard on failed blocks (listener.js:128-132)
-                raise ValueError(
-                    f"failed batch [{cursor}, {hi}): {stats['bad']} malformed ops"
-                )
-            if stats["n"] == 0:
-                # P3: empty batch — advance the cursor, skip all work,
-                # but still beat: the reference pings its monitor after
-                # EVERY round (listener.js:145), so a liveness monitor
-                # must not see silence across long empty block spans
-                lo, cursor = cursor, hi
-                write_cursor(self.spark, self.cursor_path, cursor, dry_run=self.dry_run)
-                if self.heartbeat is not None:
-                    self.heartbeat(
-                        {
-                            "cursor": cursor,
-                            "batch_lo": lo,
-                            "batch_hi": hi,
-                            "n_ops": 0,
-                            "elapsed_s": round(time.perf_counter() - t0, 3),
-                        }
-                    )
-                continue
-            self.process_batch(
-                batch,
-                type_counts={
-                    "comment": int(stats["n_comment"]),
-                    "vote": int(stats["n_vote"]),
-                },
-                vote_buckets=[int(b) for b in stats["vote_buckets"]],
-            )
+                raise ValueError(f"failed batch [{cursor}, {hi}): {n_bad} malformed ops")
+            if n_ops:
+                self.process_batch(batch, post_keys=post_keys)
+            # P3: an empty batch skips all work but still advances the
+            # cursor and beats: the reference pings its monitor after
+            # EVERY round (listener.js:145), so a liveness monitor must
+            # not see silence across long empty block spans
             lo, cursor = cursor, hi
             write_cursor(self.spark, self.cursor_path, cursor, dry_run=self.dry_run)
             if self.heartbeat is not None:
@@ -464,8 +392,35 @@ class SyncEngine:
                         "cursor": cursor,
                         "batch_lo": lo,
                         "batch_hi": hi,
-                        "n_ops": int(stats["n"]),
+                        "n_ops": n_ops,
                         "elapsed_s": round(time.perf_counter() - t0, 3),
                     }
                 )
         return cursor
+
+
+def batch_stats(batch: DataFrame) -> tuple[int, int, list[tuple[int, int]]]:
+    """One Spark job over an op batch: its row count, its malformed
+    rows (null payload or type: the P4 guard), and the distinct
+    (post_id, bucket) of every post the round may write: each root
+    comment and each vote target. The keys come from the raw
+    payload through classify's schemas and the handlers' key arithmetic
+    (``surrogate_id`` → xxhash64 → pmod), so they are exactly the keys
+    the handlers derive."""
+    kind = F.col("op_type")
+    c = F.from_json("op", COMMENT_SCHEMA)
+    v = F.from_json("op", VOTE_SCHEMA)
+    post_id = F.when(kind == "vote", surrogate_id(v["author"], v["permlink"])).when(
+        (kind == "comment") & (c["parent_author"] == ""), surrogate_id(c["author"], c["permlink"])
+    )
+    row = batch.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col("op").isNull() | kind.isNull(), 1)).alias("bad"),
+        F.collect_set(
+            F.when(
+                post_id.isNotNull(),
+                F.struct(post_id.alias("post_id"), _bucket(post_id, N_INDEX_BUCKETS).alias("bucket")),
+            )
+        ).alias("post_keys"),
+    ).first()
+    return row["n"], row["bad"], [(k["post_id"], k["bucket"]) for k in row["post_keys"]]

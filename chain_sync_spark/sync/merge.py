@@ -59,6 +59,13 @@ def set_union(t: Column, s: Column) -> Column:
     )
 
 
+def set_add(t: Column, s: Column) -> Column:
+    """`set_union` for a source that also carries rows with nothing to
+    add: a null source keeps the target as it is, so a row nobody voted
+    on keeps null arrays instead of turning them into `[]`."""
+    return F.when(s.isNull(), t).otherwise(set_union(t, s))
+
+
 def merge_parquet(
     spark: SparkSession,
     target_dir: str,

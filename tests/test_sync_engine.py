@@ -484,6 +484,28 @@ def test_heartbeat_fires_per_committed_round(spark, tmp_path):
     assert [b["batch_lo"] for b in beats2] == [0, 10]
 
 
+def test_run_with_stop_block_covers_blocks_without_ops(spark, tmp_path):
+    """With `stop_block`, run() covers [cursor, stop_block) whatever the
+    source holds: a source with no rows, or one that ends early, still
+    advances the cursor through empty rounds, each with its beat. (The
+    listener polls a block range; a range whose blocks carry no ops
+    must not look like silence to a liveness monitor.)"""
+    from chain_sync_spark.sources.checkpoint import read_cursor
+
+    beats = []
+    eng = SyncEngine(spark, str(tmp_path), heartbeat=beats.append)
+    empty = spark.createDataFrame([], OP_STREAM_SCHEMA)
+    assert eng.run(empty, batch_size=10, stop_block=25) == 25
+    assert [(b["batch_lo"], b["batch_hi"], b["n_ops"]) for b in beats] == [
+        (0, 10, 0), (10, 20, 0), (20, 25, 0)
+    ]
+    assert read_cursor(spark, f"{tmp_path}/checkpoint") == 25
+    ops = spark.createDataFrame([_op(26, TS, "comment", _comment("alice", "p1"))], OP_STREAM_SCHEMA)
+    assert eng.run(ops, batch_size=10, stop_block=40) == 40
+    assert [(b["batch_lo"], b["n_ops"]) for b in beats[3:]] == [(25, 1), (35, 0)]
+    assert _posts(spark, tmp_path).count() == 1
+
+
 @pytest.mark.slow
 def test_accounts_merge_failure_aborts_round(spark, tmp_path, ops_batch1, monkeypatch):
     """The accounts merge runs in a worker thread concurrent with the
@@ -596,94 +618,135 @@ def test_first_write_empty_updates_materializes_no_table(spark, tmp_path):
     assert spark.read.parquet(tgt_part).count() == 2
 
 
-def test_process_batch_type_counts_matches_probe(spark, tmp_path, ops_batch1):
-    """r13: run() folds per-type counts into the batch-stats job and
-    process_batch skips its two isEmpty() probes when given them.
-    Both paths must produce byte-identical stores."""
-    a = SyncEngine(spark, str(tmp_path / "a"))
-    a.process_batch(ops_batch1)  # probe path (no counts)
-    b = SyncEngine(spark, str(tmp_path / "b"))
-    b.process_batch(
-        ops_batch1,
-        type_counts={"comment": 4, "vote": 4},  # exact counts in ops_batch1
-    )
-    def rows(store, sub):
-        df = spark.read.parquet(f"{tmp_path}/{store}/{sub}")
-        return sorted(repr(r) for r in df.select(sorted(df.columns)).collect())
-
-    for sub in ("posts", "accounts"):
-        assert rows("a", sub) == rows("b", sub), (
-            f"{sub} diverged between probe and type_counts paths"
-        )
-
-
-def test_run_vote_bucket_fold_matches_probe(spark, ops_batch1):
-    """r14: run() folds the vote path's distinct-bucket collect into
-    the same batch-stats aggregate that already carries the per-type
-    counts.  The folded expression (from_json on the raw op payload)
-    must produce exactly the bucket set the probe path computes from
-    classify's extracted columns — same surrogate key, same xxhash64,
-    same pmod."""
+def test_batch_stats_post_keys_match_classify(spark, ops_batch1):
+    """run()'s one stats job collects the (post_id, bucket) of every
+    post a round may write, from the raw op payload. They must be
+    exactly the keys the handlers derive from classify's columns: the
+    root comments' and the vote targets', through the same surrogate
+    key, xxhash64 and pmod. A key missed here would leave its post out
+    of the round's index slice (a vote dropped, an edit written to a
+    second partition)."""
     from chain_sync_spark.functions.hashing import surrogate_id
-    from chain_sync_spark.sync.classify import VOTE_SCHEMA, classify
-    from chain_sync_spark.sync.engine import N_INDEX_BUCKETS
+    from chain_sync_spark.sync.classify import classify
+    from chain_sync_spark.sync.engine import N_INDEX_BUCKETS, batch_stats
 
-    vp = F.from_json("op", VOTE_SCHEMA)
-    folded = set(
-        ops_batch1.agg(
-            F.collect_set(
-                F.when(
-                    F.col("op_type") == "vote",
-                    F.pmod(
-                        F.xxhash64(surrogate_id(vp["author"], vp["permlink"])),
-                        F.lit(N_INDEX_BUCKETS),
-                    ).cast("int"),
-                )
-            ).alias("b")
-        ).first()["b"]
+    n_ops, n_bad, post_keys = batch_stats(ops_batch1)
+    assert (n_ops, n_bad) == (9, 0)
+    got = set(post_keys)
+
+    typed = classify(ops_batch1)
+    roots = typed["comment"].filter(F.col("parent_author") == "")
+    ids = roots.select(surrogate_id("author", "permlink").alias("post_id")).union(
+        typed["vote"].select(surrogate_id("author", "permlink"))
     )
-    votes = classify(ops_batch1)["vote"]
-    probe = {
-        r["b"]
-        for r in votes.select(
-            F.pmod(
-                F.xxhash64(surrogate_id("author", "permlink")),
-                F.lit(N_INDEX_BUCKETS),
-            )
-            .cast("int")
-            .alias("b")
-        )
-        .distinct()
-        .collect()
+    want = {
+        (r[0], r[1])
+        for r in ids.select(
+            "post_id", F.pmod(F.xxhash64("post_id"), F.lit(N_INDEX_BUCKETS)).cast("int")
+        ).collect()
     }
-    assert folded == probe and folded
+    # alice/p1, carol/p2, dave/p3 and the vote target ghost/nope; the
+    # reply bob/r1 writes no post
+    assert got == want and len(got) == 4
 
 
-def test_process_batch_vote_buckets_matches_probe(spark, tmp_path, ops_batch1):
-    """r14: process_batch skips the vote-path distinct+collect job
-    when handed the batch's bucket set.  Both paths must produce
-    byte-identical stores — including when the handed set is the
-    FULL bucket range (a superset never drops an update: the probe
-    filter is an optimization, membership decides nothing)."""
-    from chain_sync_spark.sync.engine import N_INDEX_BUCKETS
+def _store_rows(spark, store, table):
+    df = spark.read.parquet(f"{store}/{table}")
+    return sorted(repr(r) for r in df.select(sorted(df.columns)).collect())
 
-    a = SyncEngine(spark, str(tmp_path / "a"))
-    a.process_batch(ops_batch1)  # probe path (no buckets handed)
-    b = SyncEngine(spark, str(tmp_path / "b"))
-    b.process_batch(
-        ops_batch1,
-        type_counts={"comment": 4, "vote": 4},
-        vote_buckets=list(range(N_INDEX_BUCKETS)),
+
+def test_posts_merge_reads_no_table_another_merge_swaps(spark, tmp_path, ops_batch1, monkeypatch):
+    """The posts merge runs beside the posts_index merge, which swaps
+    index bucket directories, so it must not read posts_index: partition
+    resolution and the vote existence probe use the slice read on the
+    driver before the merges start. Moving posts_index aside for exactly
+    the span of each posts merge (merges run one at a time here) leaves
+    the store equal to that of an undisturbed run."""
+    import os
+    import threading
+
+    from chain_sync_spark.sync import engine as engine_mod
+
+    batch2 = spark.createDataFrame(
+        [
+            _op(10, "2024-05-02 09:00:00", "comment", _comment("alice", "p1", body="moved")),
+            _op(10, "2024-05-02 09:00:00", "comment", _comment("erin", "p4")),
+            _op(11, "2024-05-02 09:00:00", "vote", _vote("v5", "carol", "p2", 100)),
+            _op(11, "2024-05-02 09:00:00", "vote", _vote("v6", "erin", "p4", -1)),
+        ],
+        OP_STREAM_SCHEMA,
     )
 
-    def rows(store, sub):
-        df = spark.read.parquet(f"{tmp_path}/{store}/{sub}")
-        return sorted(repr(r) for r in df.select(sorted(df.columns)).collect())
+    def sync(store):
+        eng = SyncEngine(spark, store)
+        eng.run(ops_batch1, batch_size=10)
+        eng.run(batch2, batch_size=10)
 
-    for sub in ("posts", "accounts"):
-        assert rows("a", sub) == rows("b", sub), (
-            f"{sub} diverged between probe and handed-bucket paths"
-        )
+    clean, moved = str(tmp_path / "clean"), str(tmp_path / "moved")
+    sync(clean)
+
+    real = engine_mod.merge_parquet
+    one_at_a_time = threading.Lock()
+    index = os.path.join(moved, "posts_index")
+
+    def index_aside_during_posts_merge(spark_, target_dir, *args, **kwargs):
+        with one_at_a_time:
+            if os.path.basename(target_dir) != "posts" or not os.path.isdir(index):
+                return real(spark_, target_dir, *args, **kwargs)
+            os.rename(index, index + ".aside")
+            try:
+                return real(spark_, target_dir, *args, **kwargs)
+            finally:
+                os.rename(index + ".aside", index)
+
+    monkeypatch.setattr(engine_mod, "merge_parquet", index_aside_during_posts_merge)
+    sync(moved)
+    monkeypatch.undo()
+    for table in ("posts", "posts_index", "accounts"):
+        assert _store_rows(spark, moved, table) == _store_rows(spark, clean, table), table
+
+
+def test_folded_posts_merge_matches_store_oracle(spark, tmp_path, monkeypatch):
+    """Comment upserts and vote set-adds reach posts in one merge. Over
+    two rounds: a vote before its post exists (dropped), a same-batch
+    comment and vote, a vote on an unknown post (dropped), and an edit
+    plus votes on a post of an older month (one row, in the old
+    partition). The store must equal the independent DuckDB oracle, and
+    a post nobody voted on keeps null vote arrays."""
+    import pathlib
+
+    monkeypatch.syspath_prepend(str(pathlib.Path(__file__).resolve().parent.parent / "perfbench"))
+    import oracle
+
+    jan, mar = "2024-01-10 08:00:00", "2024-03-05 12:00:00"
+    rows = [
+        (1, jan, "comment", _comment("alice", "old")),
+        (1, jan, "comment", _comment("bob", "quiet")),
+        (2, jan, "vote", _vote("v0", "carol", "late", 100)),       # before its post
+        (10, mar, "comment", _comment("carol", "late")),
+        (10, mar, "comment", _comment("dave", "new")),
+        (10, mar, "vote", _vote("v1", "dave", "new", 100)),        # same batch as its post
+        (11, mar, "vote", _vote("v2", "ghost", "none", 100)),      # unknown post
+        (11, mar, "comment", _comment("alice", "old", body="edited")),
+        (12, mar, "vote", _vote("v3", "alice", "old", 100)),
+        (12, mar, "vote", _vote("v4", "alice", "old", -10)),
+        (12, mar, "comment", _comment("erin", "reply", parent_author="alice",
+                                      parent_permlink="old")),
+    ]
+    rows = [(b, ts, t, json.dumps(p)) for b, ts, t, p in rows]
+    ops = spark.createDataFrame(
+        rows, "block_num long, ts string, op_type string, op string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    store = str(tmp_path)
+    assert SyncEngine(spark, store).run(ops, batch_size=10) == 13
+
+    assert oracle.store_mismatches(store, oracle.expected_store(rows, 13, [])) == []
+    posts = {r["permlink"]: r for r in _posts(spark, tmp_path).collect()}
+    assert (posts["old"]["year"], posts["old"]["month"], posts["old"]["text_body"]) == (
+        2024, 1, "edited")
+    assert (posts["old"]["upvotes"], posts["old"]["downvotes"]) == (["v3"], ["v4"])
+    for unvoted in ("quiet", "late"):
+        assert posts[unvoted]["upvotes"] is None and posts[unvoted]["downvotes"] is None
 
 
 def test_posts_index_bootstrap_crash_leaves_no_partial_index(spark, tmp_path, ops_batch1, monkeypatch):
