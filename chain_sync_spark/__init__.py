@@ -13,7 +13,6 @@ Layout:
     functions/  — scalar/column function library (JSON, hashing, text)
     sources/    — block-op source, checkpoint table
     sync/       — the batch-sync engine (classify → handlers → MERGE)
-    streaming/  — event-time windowed aggregation surface
 """
 
 from chain_sync_spark.session import get_spark

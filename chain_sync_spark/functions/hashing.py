@@ -10,18 +10,12 @@ We provide:
                         the fast path used by the sync engine.
   surrogate_id_md5    — md5 hex string: bit-identical across Spark and
                         DuckDB, used wherever an oracle compares keys.
-  surrogate_id_compat — byte-compatible with the reference's key
-                        (seedable XXH64 + base64), for migrating a
-                        store written by the reference. Arrow-batched
-                        pandas_udf (Python per row): the MIGRATION
-                        path, never the hot path.
+  xxh64               — pure-Python XXH64 core, equal to Spark's
+                        JVM xxhash64, for keys computed outside Spark.
 """
 
 from __future__ import annotations
 
-import base64
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -37,12 +31,11 @@ def surrogate_id_md5(*parts: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Seedable XXH64 (the byte-compat path the Spark builtin cannot be:
-# F.xxhash64's seed is fixed at 42, the reference uses 0xCAFEBABE).
-# Pure-Python XXH64 core, pinned correct by fuzzing against Spark's
-# own JVM implementation at seed 42 across every length class
-# (tests/test_properties.py) — so the only free parameter left is
-# the seed itself.
+# Seedable XXH64: the engine's post key computed in plain Python, with
+# no Spark job (xxh64(f"{author}/{permlink}".encode(), 42) equals
+# surrogate_id). Pure-Python core, pinned by fuzzing against Spark's
+# own JVM implementation at seed 42 across every length class and
+# against upstream xxHash's sanity vectors (tests/test_properties.py).
 # ---------------------------------------------------------------------------
 
 _XXP1 = 0x9E3779B185EBCA87
@@ -108,51 +101,3 @@ def xxh64(data: bytes, seed: int = 0) -> int:
     h = (h * _XXP3) & _M64
     h ^= h >> 32
     return h
-
-
-REFERENCE_KEY_SEED = 0xCAFEBABE
-
-
-def surrogate_id_compat(
-    *parts: Column | str, seed: int = REFERENCE_KEY_SEED
-) -> Column:
-    """The reference's EXACT document key:
-    base64(XXH64(author + "/" + permlink, 0xCAFEBABE))
-    (handlers/comments.js:14-17) — closing the documented
-    surrogate-key byte-compat delta for store migration. The 8 hash
-    bytes are base64'd in the order node-xxhash 0.3.0 emits them (the
-    raw in-memory uint64, i.e. LITTLE-endian on every platform the
-    reference deploys on); the XXH64 VALUE itself is pinned against
-    Spark's JVM implementation at seed 42 AND against the upstream
-    xxHash project's published sanity vectors (tests/
-    test_properties.py::test_xxh64_upstream_golden_vectors), so byte
-    order is the only encoding assumption and it is isolated here.
-
-    NULL semantics — a DOCUMENTED DIVERGENCE (ADVICE r12): NULL parts
-    behave like concat_ws (skipped), but the reference's JS template
-    literal ``${author}/${permlink}`` stringifies null/undefined as
-    the literal text "null"/"undefined", so a degenerate reference
-    row (null author or permlink) would carry a key this function
-    does not reproduce.  Such rows are malformed in the reference's
-    own data model (both fields come from required operation fields,
-    handlers/comments.js:14-17) and none can exist in a well-formed
-    store; if a migration encounters one, pre-substitute the literal
-    strings (F.coalesce(col, F.lit("null"))) before keying.  See
-    DEPLOY.md's migration section.
-
-    Arrow-batched pandas_udf, Python per row: use for one-time store
-    migration / backfill joins, never in the per-round hot path
-    (surrogate_id stays the engine key)."""
-
-    @F.pandas_udf("string")
-    def _enc(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            h = xxh64(v.encode("utf-8"), seed)
-            return base64.b64encode(h.to_bytes(8, "little")).decode("ascii")
-
-        return s.map(one)
-
-    cols = [F.col(p) if isinstance(p, str) else p for p in parts]
-    return _enc(F.concat_ws("/", *cols))

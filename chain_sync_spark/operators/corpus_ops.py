@@ -519,7 +519,7 @@ def lm_known_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: per-row bigram generation (no join) → corpus counts via
     groupBy(w1, w2) + join-back through score_against_lm — one
-    arithmetic shared with the streaming probe and lm_probe_newdocs.
+    arithmetic shared with lm_probe_newdocs.
     Hardened from a count-over-(w1, w2) window in round 9 (the same
     skew class as the span family: "of the" at 100 TB is one
     unsplittable window task, while the aggregate map-side-combines
@@ -560,9 +560,8 @@ LM_PROBE_MOD = 5  # doc_id % MOD == 0 is the probe batch; rest is stored
 
 
 def score_against_lm(counts: DataFrame, d: DataFrame) -> DataFrame:
-    """The LM SERVING arithmetic, shared verbatim by the streaming
-    probe (streaming/stream_sync.probe_lm) and its batch certifier
-    (lm_probe_newdocs): score a docs_words relation ``d`` (doc_id, w)
+    """The LM SERVING arithmetic behind lm_known_bigram_score and
+    lm_probe_newdocs: score a docs_words relation ``d`` (doc_id, w)
     against a summed bigram-count relation ``counts`` (w1, w2, cnt).
     A bigram absent from the model reads count 0 through the LEFT
     join — the unknown-bigram path lm_known_bigram_score (which
@@ -598,16 +597,13 @@ def score_against_lm(counts: DataFrame, d: DataFrame) -> DataFrame:
 
 
 def lm_probe_newdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch certifier of the streamed-LM SERVING path: the stored
-    corpus (doc_id % {LM_PROBE_MOD} != 0) builds the bigram model,
-    and every new-batch document (doc_id % {LM_PROBE_MOD} == 0) is
-    scored against it through score_against_lm — exactly what
-    streaming/stream_sync.probe_lm serves over a store maintained by
-    run_stream_lm, so this query's driver green certifies the
-    serving arithmetic including the unknown-bigram (count 0) path
-    that the self-scoring form never hits.  A pytest pins this
-    output equal to probe_lm over a stream-maintained store on the
-    same split.  Output covers batch docs with >= 1 bigram.
+    """Certifier of the LM SERVING path: the stored corpus
+    (doc_id % {LM_PROBE_MOD} != 0) builds the bigram model, and every
+    new-batch document (doc_id % {LM_PROBE_MOD} == 0) is scored
+    against it through score_against_lm, so this query's oracle
+    certifies the serving arithmetic including the unknown-bigram
+    (count 0) path that the self-scoring form never hits.  Output
+    covers batch docs with >= 1 bigram.
 
     Scale: the model is one map-side-combined aggregate
     (vocabulary²-bounded, usually far smaller); the probe side is
@@ -1107,9 +1103,9 @@ def profile_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpivots the 1-row result into a row per column.  The oracle
     intentionally takes the naive per-column UNION ALL route, so the
     hash match proves the single-pass rewrite. The agg+stack builder
-    is shared with the streaming profile partial
-    (operators/incremental.build_profile) so the two schemas cannot
-    drift apart."""
+    (operators/incremental.build_profile) is shared with
+    profile_column_stats_sketch, so the two schemas cannot drift
+    apart."""
     from chain_sync_spark.operators.incremental import build_profile
 
     o = table(spark, sf_dir, "orders").select(*PROFILE_COLS)
@@ -1885,13 +1881,12 @@ QSK_PERMILLE = [250, 500, 750, 900, 990]
 
 
 def quantile_sketch_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch certifier for the streaming quantile-sketch family
-    (streaming/stream_sync.run_stream_histogram + probe_quantiles):
-    build the base-2 log-histogram (operators/incremental.hist_stats)
-    over order totals in one pass, then serve the QSK_PERMILLE
-    quantile probes from the constant-size sketch — the exact state a
-    streamed store holds after folding the same rows in, so this IS
-    the serving math under a driver-green certificate.
+    """Quantile-sketch serving: build the base-2 log-histogram
+    (operators/incremental.hist_stats) over order totals in one pass,
+    then serve the QSK_PERMILLE quantile probes from the
+    constant-size sketch — the same state a fold of per-batch
+    partials reaches (sketch_fold_digest), so the oracle certifies
+    the serving math.
 
     The probe is pure integer arithmetic (the round-5 output
     contract): bin b serves quantile q/1000 when cum(b)·1000 ≥
@@ -2014,10 +2009,7 @@ def kmv_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kmv_hashes(d: DataFrame) -> DataFrame:
     """Distinct (source, h) KMV hash rows of a docs_words relation —
     ONE definition of the sketch's hash domain (salted hash60 over
-    word-3-shingles), shared verbatim by the batch audit above and
-    the streaming maintainer (streaming/stream_sync.run_stream_kmv),
-    so the audit's driver green certifies the streamed store's
-    arithmetic."""
+    word-3-shingles), used by the batch audit above."""
     return (
         d.select(
             "source", F.explode(sk.word_shingles(F.col("w"), 3)).alias("g")
@@ -2039,8 +2031,8 @@ def kmv_bottomk(dist: DataFrame) -> DataFrame:
     so the per-source phase-2 group holds <= 64·k rows regardless of
     cluster size (the r11 fan-in bound); phase 2 ranks those bounded
     survivors.  Merging sketches is just this function over their
-    union — bottom-k is associative and idempotent, which is what
-    makes the streamed store exact."""
+    union — bottom-k is associative and idempotent, so a sketch
+    folded batch by batch is exact."""
     from chain_sync_spark.operators.skew import _GTK_MID_BUCKETS
 
     w_local = Window.partitionBy("source", "pid").orderBy("h")
@@ -2117,8 +2109,7 @@ FROM j
 
 # Fixed probe list — includes terms of very different frequency and
 # one that never occurs in any corpus tier.  The LEFT join reads
-# cells no term ever filled as 0 (exactly like
-# streaming/stream_sync.probe_cms); with the deliberately narrow demo
+# cells no term ever filled as 0; with the deliberately narrow demo
 # width the absent term's cells typically still collide with real
 # terms, so its estimate demonstrates the CMS's one-sided bound
 # (est >= exact = 0) rather than exact zero.
@@ -2126,18 +2117,15 @@ CMS_PROBE_TERMS = ["join", "window", "stream", "quantile", "zz_absent_term"]
 
 
 def cms_probe_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch certifier of the CMS SERVING path (the read side that
-    streaming/stream_sync.probe_cms runs against a streamed store):
-    build the rows×width sketch from the raw token stream in one
-    map-side-combined pass, then serve point-frequency estimates for
-    the fixed CMS_PROBE_TERMS list — each probe hashes into its
-    CMS_ROWS cells, the estimate is the MIN, and cells no term ever
-    filled read as 0 through the LEFT join.  heavy_hitters_cms
-    certifies the sketch's ≥-exact bound over the whole vocabulary;
-    this certifies the point-probe join a monitor actually serves,
-    absent-term path included.  A pytest pins this output equal to
-    probe_cms over a store maintained by run_stream_cms on the same
-    rows.
+    """Certifier of the CMS SERVING path (the point-probe read side
+    of a count-min sketch): build the rows×width sketch from the raw
+    token stream in one map-side-combined pass, then serve
+    point-frequency estimates for the fixed CMS_PROBE_TERMS list —
+    each probe hashes into its CMS_ROWS cells, the estimate is the
+    MIN, and cells no term ever filled read as 0 through the LEFT
+    join.  heavy_hitters_cms certifies the sketch's ≥-exact bound
+    over the whole vocabulary; this certifies the point-probe join a
+    monitor actually serves, absent-term path included.
 
     Scale: the sketch is CONSTANT-size and broadcast; the probe side
     is len(CMS_PROBE_TERMS)·CMS_ROWS rows. Nothing here grows with
@@ -2227,38 +2215,26 @@ SKETCH_FOLD_BATCHES = 3
 
 
 def sketch_fold_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch certifier of the sketch maintainers' INCREMENTAL FOLD —
-    the one streamed-store path without driver visibility (VERDICT
-    r10 item 4): cms_probe_terms / quantile_sketch_orders certify
-    the one-pass build + serve arithmetic, run_stream_cms /
-    run_stream_histogram fold per-batch PARTIALS through merge_cms /
-    merge_hist instead, and only pytest pinned fold == one-pass
-    until now.  This query splits the inputs into
-    {SKETCH_FOLD_BATCHES} micro-batch stand-ins (orders by
-    o_orderkey, documents by doc_id — any disjoint split works, the
-    merges are order-independent integer sums), builds each batch's
-    partial with the maintainers' own builders
+    """Certifier of the sketches' INCREMENTAL FOLD: cms_probe_terms /
+    quantile_sketch_orders certify the one-pass build + serve
+    arithmetic; this query instead splits the inputs into
+    {SKETCH_FOLD_BATCHES} batches (orders by o_orderkey, documents by
+    doc_id — any disjoint split works, the merges are
+    order-independent integer sums), builds each batch's partial
     (operators/incremental.cms_stats / hist_stats) and folds them
-    pairwise exactly as a trigger sequence would; the DuckDB oracle
+    pairwise through merge_cms / merge_hist; the DuckDB oracle
     recomputes both sketches in ONE pass, so a green row certifies
-    fold == truth for both maintainers end-to-end.  Output one row
-    per sketch cell: (family, k, v) with k = r·width+bucket for the
-    CMS and the signed bin id for the histogram.
-
-    The cluster maintainer (run_stream_cluster_assign) needs no fold
-    certificate: its arithmetic is the frozen-codebook assignment
-    already driver-green via kmeans_embedding_clusters /
-    kmeans_assign_serving, and its first-assignment-wins protocol is
-    replay-pinned by pytest (test_streaming).
+    fold == one-pass for both sketches.  Output one row per sketch
+    cell: (family, k, v) with k = r·width+bucket for the CMS and the
+    signed bin id for the histogram.
 
     Scale: each partial is a constant-size relation built by one
     map-side-combined aggregate over its batch; the folds union and
     re-aggregate constant-size relations.  Nothing grows with the
     corpus except the per-batch scans — and the tokenized relation is
     computed ONCE under a scoped persist (the three batch filters
-    read cached rows instead of re-tokenizing; a REAL maintainer
-    scans each trigger's batch exactly once, so the certifier should
-    not pay more than the one pass either)."""
+    read cached rows instead of re-tokenizing, so the fold costs one
+    tokenizing pass like the one-pass build)."""
     from chain_sync_spark.operators.incremental import (
         cms_stats,
         hist_stats,
@@ -2405,8 +2381,8 @@ def bloom_probe_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the sketch is the <= BLOOM_BITS-row occupied-bit set —
     constant-size, broadcast to the probes; `present` is one
     key-keyed join against the corpus fingerprints; nothing here is
-    all-pairs and the sketch never grows with history (the streaming
-    maintainer merges by bit-set union)."""
+    all-pairs and the sketch never grows with history (two sketches
+    merge by bit-set union)."""
     from chain_sync_spark.operators.incremental import (
         bloom_bits,
         bloom_positions,

@@ -79,10 +79,8 @@ def build_profile(
     column's stats (row count, null count, lexicographic min/max as
     strings so one schema covers every type; optionally a distinct
     count), then a ``stack`` projection unpivots to a row per column.
-    The ONE shared builder behind the batch profiler
-    (corpus_ops.profile_column_stats) and the streaming profile
-    partial (profile_stats) — the two schemas must stay
-    merge-compatible, so they come from one place.
+    Shared by corpus_ops.profile_column_stats and
+    profile_column_stats_sketch.
 
     Distinct counting has two modes: exact (multi-COUNT(DISTINCT) via
     Expand — row multiplication by the number of distinct aggregates;
@@ -122,31 +120,6 @@ def build_profile(
     return one.selectExpr(
         f"stack({len(cols)}, {stack}) AS {fields}", "n_rows"
     ).select(*out)
-
-
-def profile_stats(batch: DataFrame, cols: list[str]) -> DataFrame:
-    """Mergeable column-profile partial of one batch — the streaming
-    form of the profile: row/null counts and min/max only. Exact
-    distinct counts are HOLISTIC (their partials are the value sets
-    themselves) and deliberately absent; the batch profiler covers
-    them on full recomputes."""
-    return build_profile(batch, cols, include_distinct=False)
-
-
-def merge_profile(existing: DataFrame, delta: DataFrame) -> DataFrame:
-    """Merge two profile partials: counts add, min/max fold — every
-    stat is algebraic, so merge order never changes the result.
-    Cost is O(columns), independent of either side's row history."""
-    return (
-        existing.unionByName(delta)
-        .groupBy("col_name")
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("n_nulls").alias("n_nulls"),
-            F.min("min_val").alias("min_val"),
-            F.max("max_val").alias("max_val"),
-        )
-    )
 
 
 def cms_stats(batch: DataFrame, term_col: str) -> DataFrame:
@@ -197,7 +170,7 @@ def merge_cms(existing: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-# --- mergeable log-histogram (streaming quantile sketch) -------------------
+# --- mergeable log-histogram (quantile sketch) -----------------------------
 #
 # Exact percentiles are holistic — they need the raw data — so the
 # maintainable form is a sketch. A base-2 exponential histogram gives a

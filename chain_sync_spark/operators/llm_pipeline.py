@@ -2059,9 +2059,9 @@ def _pq_codebook(emb: DataFrame) -> DataFrame:
 
 def _pq_assigned(emb: DataFrame, codebook: DataFrame | None = None) -> DataFrame:
     """(vec_id, m, code_id, dmicro) — nearest codeword per subspace,
-    against ``codebook`` (a stored, previously-trained one — the
-    streaming index passes this) or the deterministic seed codebook
-    derived from ``emb`` itself.
+    against ``codebook`` (a frozen one trained on another relation —
+    pq_probe_newvecs passes the stored side's) or the deterministic
+    seed codebook derived from ``emb`` itself.
 
     Plan: per-row subvector generate → broadcast codebook join (the
     corpus never shuffles for the join) → argmin via a map-side
@@ -2226,100 +2226,6 @@ FROM (
   FROM scored
 ) WHERE rk <= {ANN_TOPK}
 """
-
-
-def embedding_ivfpq_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    nprobe: int = IVF_PROBES,
-    topk: int = ANN_TOPK,
-) -> DataFrame:
-    """IVF-PQ composed search — the production ANN shape at 100 TB,
-    built from the two certified parts: the IVF coarse quantizer
-    ({IVF_CLUSTERS} cells, embedding_ivf_assign's plan) prunes the
-    candidate set to each query's ``nprobe`` nearest cells, and PQ
-    asymmetric distance (embedding_pq_adc_topk's scoring — broadcast
-    per-query LUT over the codes, exact fixed-point integer sums)
-    ranks inside those cells without ever touching the stored floats.
-
-    Pytest-gated library operator (not in the certification registry:
-    the round-4 window is full; its parts hold their own oracle rows,
-    and ``nprobe = all cells`` is provably identical to
-    embedding_pq_adc_topk — the equivalence a pytest asserts).
-
-    Scale: the inverted index (cell id + {PQ_M} codes per vector) is
-    the ONLY corpus-sized relation; cells and probe sets broadcast;
-    the scoring join touches probed cells' members only, so cost is
-    O(corpus/cells · nprobe) per query batch instead of O(corpus)."""
-    release_caches()  # previous query's scope ends here
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", sk.vec_double(F.col("embedding")).alias("e")
-    )
-    seeds = emb.filter(F.col("vec_id") < IVF_CLUSTERS).select(
-        F.col("vec_id").alias("centroid_id"), F.col("e").alias("ce")
-    )
-    aw = Window.partitionBy("vec_id").orderBy(F.desc("c_sim"), F.asc("centroid_id"))
-    cells = (
-        emb.join(F.broadcast(seeds))
-        .select(
-            "vec_id",
-            "centroid_id",
-            F.round(sk.cosine(F.col("e"), F.col("ce")), 4).alias("c_sim"),
-        )
-        .withColumn("rn", F.row_number().over(aw))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "centroid_id")
-    )
-    # the stored index: cell id + PQ codes per vector (scoped persist
-    # stands in for the precomputed index table a deployment reads)
-    index = _scoped_persist(
-        cells.join(_pq_assigned(emb).select("vec_id", "m", "code_id"), "vec_id")
-    )
-    q = emb.filter(
-        (F.col("vec_id") >= PQ_K) & (F.col("vec_id") < PQ_K + ANN_QUERIES)
-    )
-    pw = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("centroid_id"))
-    probes = (
-        q.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-        .join(F.broadcast(seeds))
-        .select(
-            "query_id",
-            "centroid_id",
-            F.round(sk.cosine(F.col("qe"), F.col("ce")), 4).alias("c_sim"),
-        )
-        .withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "centroid_id")
-    )
-    lut = (
-        _pq_subvectors(q, "query_id")
-        .join(F.broadcast(_pq_codebook(emb)), "m")
-        .select(
-            "query_id",
-            "m",
-            "code_id",
-            _pq_dist_micro(F.col("sub"), F.col("csub")).alias("dmicro"),
-        )
-    )
-    scored = (
-        index.join(F.broadcast(probes), "centroid_id")
-        .join(F.broadcast(lut), ["query_id", "m", "code_id"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dmicro").alias("admicro"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("admicro"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= topk)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.col("admicro").cast("double") / PQ_DIST_SCALE).alias("adc_dist"),
-            "rk",
-        )
-    )
 
 
 LEV_NEIGHBORS = 5  # sorted-neighborhood width w
@@ -2838,8 +2744,7 @@ def kmeans_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _km_train(vecs: DataFrame) -> DataFrame:
     """{KMEANS_ITERS} Lloyd iterations over a (vec_id, ei) relation,
     seeded from vec_id < {KMEANS_K} — the one training loop behind the
-    batch query, the stored-centroid exporter, and the streaming
-    maintainer's first-batch training.
+    batch query and the stored-centroid exporter.
 
     Each pass MATERIALIZES the centroid table (collect the K·dims
     integer rows — ≤ K·dims BIGINTs, a few KB — and re-create a local
@@ -2867,14 +2772,6 @@ def _km_train(vecs: DataFrame) -> DataFrame:
 # BIGINTs — a few KB — so the store is bounded by the number of
 # distinct sf dirs the process touches (one or two in practice).
 _KM_CODEBOOK_STORE: dict[tuple, tuple[list, object]] = {}
-
-
-def invalidate_trained_centroids() -> None:
-    """Drop every memoized codebook.  For callers that REGENERATE the
-    parquet under an sf_dir within one process (test fixtures, bench
-    data rebuilds): the store keys on the path, not the data, so a
-    rebuild would otherwise serve stale centroids silently."""
-    _KM_CODEBOOK_STORE.clear()
 
 
 def _km_trained_centroids(
@@ -3779,17 +3676,13 @@ def pq_adc_topk_against(
     queries: DataFrame,
     codebook: DataFrame,
     topk: int = ANN_TOPK,
-    *,
-    exclude_self: bool = False,
 ) -> DataFrame:
-    """The PQ SERVING arithmetic, shared VERBATIM between the batch
-    certifier (pq_probe_newvecs) and the streamed-store read path
-    (streaming/stream_sync.search_pq_index): ADC top-``topk`` of ``queries``
-    (vec_id, e float arrays) against stored ``codes``
-    (vec_id, m, code_id) under a frozen ``codebook``.  Distances are
-    6-dp fixed-point BIGINT (exact integer sums, engine- and
-    order-independent); output (query_id, neighbor_id, adc_micros,
-    rk).
+    """The PQ SERVING arithmetic behind pq_probe_newvecs: ADC
+    top-``topk`` of ``queries`` (vec_id, e float arrays) against stored
+    ``codes`` (vec_id, m, code_id) under a frozen ``codebook``.
+    Distances are 6-dp fixed-point BIGINT (exact integer sums,
+    engine- and order-independent); output (query_id, neighbor_id,
+    adc_micros, rk).
 
     Scale: LUT = queries×{PQ_M}×{PQ_K} rows — broadcast; the codes
     relation is the only corpus-sized input (3 ints per row); one
@@ -3805,12 +3698,10 @@ def pq_adc_topk_against(
             _pq_dist_micro(F.col("sub"), F.col("csub")).alias("dmicro"),
         )
     )
-    joined = codes.join(F.broadcast(lut), ["m", "code_id"])
-    if exclude_self:
-        # serving over a store that may index the query ids themselves
-        joined = joined.filter(F.col("vec_id") != F.col("query_id"))
-    scored = joined.groupBy("query_id", F.col("vec_id").alias("neighbor_id")).agg(
-        F.sum("dmicro").alias("adc_micros")
+    scored = (
+        codes.join(F.broadcast(lut), ["m", "code_id"])
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("dmicro").alias("adc_micros"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.asc("adc_micros"), F.asc("neighbor_id")
@@ -3823,22 +3714,18 @@ def pq_adc_topk_against(
 
 
 def pq_probe_newvecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch certifier of the streamed-PQ-index SERVING path — the
-    last streamed store without driver visibility (the
-    lm_probe_newdocs / winnow_probe_newdocs precedent): vectors with
+    """Certifier of the PQ-index SERVING path (the lm_probe_newdocs /
+    winnow_probe_newdocs pattern): vectors with
     vec_id >= {PQ_K} and vec_id % {PQ_PROBE_MOD} == 0 are the
     new-arrival probe batch; the REST is the stored index (codebook
     trained on the stored side's seed vectors — identical to the
     full-corpus codebook since all seeds vec_id < {PQ_K} are stored
-    by construction, mirroring run_stream_pq_index's train-once
-    contract).  Each probe vector exercises BOTH serving paths:
-    the APPEND path (its own code assignment under the frozen
-    codebook, packed to the single-BIGINT pq_code) and the READ
-    path (ADC top-{ANN_TOPK} against the stored codes through
-    pq_adc_topk_against — the arithmetic streaming/stream_sync
-    .search_pq_index serves, pinned row-identical by pytest over a
-    stream-maintained store on the same split).  Output (query_id,
-    pq_code, neighbor_id, adc_micros, rk), integers only.
+    by construction: the codebook is trained once and then frozen).
+    Each probe vector exercises BOTH serving paths: the APPEND path
+    (its own code assignment under the frozen codebook, packed to the
+    single-BIGINT pq_code) and the READ path (ADC top-{ANN_TOPK}
+    against the stored codes through pq_adc_topk_against).  Output
+    (query_id, pq_code, neighbor_id, adc_micros, rk), integers only.
 
     Scale: codebook broadcast; stored codes are the only
     corpus-sized relation (3 ints/row, scoped-persisted across the

@@ -250,9 +250,8 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lang_token_counts(docs: DataFrame) -> DataFrame:
     """(lang, n_docs, n_tokens) of a documents-shaped frame — the
-    count grain the temperature weights derive from.  Sum-mergeable,
-    which is what makes the streamed store
-    (streaming/stream_sync.run_stream_lang_counts) exact."""
+    count grain the temperature weights derive from.  Sum-mergeable:
+    counts of disjoint batches add up to the counts of their union."""
     return (
         docs.select("lang", F.size(sk.words(F.col("text"))).alias("n_tok"))
         .groupBy("lang")
@@ -265,10 +264,7 @@ def lang_token_counts(docs: DataFrame) -> DataFrame:
 
 def temperature_weights_from_counts(per_lang: DataFrame) -> DataFrame:
     """The alpha = 1/2 weight arithmetic over a (lang, n_docs,
-    n_tokens) relation — ONE definition shared verbatim by the batch
-    query above and the streamed serving probe
-    (stream_sync.probe_temperature_mixture), so the batch driver
-    green certifies the streamed read path."""
+    n_tokens) relation, applied by the query above."""
     s_col = per_lang.withColumn(
         "s", F.floor(F.sqrt(F.col("n_tokens").cast("double"))).cast("long")
     )
@@ -1786,9 +1782,8 @@ WN_PROBE_MOD = 5  # doc_id % MOD == 0 is the probe batch; rest is stored
 
 
 def winnow_match_pairs(idx: DataFrame, docs: DataFrame) -> DataFrame:
-    """The MOSS SERVING arithmetic, shared verbatim by the streaming
-    probe (streaming/stream_sync.probe_winnow_index) and its batch
-    certifier (winnow_probe_newdocs): fingerprint the probe documents
+    """The MOSS SERVING arithmetic behind winnow_probe_newdocs:
+    fingerprint the probe documents
     and match them against a stored (already boilerplate-capped)
     index relation ``idx`` (doc_id, h).  Output (doc_a stored,
     doc_b probed, shared_fps >= {WN_MIN_SHARED}).
@@ -1810,18 +1805,13 @@ def winnow_match_pairs(idx: DataFrame, docs: DataFrame) -> DataFrame:
 
 
 def winnow_probe_newdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch certifier of the streamed winnow-index SERVING path
-    ("which stored documents does this submission overlap?"): the
-    stored corpus (doc_id % {WN_PROBE_MOD} != 0) builds the
-    boilerplate-capped fingerprint index — df counted over the
-    STORED corpus only, exactly as the streamed store's summed hdf
-    deltas count it — and every new-batch document (doc_id %
-    {WN_PROBE_MOD} == 0) matches against it through
-    winnow_match_pairs, the arithmetic
-    streaming/stream_sync.probe_winnow_index serves over a
-    run_stream_winnow_index store.  A pytest pins this output equal
-    to that probe on the same split, so this query's driver green
-    certifies the read side of the streamed index.
+    """Certifier of the winnow-index SERVING path ("which stored
+    documents does this submission overlap?"): the stored corpus
+    (doc_id % {WN_PROBE_MOD} != 0) builds the boilerplate-capped
+    fingerprint index — df counted over the STORED corpus only — and
+    every new-batch document (doc_id % {WN_PROBE_MOD} == 0) matches
+    against it through winnow_match_pairs, so this query's oracle
+    certifies the read side of the index.
 
     Scale: index build is the capped winnow shape
     (neardup_winnow_pairs); the probe side is O(batch)."""
@@ -2029,7 +2019,7 @@ QUERIES = {
     "neardup_winnow_pairs": neardup_winnow_pairs,
     "winnow_dup_clusters": winnow_dup_clusters,
     # the cross-source fingerprint-overlap matrix and the
-    # streamed-winnow-index serving certifier
+    # winnow-index serving certifier
     "source_overlap_matrix": source_overlap_matrix,
     "winnow_probe_newdocs": winnow_probe_newdocs,
     # the Gopher duplicate-n-gram char-fraction repetition screen

@@ -771,110 +771,6 @@ FROM last_active LEFT JOIN profiles USING (name)
 """
 
 
-def sync_mutings_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the REAL community-mutings side-job (sync/mutings.py —
-    reference handle_mutings.js, entry point 4) over a deterministic
-    posts store and emit the final per-post muting state — the
-    driver-certifiable digest that converts the four pytest-only
-    coverage rows (P9 muted-role filter, J4 two-key update join, S10
-    update-by-query sink, the periodic side-job) into hash rows, the
-    way sync_round_digest did for the main loop.
-
-    Three job executions against one store: mute idx%3 accounts in
-    community cat1, mute idx%4 accounts in cat2, then REPLAY the
-    cat1 snapshot verbatim — the replay must be a no-op (idempotent
-    redelivery), which the digest certifies because the oracle
-    derives the final state from single applications only.
-
-    Not in QUERIES: its oracle parity is checked by
-    tests/test_staged.py (dual transport).
-
-    Scale: the job snapshots the roles relation once, broadcasts the
-    muted set, and issues ONE partition-pruned MERGE per community —
-    no per-account update queries (the reference's update_by_query
-    per account shape would be one round-trip per muted account)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from chain_sync_spark.sync.mutings import apply_community_mutings
-
-    NA = SYNC_DIGEST_N_ACCOUNTS
-    store = os.path.join(
-        tempfile.gettempdir(),
-        "chain_sync_spark_mutdigest",
-        hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    if os.path.exists(store):
-        shutil.rmtree(store)  # fresh deterministic run per invocation
-    posts_dir = os.path.join(store, "posts")
-
-    s = F.col("seq")
-    seqs = (
-        table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") % SYNC_DIGEST_POST_MOD == 0)
-        .select(
-            (F.col("o_orderkey") / SYNC_DIGEST_POST_MOD).cast("long").alias("seq")
-        )
-    )
-    # complete schema from the first write (typed False, not absent):
-    # partitioned merges rewrite only touched partitions, so a column
-    # introduced by a later merge would reach only those partitions
-    # (merge_parquet docstring NB)
-    (
-        seqs.select(
-            s.alias("post_id"),
-            F.concat(F.lit("acct"), (s % NA).cast("string")).alias("author"),
-            F.concat(F.lit("cat"), (s % 5).cast("string")).alias("parent_permlink"),
-            (F.lit(2020) + (s % 3)).cast("int").alias("year"),
-            (F.lit(1) + (s % 12)).cast("int").alias("month"),
-            F.lit(False).alias("muted_in_community"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("year", "month")
-        .parquet(posts_dir)
-    )
-
-    def role_snapshot(mod: int) -> DataFrame:
-        idx = F.col("id")
-        return spark.range(NA).select(
-            F.concat(F.lit("acct"), idx.cast("string")).alias("account"),
-            F.when(idx % mod == 0, F.lit("muted"))
-            .otherwise(F.lit("member"))
-            .alias("role"),
-        )
-
-    # mods 3/4 (not rarer) so even the sparse sf0.001 orderkey set
-    # yields muted posts in both communities — an all-False store
-    # would vacuously parity-match a symmetrically-wrong oracle
-    apply_community_mutings(spark, posts_dir, role_snapshot(3), "cat1")
-    apply_community_mutings(spark, posts_dir, role_snapshot(4), "cat2")
-    # periodic-job replay: identical snapshot, must not change state
-    apply_community_mutings(spark, posts_dir, role_snapshot(3), "cat1")
-
-    return spark.read.parquet(posts_dir).select(
-        "post_id",
-        "author",
-        F.col("parent_permlink").alias("community"),
-        F.col("muted_in_community").alias("muted"),
-    )
-
-
-_MUTINGS_DIGEST_ORACLE = f"""
-WITH seqs AS (
-  SELECT CAST(o_orderkey // {SYNC_DIGEST_POST_MOD} AS BIGINT) AS s
-  FROM orders WHERE o_orderkey % {SYNC_DIGEST_POST_MOD} = 0
-)
-SELECT s AS post_id,
-       'acct' || CAST(s % {SYNC_DIGEST_N_ACCOUNTS} AS VARCHAR) AS author,
-       'cat' || CAST(s % 5 AS VARCHAR) AS community,
-       (s % 5 = 1 AND (s % {SYNC_DIGEST_N_ACCOUNTS}) % 3 = 0)
-       OR (s % 5 = 2 AND (s % {SYNC_DIGEST_N_ACCOUNTS}) % 4 = 0) AS muted
-FROM seqs
-"""
-
-
 QUERIES = {
     "sync_metadata_double_decode": sync_metadata_double_decode,
     "sync_vote_set_accumulation": sync_vote_set_accumulation,

@@ -2,11 +2,10 @@
 
 Tumbling / sliding / session windows over the `events` stream table —
 the batch expression of Structured Streaming's window semantics (the
-same `window()` / `session_window()` functions drive the streaming
-path in chain_sync_spark.streaming). DuckDB oracles reconstruct each
-window assignment explicitly (time_bucket for fixed windows,
-gaps-and-islands for sessions), which also documents the exact
-semantics we guarantee:
+same `window()` / `session_window()` functions). DuckDB oracles
+reconstruct each window assignment explicitly (time_bucket for fixed
+windows, gaps-and-islands for sessions), which also documents the
+exact semantics we guarantee:
 
   * fixed windows are epoch-aligned, [start, end)
   * a (10 min, 5 min) sliding window assigns each event to exactly 2

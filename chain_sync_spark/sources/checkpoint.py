@@ -18,11 +18,11 @@ Spark jobs run. The `spark` parameter stays in both signatures so
 every caller is source-compatible.
 
 The cursor directory is replaced with `swap_dir`, the one
-recoverable directory swap of the repo: the sync tables (partition
-form, `depth` > 0) and the streaming merged-state stores commit
-through it too. A crash at any step leaves either the new or the
-previous cursor, never none, and `recover_swap` (run by both cursor
-functions) repairs the leftover state.
+recoverable directory swap of the repo: the sync tables commit
+through it too, in partition form (`depth` > 0). A crash at any
+step leaves either the new or the previous cursor, never none, and
+`recover_swap` (run by both cursor functions) repairs the leftover
+state.
 """
 
 from __future__ import annotations

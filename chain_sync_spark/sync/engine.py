@@ -198,7 +198,7 @@ class SyncEngine:
         return driver_frame(self.spark, [], INDEX_SCHEMA)
 
     def process_batch(
-        self, ops: DataFrame, post_keys: list[tuple[int, int]] | None = None
+        self, ops: DataFrame, post_keys: list[tuple[int, int]]
     ) -> None:
         """One sync round over an op-stream micro-batch: one posts
         merge (comment upserts and vote set-adds together), the
@@ -214,12 +214,9 @@ class SyncEngine:
         by default) reads the index the round just wrote, so it runs
         after the three.
 
-        ``post_keys``: the batch's ``batch_stats`` keys; computed with
-        one stats job when omitted."""
+        ``post_keys``: the batch's ``batch_stats`` keys."""
         typed = classify(ops)
         comments, votes, accounts = typed["comment"], typed["vote"], typed["account_update"]
-        if post_keys is None:
-            post_keys = batch_stats(ops)[2]
 
         with ThreadPoolExecutor(max_workers=3) as pool:
             # accounts first: it is the round's longest merge

@@ -545,62 +545,6 @@ def test_pq_adc_recall_vs_exact_l2(spark, tmp_path):
     release_caches()  # the ADC query scope-persists the codes table
 
 
-def test_ivfpq_equals_adc_when_probing_all_cells(spark, tmp_path):
-    """The IVF-PQ composition contract, both halves:
-    (1) with nprobe = all cells the cell filter is a no-op, so the
-    result must be IDENTICAL to pure ADC (embedding_pq_adc_topk) —
-    same neighbors, same distances, same ranks; (2) with a small
-    nprobe on clustered data, recall vs exact L2 stays high because a
-    query's true neighbors share its cells."""
-    import numpy as np
-    from chain_sync_spark.operators.llm_pipeline import (
-        ANN_QUERIES,
-        ANN_TOPK,
-        EMB_DIM,
-        IVF_CLUSTERS,
-        PQ_K,
-        embedding_ivfpq_topk,
-        embedding_pq_adc_topk,
-    )
-
-    rng = np.random.default_rng(31)
-    seeds = rng.normal(size=(PQ_K, EMB_DIM))
-    n_members = PQ_K * ANN_TOPK
-    vecs = np.vstack(
-        [seeds]
-        + [seeds[j % PQ_K] + 0.15 * rng.normal(size=EMB_DIM)
-           for j in range(n_members)]
-    )
-    n = PQ_K + n_members
-    spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]], 0) for i in range(n)],
-        "vec_id long, embedding array<float>, label int",
-    ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-
-    adc = {(r.query_id, r.neighbor_id, r.adc_dist, r.rk)
-           for r in embedding_pq_adc_topk(spark, str(tmp_path)).collect()}
-    full = {(r.query_id, r.neighbor_id, r.adc_dist, r.rk)
-            for r in embedding_ivfpq_topk(
-                spark, str(tmp_path), nprobe=IVF_CLUSTERS).collect()}
-    assert full == adc
-
-    pruned = embedding_ivfpq_topk(spark, str(tmp_path), nprobe=2).collect()
-    got = {}
-    for r in pruned:
-        got.setdefault(r.query_id, set()).add(r.neighbor_id)
-    assert set(got) == set(range(PQ_K, PQ_K + ANN_QUERIES))
-    hits = total = 0
-    for qid, nbrs in got.items():
-        d = ((vecs - vecs[qid]) ** 2).sum(axis=1)
-        d[qid] = np.inf
-        exact = set(np.argsort(d, kind="stable")[:ANN_TOPK])
-        hits += len(exact & nbrs)
-        total += ANN_TOPK
-    assert hits / total >= 0.9  # clustered data: cells contain the true neighbors
-    from chain_sync_spark.operators.llm_pipeline import release_caches
-    release_caches()  # ivfpq scope-persists its index relation
-
-
 def test_embed_hashing_trick_replica_and_geometry(spark):
     """Feature-hashing embeddings: (1) vectors equal a from-scratch
     Python replica (same md5 hash, same sign family, same normalize);

@@ -45,21 +45,16 @@ def test_no_oracle_outputs_hugeint(con):
     )
 
 
-
 def test_no_pending_oracle_outputs_hugeint(con):
     """Oracles outside the registry (the pending_queries() shim and the
-    two unregistered query/oracle pairs) obey the same boundary
+    unregistered markdown_lists_blocks pair) obey the same boundary
     convention before they are ever registered."""
-    from chain_sync_spark.operators.sync_queries import (
-        _MD_BLOCKS_ORACLE,
-        _MUTINGS_DIGEST_ORACLE,
-    )
+    from chain_sync_spark.operators.sync_queries import _MD_BLOCKS_ORACLE
     from chain_sync_spark.registry import pending_queries
 
     pending = {
         **pending_queries()[1],
         "markdown_lists_blocks": _MD_BLOCKS_ORACLE,
-        "sync_mutings_digest": _MUTINGS_DIGEST_ORACLE,
     }
     offenders = []
     for name, sql in pending.items():

@@ -251,14 +251,16 @@ def test_bpe_apply_fold_matches_replica_random_batch(spark):
 
 
 def test_bloom_members_always_hit_random_batch(spark, tmp_path):
-    """Serving-path no-false-negative property on random keys: every
-    member of the folded key set hits through probe_bloom's join math
-    (not by construction); non-members may or may not hit."""
+    """Serving-path no-false-negative property on random documents:
+    every probed corpus member hits through bloom_probe_fingerprints'
+    join math (not by construction); non-members may or may not hit."""
     import random
     import string
 
-    from chain_sync_spark.operators.incremental import bloom_bits
-    from chain_sync_spark.streaming.stream_sync import probe_bloom
+    from chain_sync_spark.operators.corpus_ops import (
+        BLOOM_ABSENT_PROBES,
+        bloom_probe_fingerprints,
+    )
 
     rng = random.Random(7)
 
@@ -268,17 +270,17 @@ def test_bloom_members_always_hit_random_batch(spark, tmp_path):
             for _ in range(rng.randint(1, 20))
         )
 
-    members = sorted({_key() for _ in range(400)})
-    others = sorted({_key() + "!" for _ in range(100)})
-    df = spark.createDataFrame([(k,) for k in members], "k string")
-    store = str(tmp_path / "bloom")
-    bloom_bits(df, "k").write.parquet(store)
-    got = {
-        r.key: r.bloom_hit
-        for r in probe_bloom(spark, store, members + others).collect()
-    }
-    assert all(got[k] == 1 for k in members)
-    assert set(got) == set(members) | set(others)
+    # the query probes every 7th document: ~400 members
+    texts = sorted({_key() for _ in range(2800)})
+    spark.createDataFrame(
+        [(i, t, "en", "src0", len(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    rows = bloom_probe_fingerprints(spark, str(tmp_path)).collect()
+    members = [r for r in rows if r.present == 1]
+    assert all(r.bloom_hit == 1 for r in members)
+    assert len(members) == len(range(0, len(texts), 7))
+    assert len(rows) - len(members) == BLOOM_ABSENT_PROBES
 
 
 def test_dedup_token_spans_matches_replica_random_batch(spark, tmp_path):
@@ -802,8 +804,7 @@ def test_xxh64_matches_spark_jvm_at_seed_42(spark, strings):
     """The pure-Python XXH64 core equals Spark's JVM implementation
     (F.xxhash64, seed fixed at 42) on arbitrary unicode — every
     length class (empty, <4, <8, <32, >=32 stripes, tails) and
-    multibyte UTF-8. With the core pinned, the reference-compat key
-    (seed 0xCAFEBABE) differs only by the seed parameter."""
+    multibyte UTF-8."""
     from chain_sync_spark.functions.hashing import xxh64
 
     df = spark.createDataFrame([(s,) for s in strings], "s string")
@@ -813,51 +814,11 @@ def test_xxh64_matches_spark_jvm_at_seed_42(spark, strings):
         assert signed == r["h"], repr(r["s"])
 
 
-@pytest.mark.slow
-def test_surrogate_id_compat_reference_key_shape(spark):
-    """surrogate_id_compat == base64(XXH64(author + '/' + permlink,
-    0xCAFEBABE)) little-endian — the reference's getCommentID
-    (handlers/comments.js:14-17), computed two independent ways (the
-    pandas_udf column vs the python core directly)."""
-    import base64
-
-    from chain_sync_spark.functions.hashing import (
-        REFERENCE_KEY_SEED,
-        surrogate_id_compat,
-        xxh64,
-    )
-
-    rows = [("alice", "my-post"), ("bob", "über-pöst"), ("", "x")]
-    df = spark.createDataFrame(rows, "author string, permlink string")
-    got = {
-        (r["author"], r["permlink"]): r["k"]
-        for r in df.select(
-            "author",
-            "permlink",
-            surrogate_id_compat("author", "permlink").alias("k"),
-        ).collect()
-    }
-    for a, p in rows:
-        h = xxh64(f"{a}/{p}".encode("utf-8"), REFERENCE_KEY_SEED)
-        want = base64.b64encode(h.to_bytes(8, "little")).decode()
-        assert got[(a, p)] == want
-    # stable across runs and distinct across keys (a surrogate key's
-    # two load-bearing properties)
-    assert len(set(got.values())) == len(rows)
-
-
 def test_xxh64_upstream_golden_vectors():
     """Hard-coded known-answer vectors from the upstream xxHash
     project's own sanity checks (github.com/Cyan4973/xxHash,
     xsum_sanity_check.c) — an independent pin of the XXH64 core that
-    is NOT derived from this repo's code or from Spark's JVM (ADVICE
-    r12: the byte-compat test recomputed its expected values with the
-    code under test).  node-xxhash 0.3.0 wraps this same canonical C
-    core, so the VALUE is pinned end-to-end; the one remaining
-    encoding assumption — the npm package returns the raw in-memory
-    uint64, little-endian on the reference's deploy platforms — is
-    isolated and documented in hashing.py (a true reference-produced
-    golden key needs the npm package, absent from this container)."""
+    is NOT derived from this repo's code or from Spark's JVM."""
     from chain_sync_spark.functions.hashing import xxh64
 
     prime32 = 2654435761  # XXH PRIME32_1, the spec's alternate seed

@@ -299,7 +299,6 @@ def test_malformed_rpc_timestamp_aborts_before_any_write(spark, tmp_path):
 def test_driver_built_relations_run_no_python(spark, tmp_path):
     """The relations the sync path builds from driver rows live in the
     JVM: no scan of them starts a Python worker."""
-    from chain_sync_spark.streaming.stream_sync import read_store_table
     from chain_sync_spark.sync.engine import SyncEngine
 
     eng = SyncEngine(spark, str(tmp_path / "store"))
@@ -310,9 +309,6 @@ def test_driver_built_relations_run_no_python(spark, tmp_path):
         ),
         "existing_posts": eng.existing_posts(),
         "posts_index": eng.posts_index(),
-        "read_store_table": read_store_table(
-            spark, str(tmp_path / "stream"), "t", "k string, n long"
-        ),
     }
     for name, df in frames.items():
         assert "PythonRDD" not in _lineage(df), name

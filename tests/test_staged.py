@@ -1,8 +1,7 @@
 """Whole-registry oracle parity (dual transport) plus known-answer
 tests for the LLM-data operators: k-means, SCD2, BPE, sketches, ANN
-audits, dedup and quality screens.  Two unregistered query/oracle
-pairs (markdown_lists_blocks, sync_mutings_digest) get the same
-parity check by name."""
+audits, dedup and quality screens.  One unregistered query/oracle
+pair (markdown_lists_blocks) gets the same parity check by name."""
 
 from datetime import datetime
 
@@ -254,55 +253,18 @@ def test_markdown_lists_blocks_fence_semantics(spark):
     assert got[1] == ["real one"]
 
 
-def test_prepared_sync_mutings_digest_parity_dual_transport(spark):
-    """An unregistered query/oracle pair: the real community-mutings
-    side-job run end-to-end against a deterministic posts store — P9
-    role filter, J4 two-key update join, S10 update-by-query MERGE,
-    and the periodic-job replay (third application is a verbatim
-    repeat whose no-op-ness the oracle certifies, since it derives
-    final state from single applications)."""
-    from chain_sync_spark.operators.sync_queries import (
-        _MUTINGS_DIGEST_ORACLE,
-        sync_mutings_digest,
-    )
-
-    _dual_transport_parity(
-        spark, "sync_mutings_digest", sync_mutings_digest, _MUTINGS_DIGEST_ORACLE
-    )
-
-
-def test_sync_mutings_digest_flags_expected_posts(spark):
-    """Known-answer pin: exactly the cat1 posts by idx%3 accounts and
-    cat2 posts by idx%4 accounts are muted, nothing else — and the
-    muted set is non-empty (an all-False store would vacuously pass
-    parity if the oracle regressed the same way)."""
-    from chain_sync_spark.operators.sync_queries import sync_mutings_digest
-
-    rows = sync_mutings_digest(spark, SF).collect()
-    assert rows, "digest emitted no posts"
-    n_muted = 0
-    for r in rows:
-        idx = int(r.author.removeprefix("acct"))
-        want = (r.community == "cat1" and idx % 3 == 0) or (
-            r.community == "cat2" and idx % 4 == 0
-        )
-        assert bool(r.muted) == want, (r.post_id, r.author, r.community)
-        n_muted += bool(r.muted)
-    assert n_muted > 0
-
-
 def test_staged_names_not_yet_registered():
     """Nothing is staged (pending_queries() is perfbench's empty shim),
-    and the two unregistered query/oracle pairs stay out of the
-    registry until a change registers them on purpose."""
+    and the unregistered query/oracle pair stays out of the registry
+    until a change registers it on purpose."""
     from chain_sync_spark.registry import pending_queries
 
     pending_q, pending_o = pending_queries()
     assert set(pending_q) == set(pending_o)
     assert not set(pending_q) & set(all_queries())
     assert not set(pending_o) & set(all_oracles())
-    for name in ("markdown_lists_blocks", "sync_mutings_digest"):
-        assert name not in all_queries() and name not in all_oracles()
+    assert "markdown_lists_blocks" not in all_queries()
+    assert "markdown_lists_blocks" not in all_oracles()
 
 
 # ---------------------------------------------------------------------------
@@ -1638,73 +1600,6 @@ def test_containment_directional_fixture(spark, tmp_path):
     assert (n_common, ca) == (18, 1_000_000)
     assert cb == (18 * 2_000_000 + 26) // (2 * 26)
     assert rel == "a_in_b"
-
-
-# ---------------------------------------------------------------------------
-# pq_probe_newvecs — streamed-PQ serving certifier
-# ---------------------------------------------------------------------------
-
-def test_pq_probe_matches_streamed_store_serving(spark, tmp_path):
-    """Row-identity between the batch certifier and the streamed
-    read path on the same split: a run_stream_pq_index store fed the
-    STORED half in three micro-batches, queried through
-    search_pq_index with the probe vectors, must reproduce
-    pq_probe_newvecs' ADC rows exactly (adc_dist = micros / 1e6).
-    Also pins the split contract: the probe ids never contain
-    codebook seeds, so the stored-side codebook equals the
-    full-corpus one."""
-    import json as _json
-    import os
-
-    from chain_sync_spark.operators import llm_pipeline as lp
-    from chain_sync_spark.streaming.stream_sync import (
-        run_stream_pq_index,
-        search_pq_index,
-    )
-
-    tbl = pq.read_table(f"{SF}/embeddings.parquet", columns=["vec_id", "embedding"])
-    vecs = list(zip(tbl["vec_id"].to_pylist(), tbl["embedding"].to_pylist()))
-    probe_ids = {
-        i for i, _ in vecs if i >= lp.PQ_K and i % lp.PQ_PROBE_MOD == 0
-    }
-    assert not any(i < lp.PQ_K for i in probe_ids)
-    stored = [(i, e) for i, e in vecs if i not in probe_ids]
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # first batch must carry all codebook seeds (train-once contract);
-    # batches are disjoint — a duplicated row would double its codes
-    seeds = [r for r in stored if r[0] < lp.PQ_K]
-    rest = [r for r in stored if r[0] >= lp.PQ_K]
-    thirds = [seeds + rest[0::3], rest[1::3], rest[2::3]]
-    for b, part in enumerate(thirds):
-        with open(os.path.join(src, f"b{b}.json"), "w") as fh:
-            for i, e in part:
-                fh.write(_json.dumps({"vec_id": i, "embedding": list(map(float, e))}) + "\n")
-        os.utime(os.path.join(src, f"b{b}.json"), (1_700_000_000 + b, 1_700_000_000 + b))
-
-    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    run_stream_pq_index(stream, store, ckpt).awaitTermination(120)
-
-    queries = spark.createDataFrame(
-        [(i, list(map(float, e))) for i, e in vecs if i in probe_ids],
-        "vec_id long, embedding array<float>",
-    )
-    served = {
-        (r.query_id, r.rk): (r.neighbor_id, r.adc_dist)
-        for r in search_pq_index(spark, store, queries).collect()
-    }
-    want = {
-        (r.query_id, r.rk): (r.neighbor_id, r.adc_micros / lp.PQ_DIST_SCALE)
-        for r in lp.pq_probe_newvecs(spark, SF).collect()
-    }
-    assert served == want
-    assert len(want) > 0
 
 
 # ---------------------------------------------------------------------------

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from chain_sync_spark.sources.blocks import OP_STREAM_SCHEMA
-from chain_sync_spark.sync.engine import SyncEngine
+from chain_sync_spark.sync.engine import SyncEngine, batch_stats
 
 
 def _op(block, ts, op_type, payload):
@@ -100,7 +100,7 @@ def test_idempotent_replay(spark, tmp_path, ops_batch1):
     before_posts = sorted(map(str, _posts(spark, tmp_path).collect()))
     before_accts = sorted(map(str, _accounts(spark, tmp_path).collect()))
     # replay the same batch (at-least-once delivery)
-    eng.process_batch(ops_batch1)
+    eng.process_batch(ops_batch1, post_keys=batch_stats(ops_batch1)[2])
     assert sorted(map(str, _posts(spark, tmp_path).collect())) == before_posts
     assert sorted(map(str, _accounts(spark, tmp_path).collect())) == before_accts
 
@@ -628,7 +628,7 @@ def test_batch_stats_post_keys_match_classify(spark, ops_batch1):
     second partition)."""
     from chain_sync_spark.functions.hashing import surrogate_id
     from chain_sync_spark.sync.classify import classify
-    from chain_sync_spark.sync.engine import N_INDEX_BUCKETS, batch_stats
+    from chain_sync_spark.sync.engine import N_INDEX_BUCKETS
 
     n_ops, n_bad, post_keys = batch_stats(ops_batch1)
     assert (n_ops, n_bad) == (9, 0)
