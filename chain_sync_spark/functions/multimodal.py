@@ -9,23 +9,21 @@ are built in with no external dependencies beyond the stdlib: binary
 PPM (P6), binary PGM (P5 grayscale, replicated to the shared RGB
 tuple), uncompressed 24-bit BMP (BI_RGB), GIF87a/89a (full LZW
 decode — variable code widths, CLEAR/EOI, 12-bit cap — plus
-extensions, local color tables and interlacing; re-encode through a
-real LZW compressor), and 8-bit PNG (chunk walk with CRC checks,
-stdlib-zlib inflate, all five scanline filters, gray/RGB/palette/
-alpha color types) images parse, feature-extract, and
-nearest-neighbor resize through pure python/numpy (`_parse_image`
-dispatch / `_resize_px`; each format re-encodes as itself, GIF by
-resizing the INDEX matrix under its own color table), and RIFF/WAVE + AIFF
-PCM audio parse and feature-extract (`_parse_wav` / `_parse_aiff`,
-both endiannesses incl. the 80-bit extended-float AIFF sample rate) —
-the reference implementations proving the seam end to end on genuine
-pixels and samples. Richer codec libraries
+extensions, local color tables and interlacing), and 8-bit PNG
+(chunk walk with CRC checks, stdlib-zlib inflate, all five scanline
+filters, gray/RGB/palette/alpha color types) images parse and
+feature-extract through pure python/numpy (`_parse_image` dispatch),
+and RIFF/WAVE + AIFF PCM audio parse and feature-extract
+(`_parse_wav` / `_parse_aiff`, both endiannesses incl. the 80-bit
+extended-float AIFF sample rate) — the reference implementations
+proving the seam end to end on genuine pixels and samples. The BMP,
+GIF and PNG encoders are the inverses the decoder round-trip tests
+build their payloads with. Richer codec libraries
 (PIL / torchaudio / av) are NOT present in this environment, so for
-every other format the codec call is isolated behind `decode_media`:
-real decoding raises NotImplementedError with a clear message, and a
-deterministic fake decoder (md5-seeded) stands in so the Spark-side
-plumbing — schema, batching, UDF signature, partitioning — is real
-and tested end to end.
+every other format the codec call is isolated behind `decode_media`,
+where a deterministic fake decoder (md5-seeded) stands in so the
+Spark-side plumbing — schema, batching, UDF signature, partitioning —
+is real and tested end to end.
 
 Scale notes: payload bytes never shuffle (decode happens where the
 row lives, mapInPandas preserves partitioning); feature extraction
@@ -50,9 +48,6 @@ MEDIA_SCHEMA = (
 
 FEATURE_DIM = 8
 FEATURES_SCHEMA = f"media_id long, n_bytes int, features array<float>"
-
-_FAKE_DECODE = True  # non-PPM codec libs absent — see module docstring
-
 
 def _pnm_header(payload: bytes, magic: bytes):
     """Shared binary-PNM header walk: magic, then three whitespace-
@@ -104,7 +99,7 @@ def _parse_pgm(payload: bytes):
     """Parse a binary PGM (P5, grayscale): same header grammar as P6,
     one byte per pixel.  Returns the SAME (width, height, maxval,
     H×W×3 ndarray) tuple as the color codecs — the gray plane
-    replicated across channels — so features and resize apply
+    replicated across channels — so features apply
     unchanged (all three channel means equal the gray mean)."""
     import numpy as np
 
@@ -137,44 +132,13 @@ def _ppm_features(img) -> list[float]:
     ]
 
 
-def _resize_px(img, target_w: int, target_h: int):
-    """Nearest-neighbor resize of any parsed image tuple — index
-    sampling (floor grid), deterministic on every platform. Shared by
-    every image codec's resize path; each re-encodes as itself."""
-    import numpy as np
-
-    w, h, maxval, px = img
-    rows = (np.arange(target_h) * h) // target_h
-    cols = (np.arange(target_w) * w) // target_w
-    return target_w, target_h, maxval, px[rows][:, cols]
-
-
-def _encode_ppm(img) -> bytes:
-    """Re-encode a parsed image tuple as binary PPM (P6)."""
-    w, h, maxval, px = img
-    return f"P6\n{w} {h}\n{maxval}\n".encode() + px.tobytes()
-
-
-def _encode_pgm(img) -> bytes:
-    """Re-encode a parsed image tuple as binary PGM (P5) — the red
-    plane, which for anything parsed FROM a PGM is the gray plane
-    (all three channels are replicas)."""
-    w, h, maxval, px = img
-    return f"P5\n{w} {h}\n{maxval}\n".encode() + px[..., 0].tobytes()
-
-
-def _resize_ppm(img, target_w: int, target_h: int) -> bytes:
-    """Nearest-neighbor resize of a parsed PPM, re-encoded as P6."""
-    return _encode_ppm(_resize_px(img, target_w, target_h))
-
-
 def _parse_bmp(payload: bytes):
     """Parse an uncompressed 24-bit BMP (BITMAPINFOHEADER, BI_RGB):
     returns the same (width, height, 255, H×W×3 uint8 RGB ndarray)
     tuple as `_parse_ppm`, or None when the payload is not such a
     BMP.  Handles the format's real quirks — rows padded to 4-byte
     boundaries, bottom-up row order (positive height) vs top-down
-    (negative), BGR channel order — so features/resize code never
+    (negative), BGR channel order — so feature code never
     sees them.  Pure numpy — no codec library."""
     import numpy as np
 
@@ -637,8 +601,7 @@ def _encode_png(img) -> bytes:
 
 def _parse_image(payload: bytes):
     """Dispatch across the built-in image codecs: (parsed, format) or
-    (None, None). New image codecs plug in here and in resize_media's
-    re-encode arm only."""
+    (None, None). New image codecs plug in here only."""
     if not payload:
         # null/empty payloads are in-contract (extract_features counts
         # them as 0 bytes); the GIF/PNG probes below assume len()/
@@ -825,11 +788,6 @@ def decode_media(payload: bytes, kind: str) -> list[float]:
             aud = _parse_aiff(payload)
         if aud is not None:
             return _wav_features(aud)
-    if not _FAKE_DECODE:  # pragma: no cover — flipped on real deployments
-        raise NotImplementedError(
-            f"real {kind} decoding requires codec libraries (PIL/soundfile/av) "
-            "not present in this environment"
-        )
     digest = hashlib.md5(payload or b"").digest()
     return [digest[i] / 255.0 for i in range(FEATURE_DIM)]
 
@@ -871,301 +829,6 @@ def extract_features(media: DataFrame) -> DataFrame:
 
     return media.select("media_id", "kind", "payload").mapInPandas(
         _batches, schema=FEATURES_SCHEMA
-    )
-
-
-def resize_media(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Resize stage: (media_id, kind, payload, meta) → same layout
-    with meta.width/height replaced and the payload re-encoded.
-    PPM (P6) and 24-bit BMP image payloads resize for REAL —
-    nearest-neighbor index sampling in numpy, each re-encoded as its
-    own format.  Other formats' re-encode
-    would call the codec (PIL .resize / ffmpeg scale); their
-    deterministic stand-in truncates-or-pads the payload to the byte
-    budget implied by the target dimensions, preserving the invariant
-    a real resize has: output size is a function of target dims, not
-    input size.
-
-    Spark-side plumbing is the real thing: Arrow-batched mapInPandas,
-    schema-stable, partition-preserving — payload bytes never
-    shuffle. Aspect-ratio metadata math runs here (not in the codec)
-    so the plan carries it even where the stand-in runs."""
-    for label, dim in (("target_w", target_w), ("target_h", target_h)):
-        # fail fast on the driver: GIF's 2-byte logical-screen fields
-        # overflow past 65535 (struct raises mid-task), and the other
-        # encoders would allocate absurd buffers
-        if not 1 <= dim <= 65535:
-            raise ValueError(f"{label} must be in 1..65535, got {dim}")
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        budget = target_w * target_h  # 1 byte/px stand-in for the codec
-        for pdf in it:
-            payloads, formats = [], []
-            for p, k, m in zip(pdf["payload"], pdf["kind"], pdf["meta"]):
-                img, fmt = _parse_image(p) if k == "image" else (None, None)
-                if img is not None:
-                    if fmt == "gif":
-                        # resize the INDEX matrix and keep the color
-                        # table — nearest-neighbor on an indexed image
-                        # never invents colors, so no quantization
-                        import numpy as np
-
-                        gw, gh, ct, gidx = _parse_gif_indexed(p)
-                        rows = (np.arange(target_h) * gh) // target_h
-                        cols = (np.arange(target_w) * gw) // target_w
-                        payloads.append(_encode_gif(ct, gidx[rows][:, cols]))
-                        formats.append(fmt)
-                        continue
-                    small = _resize_px(img, target_w, target_h)
-                    encode = {
-                        "bmp": _encode_bmp,
-                        "pgm": _encode_pgm,
-                        "png": _encode_png,
-                    }.get(fmt, _encode_ppm)
-                    payloads.append(encode(small))
-                    formats.append(fmt)
-                    continue
-                if not _FAKE_DECODE:  # pragma: no cover — real codec seam
-                    raise NotImplementedError(
-                        "real resize requires codec libraries (PIL/av) "
-                        "not present in this environment"
-                    )
-                payloads.append((p or b"")[:budget].ljust(budget, b"\0"))
-                formats.append((m or {}).get("format"))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "payload": payloads,
-                    "meta": [
-                        {"width": target_w, "height": target_h, "format": fmt}
-                        for fmt in formats
-                    ],
-                }
-            )
-
-    return media.select("media_id", "kind", "payload", "meta").mapInPandas(
-        _batches, schema=MEDIA_SCHEMA
-    )
-
-
-def _encode_wav_mono16(rate: int, samples) -> bytes:
-    """Minimal RIFF/WAVE encoder: 16-bit PCM, mono.  Quantization is
-    clip-to-[-1,1] then floor(x*32768 + 0.5) clamped to int16 — the
-    inverse of _parse_wav's /32768 scaling, so parse(encode(x))
-    returns exactly the quantized samples (roundtrip property
-    pytest-pinned)."""
-    import struct
-
-    import numpy as np
-
-    x = np.clip(np.asarray(samples, dtype=np.float64), -1.0, 1.0)
-    pcm = np.clip(np.floor(x * 32768.0 + 0.5), -32768, 32767).astype("<i2")
-    data = pcm.tobytes()
-    hdr = struct.pack(
-        "<4sI4s4sIHHIIHH4sI",
-        b"RIFF", 36 + len(data), b"WAVE",
-        b"fmt ", 16, 1, 1, rate, rate * 2, 2, 16,
-        b"data", len(data),
-    )
-    return hdr + data
-
-
-def resample_audio(media: DataFrame, factor: int) -> DataFrame:
-    """Audio decimation stage: (media_id, kind, payload, meta) → same
-    layout with every ``factor``-th mono sample kept and the payload
-    re-encoded as 16-bit mono WAV at rate // factor.  WAV (8/16/24-bit
-    + float PCM) and AIFF payloads decimate for REAL through the
-    stdlib codecs — parse to mono float, stride-slice, re-encode; a
-    real anti-aliased resampler would low-pass first (scipy/soxr),
-    which is the documented external-library boundary, same as the
-    lossy image codecs.  Non-audio rows pass through UNCHANGED (a
-    resampler must not mangle images); unparsable audio payloads take
-    the deterministic stand-in (every factor-th byte) behind the
-    _FAKE_DECODE seam.  Output meta: width = sample count, height =
-    output rate, format 'wav'.
-
-    Spark-side plumbing is the real thing: Arrow-batched mapInPandas,
-    schema-stable, partition-preserving — payload bytes never
-    shuffle."""
-    if not isinstance(factor, int) or factor < 1:
-        # fail fast on the driver, not inside a task (ADVICE r8 rule)
-        raise ValueError(f"factor must be an integer >= 1, got {factor}")
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_p, out_m = [], []
-            for p, k, m in zip(pdf["payload"], pdf["kind"], pdf["meta"]):
-                if k != "audio":
-                    out_p.append(p)
-                    out_m.append(m)
-                    continue
-                aud = _parse_wav(p)
-                if aud is None:
-                    aud = _parse_aiff(p)
-                if aud is not None:
-                    rate, _n_ch, s = aud
-                    kept = s[::factor]
-                    new_rate = max(rate // factor, 1)
-                    out_p.append(_encode_wav_mono16(new_rate, kept))
-                    out_m.append(
-                        {"width": len(kept), "height": new_rate,
-                         "format": "wav"}
-                    )
-                    continue
-                if not _FAKE_DECODE:  # pragma: no cover — real codec seam
-                    raise NotImplementedError(
-                        "real audio resampling requires codec libraries "
-                        "(soundfile/soxr) not present in this environment"
-                    )
-                kept_b = (p or b"")[::factor]
-                out_p.append(kept_b)
-                out_m.append(
-                    {"width": len(kept_b), "height": 0,
-                     "format": (m or {}).get("format")}
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "payload": out_p,
-                    "meta": out_m,
-                }
-            )
-
-    return media.select("media_id", "kind", "payload", "meta").mapInPandas(
-        _batches, schema=MEDIA_SCHEMA
-    )
-
-
-def _parse_y4m(payload: bytes):
-    """Parse an uncompressed YUV4MPEG2 (.y4m) video: stream header
-    (W/H/F rate tags, C420* or C444 colorspace), then FRAME-delimited
-    raw planes.  Returns (width, height, fps_num, fps_den, list of
-    H×W uint8 LUMA planes) or None.  The luma plane is what frame
-    statistics run on; chroma is skipped by stride.  Pure numpy."""
-    import numpy as np
-
-    if not payload.startswith(b"YUV4MPEG2"):
-        return None
-    nl = payload.find(b"\n")
-    if nl < 0:
-        return None
-    w = h = None
-    num, den = 25, 1
-    csp = "420"
-    for tag in payload[9:nl].split(b" "):
-        if not tag:
-            continue
-        k, v = tag[:1], tag[1:]
-        try:
-            if k == b"W":
-                w = int(v)
-            elif k == b"H":
-                h = int(v)
-            elif k == b"F":
-                num, den = (int(x) for x in v.split(b":"))
-            elif k == b"C":
-                csp = v.decode("ascii", "replace")
-        except ValueError:
-            return None
-    if not w or not h or w <= 0 or h <= 0 or num <= 0 or den <= 0:
-        return None
-    if csp.startswith("420"):
-        frame_bytes = w * h * 3 // 2
-    elif csp.startswith("444"):
-        frame_bytes = w * h * 3
-    else:
-        return None  # interlaced/exotic chroma → stand-in
-    frames = []
-    i = nl + 1
-    while i < len(payload):
-        fnl = payload.find(b"\n", i)
-        if fnl < 0 or payload[i : i + 5] != b"FRAME":
-            return None
-        i = fnl + 1
-        if i + frame_bytes > len(payload):
-            return None  # truncated frame
-        y = np.frombuffer(payload, dtype=np.uint8, count=w * h, offset=i)
-        frames.append(y.reshape(h, w))
-        i += frame_bytes
-    if not frames:
-        return None
-    return w, h, num, den, frames
-
-
-def extract_frame_features(media: DataFrame, every_n: int = 1) -> DataFrame:
-    """Per-frame feature extraction for video payloads — the REAL
-    frame-sampling path: YUV4MPEG2 payloads decode (header parse,
-    frame stride, luma plane) and every ``every_n``-th frame emits
-    genuine luma statistics (mean/std/min/max, frame index, timestamp
-    seconds, dims); non-Y4M video payloads keep the deterministic
-    md5 stand-in — one pseudo-frame per 64-byte window — so the
-    1→N fan-out plumbing is exercised for every row.
-
-    Output: (media_id, frame_idx, n_frames, features[FEATURE_DIM]).
-
-    Scale: mapInPandas, payload bytes never shuffle, and the fan-out
-    is rows×frames — bound it with ``every_n`` (the sampling dial a
-    real pipeline sets to ~1 frame/sec) before any downstream join."""
-    if every_n < 1:
-        # fail fast on the driver: range(0, n, 0) would raise
-        # ValueError inside the task and negatives silently emit
-        # nothing
-        raise ValueError(f"every_n must be >= 1, got {every_n}")
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"media_id": [], "frame_idx": [], "n_frames": [], "features": []}
-            for mid, kind, p in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                if kind != "video":
-                    continue
-                vid = _parse_y4m(bytes(p) if p is not None else b"")
-                if vid is not None:
-                    w, h, num, den, frames = vid
-                    n = len(frames)
-                    for fi in range(0, n, every_n):
-                        y = frames[fi].astype("float64") / 255.0
-                        out["media_id"].append(mid)
-                        out["frame_idx"].append(fi)
-                        out["n_frames"].append(n)
-                        out["features"].append([
-                            float(y.mean()),
-                            float(y.std()),
-                            float(y.min()),
-                            float(y.max()),
-                            float(fi) * den / num,  # timestamp sec
-                            float(w) / float(h),
-                            float(n),
-                            float(num) / float(den),
-                        ])
-                    continue
-                if not _FAKE_DECODE:  # pragma: no cover — real codec seam
-                    raise NotImplementedError(
-                        "real video decoding requires codec libraries (av) "
-                        "not present in this environment"
-                    )
-                raw = bytes(p) if p is not None else b""
-                n = max(1, (len(raw) + 63) // 64)
-                for fi in range(0, n, every_n):
-                    digest = hashlib.md5(raw[fi * 64 : (fi + 1) * 64]).digest()
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(fi)
-                    out["n_frames"].append(n)
-                    out["features"].append(
-                        [digest[i] / 255.0 for i in range(FEATURE_DIM)]
-                    )
-            if not out["media_id"]:
-                continue  # all-image batch: empty float64 cols would
-                # fail Arrow's list<float> conversion
-            out["features"] = pd.Series(out["features"], dtype="object")
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        _batches,
-        schema="media_id long, frame_idx int, n_frames int, features array<float>",
     )
 
 

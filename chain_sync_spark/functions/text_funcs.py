@@ -37,25 +37,6 @@ MD_LINK_RE = r"(!?)\[([^\]]*)\]\(([^)\s]+)[^)]*\)"
 # non-LF line ending.  Groups: 2 = marks, 3 = title (which keeps a
 # trailing \r on CRLF input — in BOTH engines identically).
 MD_HEADING_RE = r"(^|\n)(#{1,6})[ \t]+([^\n]+)"
-# Round-13 block-element slice (VERDICT r12 item 6), same shared
-# Java/RE2 subset discipline as the heading pattern: explicit (^|\n)
-# anchoring (no (?m)), no lookbehind, no non-greedy-across-newline
-# (fenced bodies are [^`]* — markdown-it treats an unterminated or
-# backtick-bearing fence as text, and so do we).
-# Fenced code ```...``` — matched so it can be STRIPPED before the
-# list/blockquote extraction (a bullet inside a fence is code, not a
-# list item; handlers/comments.js:43 renders fences to <pre> whose
-# content the double-strip then removes from the plain text).
-MD_FENCE_RE = r"```[^`]*```"
-# Bullet list items: -, * or + at line start (optional indent), a
-# space, then the item text.  Groups: 2 = marker, 3 = item text.
-MD_BULLET_RE = r"(^|\n)[ \t]*([-*+])[ \t]+([^\n]+)"
-# Ordered list items: 1-3 digits, '.' or ')', a space, then text.
-# Groups: 2 = number, 3 = item text.
-MD_ORDERED_RE = r"(^|\n)[ \t]*(\d{1,3})[.)][ \t]+([^\n]+)"
-# Blockquote lines: '>' at line start, optional single space, text.
-# Groups: 2 = quoted text.
-MD_BLOCKQUOTE_RE = r"(^|\n)[ \t]*>[ \t]?([^\n]+)"
 
 
 def extract_links(body: Column) -> Column:
@@ -97,38 +78,6 @@ def extract_headings(body: Column) -> Column:
             F.length(m).cast("int").alias("level"), t.alias("title")
         ),
     )
-
-
-def strip_fenced_code(body: Column) -> Column:
-    """Replace every ``` fenced code block with a single space —
-    run BEFORE list/blockquote extraction so fence contents never
-    count as block elements, mirroring markdown-it's fence→<pre>
-    rendering whose content the reference's double tag-strip then
-    drops from the plain text (handlers/comments.js:43-55)."""
-    return F.regexp_replace(body, MD_FENCE_RE, " ")
-
-
-def count_fenced_blocks(body: Column) -> Column:
-    """Number of complete ``` fenced code blocks in the body."""
-    return F.size(F.regexp_extract_all(body, F.lit(MD_FENCE_RE), 0))
-
-
-def extract_bullet_items(body: Column) -> Column:
-    """Bullet-list item texts (-, *, + markers), document order.
-    Callers that want markdown-it's semantics should pass the
-    fence-stripped body (see strip_fenced_code)."""
-    return F.regexp_extract_all(body, F.lit(MD_BULLET_RE), 3)
-
-
-def extract_ordered_items(body: Column) -> Column:
-    """Ordered-list item texts (``1.`` / ``1)`` markers), document
-    order, fence-stripping left to the caller as above."""
-    return F.regexp_extract_all(body, F.lit(MD_ORDERED_RE), 3)
-
-
-def extract_blockquotes(body: Column) -> Column:
-    """Blockquote line texts (``>`` prefix), document order."""
-    return F.regexp_extract_all(body, F.lit(MD_BLOCKQUOTE_RE), 2)
 
 
 def extract_image_srcs(body: Column) -> Column:

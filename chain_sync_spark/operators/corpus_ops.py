@@ -1102,30 +1102,12 @@ def profile_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeping the pass count at one), then a ``stack`` projection
     unpivots the 1-row result into a row per column.  The oracle
     intentionally takes the naive per-column UNION ALL route, so the
-    hash match proves the single-pass rewrite. The agg+stack builder
-    (operators/incremental.build_profile) is shared with
-    profile_column_stats_sketch, so the two schemas cannot drift
-    apart."""
+    hash match proves the single-pass rewrite (the agg+stack builder
+    is operators/incremental.build_profile)."""
     from chain_sync_spark.operators.incremental import build_profile
 
     o = table(spark, sf_dir, "orders").select(*PROFILE_COLS)
-    return build_profile(o, PROFILE_COLS, include_distinct=True)
-
-
-def profile_column_stats_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB form of profile_column_stats: distinct counts come
-    from HyperLogLog++ (approx_count_distinct) instead of exact
-    multi-COUNT(DISTINCT), so the plan has NO Expand — no row
-    multiplication on the full scan, constant sketch state per column.
-    Library operator (pytest-gated, not oracle-registered: the sketch
-    estimate is engine-specific by design); parity-within-tolerance
-    against the exact profile is asserted in tests/test_incremental.py
-    along with the Expand-free plan."""
-    from chain_sync_spark.operators.incremental import build_profile
-
-    o = table(spark, sf_dir, "orders").select(*PROFILE_COLS)
-    return build_profile(o, PROFILE_COLS, include_distinct=True,
-                         approx_distinct=True)
+    return build_profile(o, PROFILE_COLS)
 
 
 # n_nulls must CAST to BIGINT: DuckDB integer SUM returns HUGEINT,
@@ -1973,7 +1955,7 @@ def kmv_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     err_micros) — the calibration-table shape of
     minhash_estimate_error_audit, here for the cardinality sketch the
     profile tier would run where exact COUNT(DISTINCT) is too
-    expensive.  Unlike HLL++ (profile_column_stats_sketch), KMV is
+    expensive.  Unlike HLL++ (approx_count_distinct), KMV is
     DETERMINISTIC given the hash, hence oracle-able cross-engine; the
     wide product (63 x 2^60) runs in DECIMAL(38,0) with integral div,
     floor-identical to DuckDB's HUGEINT //.

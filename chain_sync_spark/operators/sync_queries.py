@@ -332,133 +332,6 @@ FROM fx
 """
 
 
-def markdown_lists_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3–F5 oracle-slice extension #3 (VERDICT r12 item 6): LISTS
-    (bullet + ordered), BLOCKQUOTES, and FENCED-CODE stripping over a
-    deterministically markdown-augmented documents corpus — the next
-    regex-expressible slice of the reference's markdown parse
-    (handlers/comments.js:43-55) after markdown_extract_builtin
-    (img-src + double-strip) and markdown_links_headings.  Fences are
-    counted on the raw body, then STRIPPED before list/blockquote
-    extraction — a bullet inside a fence is code, not a list item
-    (markdown-it renders fences to <pre>, whose content the
-    reference's double tag-strip removes).  Same shared Java/RE2
-    regex subset as the heading pattern: explicit (^|\\n) anchoring,
-    no lookbehind, no (?m).
-
-    Not in QUERIES: its oracle parity is checked by
-    tests/test_staged.py (dual transport).
-
-    Scale: per-row regexp projection, whole-stage codegen, zero
-    shuffles — same shape as the other markdown slices."""
-    from chain_sync_spark.functions.text_funcs import (
-        count_fenced_blocks,
-        extract_blockquotes,
-        extract_bullet_items,
-        extract_ordered_items,
-        strip_fenced_code,
-    )
-
-    d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    i = F.col("doc_id").cast("string")
-    m = F.pmod(F.col("doc_id"), F.lit(4))
-    nl = "\n"
-    # text coalesced to '' on BOTH sides, as in the sibling slices.
-    # m == 2 puts a bullet, an ordered item and a quote INSIDE a
-    # fence (must not extract) and one real bullet after it — the
-    # strip-before-extract semantics stay exercised by the certified
-    # query itself.
-    aug = F.concat(
-        F.coalesce(F.col("text"), F.lit("")),
-        F.when(
-            m == 0,
-            F.concat(
-                F.lit(nl + "- alpha "), i,
-                F.lit(nl + "* beta "), i,
-                F.lit(nl + "+ gamma "), i,
-            ),
-        )
-        .when(
-            m == 1,
-            F.concat(
-                F.lit(nl + "1. first "), i,
-                F.lit(nl + "2) second "), i,
-                F.lit(nl + "> quoted "), i,
-            ),
-        )
-        .when(
-            m == 2,
-            F.concat(
-                F.lit(nl + "```" + nl + "- not a list" + nl + "1. nor this"
-                      + nl + "> nor a quote" + nl + "```" + nl + "- real "),
-                i,
-            ),
-        )
-        .otherwise(F.lit("")),
-    )
-    stripped = strip_fenced_code(aug)
-    bullets = extract_bullet_items(stripped)
-    ordereds = extract_ordered_items(stripped)
-    quotes = extract_blockquotes(stripped)
-    return d.select(
-        "doc_id",
-        count_fenced_blocks(aug).cast("int").alias("n_fences"),
-        F.size(bullets).alias("n_bullets"),
-        F.array_join(F.array_sort(bullets), " | ").alias("bullet_items"),
-        F.size(ordereds).alias("n_ordered"),
-        F.array_join(F.array_sort(ordereds), " | ").alias("ordered_items"),
-        F.size(quotes).alias("n_quotes"),
-        F.array_join(F.array_sort(quotes), " | ").alias("quote_lines"),
-    )
-
-
-# DuckDB (RE2) rendering of the identical augmentation + patterns.
-# NOTE regexp_replace needs the explicit 'g' flag — DuckDB replaces
-# only the first match by default while Spark's regexp_replace is
-# always global (a one-fence corpus hides the difference; a
-# two-fence document diverges silently).
-_MD_BLOCKS_ORACLE = r"""
-WITH aug AS (
-  SELECT doc_id,
-         COALESCE(text, '') || CASE CAST(doc_id % 4 AS INT)
-           WHEN 0 THEN chr(10) || '- alpha ' || doc_id::VARCHAR
-                || chr(10) || '* beta ' || doc_id::VARCHAR
-                || chr(10) || '+ gamma ' || doc_id::VARCHAR
-           WHEN 1 THEN chr(10) || '1. first ' || doc_id::VARCHAR
-                || chr(10) || '2) second ' || doc_id::VARCHAR
-                || chr(10) || '> quoted ' || doc_id::VARCHAR
-           WHEN 2 THEN chr(10) || '```' || chr(10) || '- not a list'
-                || chr(10) || '1. nor this' || chr(10) || '> nor a quote'
-                || chr(10) || '```' || chr(10) || '- real ' || doc_id::VARCHAR
-           ELSE '' END AS b
-  FROM documents
-),
-st AS (
-  SELECT doc_id,
-         CAST(len(regexp_extract_all(b, '```[^`]*```')) AS INT) AS n_fences,
-         regexp_replace(b, '```[^`]*```', ' ', 'g') AS s
-  FROM aug
-)
-SELECT doc_id, n_fences,
-       CAST(len(regexp_extract_all(s, '(^|\n)[ \t]*([-*+])[ \t]+([^\n]+)', 3))
-         AS INT) AS n_bullets,
-       COALESCE(array_to_string(list_sort(
-         regexp_extract_all(s, '(^|\n)[ \t]*([-*+])[ \t]+([^\n]+)', 3)
-       ), ' | '), '') AS bullet_items,
-       CAST(len(regexp_extract_all(s, '(^|\n)[ \t]*(\d{1,3})[.)][ \t]+([^\n]+)', 3))
-         AS INT) AS n_ordered,
-       COALESCE(array_to_string(list_sort(
-         regexp_extract_all(s, '(^|\n)[ \t]*(\d{1,3})[.)][ \t]+([^\n]+)', 3)
-       ), ' | '), '') AS ordered_items,
-       CAST(len(regexp_extract_all(s, '(^|\n)[ \t]*>[ \t]?([^\n]+)', 2))
-         AS INT) AS n_quotes,
-       COALESCE(array_to_string(list_sort(
-         regexp_extract_all(s, '(^|\n)[ \t]*>[ \t]?([^\n]+)', 2)
-       ), ' | '), '') AS quote_lines
-FROM st
-"""
-
-
 # the same augmentation + regex chains, rendered for DuckDB (RE2):
 # patterns stay inside the Java/RE2 shared subset; '' escapes the
 # single quotes the img-src char class needs

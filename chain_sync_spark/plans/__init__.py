@@ -1,7 +1,6 @@
 """Physical-plan inspection helpers."""
 
 from chain_sync_spark.plans.audit import (  # noqa: F401
-    assert_no_exchange,
     broadcasts,
     exchanges,
     executed_plan,

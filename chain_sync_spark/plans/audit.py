@@ -33,11 +33,6 @@ def exchanges(df: DataFrame) -> int:
     return executed_plan(df).count("Exchange")
 
 
-def assert_no_exchange(df: DataFrame) -> None:
-    plan = executed_plan(df)
-    assert "Exchange" not in plan, f"unexpected shuffle:\n{plan}"
-
-
 def formatted_plan(df: DataFrame) -> str:
     """`.explain("formatted")` as a string — numbered operator list
     plus per-node detail blocks (the representation the duplicate-

@@ -21,8 +21,6 @@ from pyspark.sql import functions as F
 
 OP_STREAM_SCHEMA = "block_num long, ts timestamp, op_type string, op string"
 
-OP_TYPES = ["comment", "vote", "custom_json", "account_update"]
-
 # deterministic pseudo-random helper: uniform in [0, m) from id+salt
 def _h(salt: str, m: int):
     return F.pmod(F.xxhash64(F.col("id"), F.lit(salt)), F.lit(m))

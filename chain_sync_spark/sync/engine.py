@@ -81,7 +81,6 @@ from chain_sync_spark.sync.handlers import (
     PROFILE_SCHEMA,
     account_activity_upserts,
     comments_to_post_upserts,
-    replies_to_tag_updates,
     votes_to_vote_upserts,
 )
 from chain_sync_spark.sync.merge import (
@@ -131,12 +130,6 @@ class SyncEngine:
     spark: SparkSession
     store_dir: str
     dry_run: bool = False  # reference DISABLE_UPDATE_SETTINGS
-    # Reply-driven stockimage_tags updates are DEAD CODE in the shipped
-    # reference (the handleReply call site is commented out,
-    # comments.js:115, and its allowlist check is a tautology). Default
-    # matches the shipped behavior (off); enabling runs the intended
-    # handleReply semantics implemented in replies_to_tag_updates.
-    enable_reply_tag_updates: bool = False
     # J3 authoritative snapshot ("authoritative store wins",
     # comments.js:123-142): a posts-content relation whose non-null
     # columns override op-derived content for posts it contains. The
@@ -191,7 +184,7 @@ class SyncEngine:
                 ),
                 key_cols=["post_id"],
                 partition_cols=["bucket"],
-                partition_stable=True,
+                target_schema=INDEX_SCHEMA,
             )
         if os.path.exists(self.posts_index_dir):
             return self.spark.read.schema(INDEX_SCHEMA).parquet(self.posts_index_dir)
@@ -210,9 +203,7 @@ class SyncEngine:
         before any merge starts (``_index_slice``), so each merge reads
         only its own target and driver-held frames. Replay safety is
         unchanged: the caller advances the cursor only after all three
-        commit, and every merge is idempotent. The reply-tag merge (off
-        by default) reads the index the round just wrote, so it runs
-        after the three.
+        commit, and every merge is idempotent.
 
         ``post_keys``: the batch's ``batch_stats`` keys."""
         typed = classify(ops)
@@ -225,24 +216,6 @@ class SyncEngine:
                 futures += self._submit_posts_merges(pool, comments, votes, post_keys)
             for future in futures:
                 future.result()  # re-raises merge errors before commit
-
-        if self.enable_reply_tag_updates:
-            # reply-driven tag updates (intended handleReply, P7/J5):
-            # update-only, so a reply to a nonexistent post is dropped.
-            # Off by default: dead code in the shipped reference (see
-            # the dataclass field note).
-            tag_updates = replies_to_tag_updates(comments).join(
-                self.posts_index().select("post_id", "year", "month"), "post_id"
-            )
-            merge_parquet(
-                self.spark,
-                self.posts_dir,
-                tag_updates,
-                key_cols=["post_id"],
-                partition_cols=["year", "month"],
-                partition_stable=True,  # year/month come from the index
-                target_schema=POSTS_SCHEMA,
-            )
 
     def _merge_accounts(self, comments, votes, accounts) -> None:
         # accounts: last_active max + latest profile (A2/F9), hash-
@@ -257,7 +230,6 @@ class SyncEngine:
             key_cols=["name"],
             merge_exprs={"last_active": max_of, "profile": take_source},
             partition_cols=["bucket"],
-            partition_stable=True,
             target_schema=ACCOUNTS_SCHEMA,
         )
 
@@ -343,7 +315,6 @@ class SyncEngine:
                 key_cols=["post_id"],
                 merge_exprs={"year": keep_target, "month": keep_target},
                 partition_cols=["bucket"],
-                partition_stable=True,
                 target_schema=INDEX_SCHEMA,
             ),
         ]
@@ -356,6 +327,10 @@ class SyncEngine:
         source holds (a block with no ops is an empty round); without
         it, stop after the source's last block. Returns the final
         cursor."""
+        if batch_size < 1:
+            # a round of 0 blocks never advances the cursor; a negative
+            # one moves it backwards
+            raise ValueError(f"batch_size must be >= 1, got {batch_size}")
         cursor = read_cursor(self.spark, self.cursor_path, default=0)
         if stop_block is not None:
             last = stop_block - 1

@@ -26,19 +26,6 @@ PROFILE_SCHEMA = "profile struct<name string, about string>"
 
 STOCK_COMMUNITIES = ("hive-118554", "hivestockimages")
 
-# P7 author allow-list for reply-driven tag updates. The reference's
-# check (comments.js:66) includes `comment.author` itself — a
-# tautology bug; we implement the intended literal list.
-TAG_UPDATE_ALLOWLIST = (
-    "hive-118554",
-    "minismallholding",
-    "crosheille",
-    "kattycrochet",
-)
-
-TAG_UPDATE_COMMAND = "!update-stock-image-tags"
-
-
 # Content columns an authoritative snapshot may override (J3): the
 # reference's getContent re-fetch returns the full post content and
 # indexes THAT for already-existing posts (comments.js:123-142).
@@ -139,40 +126,6 @@ def comments_to_post_upserts(
             ]
         )
     return out
-
-
-def replies_to_tag_updates(comments: DataFrame) -> DataFrame:
-    """Reply-driven stock-image tag updates — the *intended*
-    handleReply semantics (comments.js:61-82; the call site is
-    commented out in the shipped revision, comments.js:115):
-
-    a reply whose body contains the update command (P8), authored by
-    an allow-listed account (P7), replaces the PARENT post's
-    stockimage_tags with the reply's hashtags (F7/F8). The parent key
-    is the J5 parent-reference hash — the reference hashes the reply's
-    own id there (a latent bug); we key on (parent_author,
-    parent_permlink) as intended.
-
-    Output: (post_id, stockimage_tags) update rows, last reply per
-    parent wins within a batch.
-    """
-    replies = comments.filter(F.col("parent_author") != "")
-    eligible = replies.filter(
-        F.col("body").contains(TAG_UPDATE_COMMAND)
-        & F.col("author").isin(*TAG_UPDATE_ALLOWLIST)
-    )
-    keyed = eligible.select(
-        surrogate_id("parent_author", "parent_permlink").alias("post_id"),
-        F.array_join(extract_hashtags(F.col("body")), " ").alias("stockimage_tags"),
-        "block_num",
-        "timestamp",
-    )
-    w = Window.partitionBy("post_id").orderBy(F.desc("block_num"), F.desc("timestamp"))
-    return (
-        keyed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("post_id", "stockimage_tags")
-    )
 
 
 def votes_to_vote_upserts(votes: DataFrame, existing_posts: DataFrame) -> DataFrame:

@@ -74,8 +74,8 @@ def merge_parquet(
     merge_exprs: dict[str, MergeExpr] | None = None,
     partition_cols: list[str] | None = None,
     partition_source: DataFrame | None = None,
-    partition_stable: bool = False,
-    target_schema: str | None = None,
+    *,
+    target_schema: str,
 ) -> None:
     """MERGE `updates` into the parquet table at `target_dir`.
 
@@ -84,16 +84,14 @@ def merge_parquet(
 
     `partition_source` (optional): a slim (key_cols + partition_cols)
     mapping of where each existing key currently lives — e.g. a
-    maintained index table. When omitted it is derived from the
-    target (column-pruned scan).
+    maintained index table. An update for a key it holds lands in
+    that key's partition. When omitted, the updates already carry
+    their partition columns (a hash bucket of the key, or values read
+    from the target rows).
 
-    `partition_stable`: set when the partition columns are a pure
-    function of the key (e.g. a hash bucket) — an update can never
-    move a key across partitions, so the resolution join is skipped.
-
-    `target_schema` (optional DDL string): the target's declared
-    schema, partition columns included. The target read then runs no
-    schema-inference job; when omitted, Spark infers it.
+    `target_schema` (DDL string): the target's declared schema,
+    partition columns included, so the target read runs no
+    schema-inference job.
 
     NB (partitioned targets): merges rewrite only touched partition
     directories, so a column added by a later merge would reach only
@@ -113,22 +111,17 @@ def merge_parquet(
         swap_dir(target_dir, _staged_write(updates, partition_cols, key_cols), depth)
         return
 
-    reader = spark.read if target_schema is None else spark.read.schema(target_schema)
-    target = reader.parquet(target_dir)
+    target = spark.read.schema(target_schema).parquet(target_dir)
 
     cached = None
     if partition_cols:
-        if not partition_stable:
+        if partition_source is not None:
             # An update for an existing key must land in the partition
             # the key currently lives in — otherwise a post edited in a
             # later month would be merged only into the new partition
             # and the stale copy in the old one would survive
             # (duplicate key).
-            part_map = (
-                partition_source
-                if partition_source is not None
-                else target.select(*key_cols, *partition_cols)
-            ).alias("pm")
+            part_map = partition_source.alias("pm")
             u = updates.alias("u")
             cond = [F.col(f"u.{k}").eqNullSafe(F.col(f"pm.{k}")) for k in key_cols]
             updates = u.join(part_map, cond, "left").select(

@@ -50,7 +50,6 @@ def apply_community_mutings(
         flagged,
         key_cols=["post_id"],
         merge_exprs={"muted_in_community": take_source},
-        partition_cols=["year", "month"],
-        partition_stable=True,  # year/month read from the target rows
+        partition_cols=["year", "month"],  # read from the target rows
         target_schema=POSTS_SCHEMA,
     )

@@ -1,96 +1,13 @@
-"""Incremental rollup maintenance: merging per-batch partial
-aggregates reproduces the full recompute exactly, in any batch
-order, including keys that appear in only some batches."""
+"""Mergeable sketch partials (operators/incremental.py): histogram
+partials folded in any batch split equal the one-pass sketch, the
+quantiles served from them stay within the bin bound, and the Bloom
+positions of every key are occupied bits."""
 
 from pyspark.sql import functions as F
 
-from chain_sync_spark.operators.incremental import (
-    finalize_rollup,
-    merge_rollup,
-    rollup_events,
-)
 from chain_sync_spark.tables import table
 
-KEYS = ["user_id", "event_type"]
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _canon(df):
-    rows = finalize_rollup(df).collect()
-    return sorted(
-        (r["user_id"], r["event_type"], r["n_events"], round(r["sum_value"], 6),
-         round(r["avg_value"], 9), r["min_ts"], r["max_ts"])
-        for r in rows
-    )
-
-
-def test_incremental_rollup_matches_full_recompute(spark):
-    ev = table(spark, SF_DIR, "events")
-    batches = [ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i) for i in range(3)]
-
-    state = rollup_events(batches[0], KEYS)
-    for b in batches[1:]:
-        state = merge_rollup(state, rollup_events(b, KEYS), KEYS)
-
-    assert _canon(state) == _canon(rollup_events(ev, KEYS))
-
-
-def test_incremental_rollup_order_invariant(spark):
-    ev = table(spark, SF_DIR, "events")
-    batches = [ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i) for i in range(3)]
-
-    fwd = rollup_events(batches[0], KEYS)
-    for b in batches[1:]:
-        fwd = merge_rollup(fwd, rollup_events(b, KEYS), KEYS)
-    rev = rollup_events(batches[2], KEYS)
-    for b in (batches[1], batches[0]):
-        rev = merge_rollup(rev, rollup_events(b, KEYS), KEYS)
-
-    assert _canon(fwd) == _canon(rev)
-
-
-def test_merge_handles_disjoint_keys(spark):
-    a = spark.createDataFrame(
-        [(1, "x", "2024-01-01 00:00:00", 5.0)],
-        "user_id long, event_type string, ts string, value double",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    b = spark.createDataFrame(
-        [(2, "y", "2024-01-02 00:00:00", 7.0)],
-        "user_id long, event_type string, ts string, value double",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    merged = merge_rollup(rollup_events(a, KEYS), rollup_events(b, KEYS), KEYS)
-    rows = {(r["user_id"], r["event_type"]): r for r in finalize_rollup(merged).collect()}
-    assert rows[(1, "x")]["n_events"] == 1 and rows[(1, "x")]["sum_value"] == 5.0
-    assert rows[(2, "y")]["n_events"] == 1 and rows[(2, "y")]["sum_value"] == 7.0
-
-
-def test_sketch_profile_parity_and_no_expand(spark):
-    """The HLL++ profile variant must (a) agree exactly on every
-    non-distinct stat, (b) land within HLL++'s documented tolerance
-    (~2.3% rsd; allow 3x) on distinct counts, and (c) plan WITHOUT
-    Expand — the whole point of the sketch at 100 TB."""
-    from chain_sync_spark.operators.corpus_ops import (
-        profile_column_stats,
-        profile_column_stats_sketch,
-    )
-    from chain_sync_spark.plans.audit import executed_plan
-
-    exact = {r.col_name: r for r in profile_column_stats(spark, SF_DIR).collect()}
-    approx_df = profile_column_stats_sketch(spark, SF_DIR)
-    approx = {r.col_name: r for r in approx_df.collect()}
-    assert set(exact) == set(approx)
-    for c, e in exact.items():
-        a = approx[c]
-        assert (a.n_rows, a.n_nulls, a.min_val, a.max_val) == (
-            e.n_rows, e.n_nulls, e.min_val, e.max_val
-        )
-        assert abs(a.n_distinct - e.n_distinct) <= max(3, 0.07 * e.n_distinct)
-
-    plan = executed_plan(approx_df)
-    assert "Expand" not in plan, "sketch profile must not plan an Expand"
-    assert "Expand" in executed_plan(profile_column_stats(spark, SF_DIR)), (
-        "exact profile is the Expand form this test contrasts against"
-    )
 
 
 def test_hist_sketch_fold_and_quantile_bounds(spark):
@@ -208,15 +125,14 @@ def test_quantile_sketch_orders_serves_quantile_from_hist(spark):
 
 
 def test_bloom_fold_order_invariant_and_no_false_negatives(spark):
-    """Bloom partials folded in any batch split equal the one-pass bit
-    set (idempotent unions), every key of the folded stream hits (no
-    false negatives, ever), and the state never exceeds BLOOM_BITS."""
+    """Every key's K positions are occupied bits of the batch's Bloom
+    partial (no false negatives, ever), and the state never exceeds
+    BLOOM_BITS."""
     from chain_sync_spark.operators.incremental import (
         BLOOM_BITS,
         BLOOM_K,
         bloom_bits,
         bloom_positions,
-        merge_bloom,
     )
 
     docs = table(spark, SF_DIR, "documents").select(
@@ -225,13 +141,7 @@ def test_bloom_fold_order_invariant_and_no_false_negatives(spark):
     one_pass = {r.bit for r in bloom_bits(docs, "fp").collect()}
     assert len(one_pass) <= BLOOM_BITS
 
-    parts = docs.randomSplit([1.0, 1.0, 1.0], seed=11)
-    folded_df = bloom_bits(parts[0], "fp")
-    for p in parts[1:] + [parts[1]]:  # re-fold one part: idempotent
-        folded_df = merge_bloom(folded_df, bloom_bits(p, "fp"))
-    assert {r.bit for r in folded_df.collect()} == one_pass
-
-    # no false negatives: every folded key's K positions are occupied
+    # no false negatives: every key's K positions are occupied
     missing = (
         docs.select(F.explode(bloom_positions(F.col("fp"))).alias("bit"))
         .distinct()

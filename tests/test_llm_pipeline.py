@@ -299,11 +299,11 @@ def test_decode_media_stub_contract():
 
 @pytest.mark.slow
 def test_null_and_empty_payloads_are_in_contract(spark):
-    """Null/empty payloads flow through every media stage without a
+    """Null/empty payloads flow through the media stages without a
     task-side crash: decode_media falls back to the md5 stand-in,
     _parse_image short-circuits before the GIF/PNG probes (which
-    assume len()/startswith), and the full pipeline (features +
-    resize) processes a null-payload row."""
+    assume len()/startswith), and the feature stage processes a
+    null-payload row."""
     assert len(mm.decode_media(None, "image")) == mm.FEATURE_DIM
     assert len(mm.decode_media(b"", "image")) == mm.FEATURE_DIM
     assert mm._parse_image(None) == (None, None)
@@ -316,23 +316,6 @@ def test_null_and_empty_payloads_are_in_contract(spark):
     )
     feats = {r.media_id: r for r in mm.extract_features(media).collect()}
     assert feats[1]["n_bytes"] == 0 and len(feats[1]["features"]) == mm.FEATURE_DIM
-    resized = {r.media_id: r for r in mm.resize_media(media, 4, 2).collect()}
-    assert len(resized[1]["payload"]) == 8  # byte-budget stand-in
-
-
-def test_frame_and_resize_dials_fail_fast():
-    """Bad dials raise on the driver, not inside a task: every_n < 1
-    (range step 0 / silent empty) and resize targets outside the GIF
-    2-byte field range."""
-    import pytest
-
-    dummy = object()  # validation fires before the DataFrame is touched
-    for bad in (0, -3):
-        with pytest.raises(ValueError, match="every_n"):
-            mm.extract_frame_features(dummy, every_n=bad)
-    for w, h in ((0, 4), (4, 0), (70_000, 4), (4, 70_000), (-1, 4)):
-        with pytest.raises(ValueError, match="1..65535"):
-            mm.resize_media(dummy, w, h)
 
 
 def test_portable_hash_matches_duckdb(spark):
@@ -347,26 +330,6 @@ def test_portable_hash_matches_duckdb(spark):
             f"SELECT {sk.hash60_sql('?')}", [v]
         ).fetchone()[0]
         assert got[v] == expect, v
-
-
-def test_resize_media_shape_and_metadata(spark, doc_dir):
-    """Resize stage: schema-stable mapInPandas, payload re-budgeted to
-    the target dims, metadata math applied, format preserved."""
-    docs = spark.read.parquet(f"{doc_dir}/documents.parquet")
-    media = mm.documents_as_media(docs)
-    out = mm.resize_media(media, target_w=16, target_h=4)
-    assert out.schema.simpleString() == media.schema.simpleString()
-    rows = out.collect()
-    assert len(rows) == docs.count()
-    for r in rows:
-        assert len(r["payload"]) == 16 * 4
-        assert r["meta"]["width"] == 16 and r["meta"]["height"] == 4
-        assert r["meta"]["format"] == "utf-8"
-    # deterministic: short payloads pad, long payloads truncate
-    a = {r["media_id"]: bytes(r["payload"]) for r in rows}
-    b = {r["media_id"]: bytes(r["payload"])
-         for r in mm.resize_media(media, 16, 4).collect()}
-    assert a == b
 
 
 def test_quant_codes_match_duckdb_batch(spark):
@@ -653,10 +616,8 @@ def test_ppm_decode_real_pixels():
 
 
 def test_ppm_pipeline_through_mapinpandas(spark):
-    """Real PPM payloads ride the Arrow-batched stages end to end:
-    extract_features emits the true pixel statistics, resize_media
-    nearest-neighbor-resamples and re-encodes P6 (dims, format, and
-    exact pixels all checked against a numpy reference); a non-PPM
+    """Real PPM payloads ride the Arrow-batched feature stage end to
+    end: extract_features emits the true pixel statistics; a non-PPM
     row in the same batch takes the stand-in path untouched."""
     import numpy as np
 
@@ -678,21 +639,6 @@ def test_ppm_pipeline_through_mapinpandas(spark):
         np.float32(b / 255.0)
         for b in __import__("hashlib").md5(b"just text").digest()[: mm.FEATURE_DIM]
     ]
-
-    out = {r.media_id: r for r in mm.resize_media(media, 4, 2).collect()}
-    for mid, src in ((1, px1), (2, px2)):
-        img = mm._parse_ppm(bytes(out[mid].payload))
-        assert img is not None
-        w, h, maxval, got_px = img
-        assert (w, h, maxval) == (4, 2, 255)
-        rowsel = (np.arange(2) * src.shape[0]) // 2
-        colsel = (np.arange(4) * src.shape[1]) // 4
-        assert (got_px == src[rowsel][:, colsel]).all()
-        assert out[mid].meta.format == "ppm"
-        assert (out[mid].meta.width, out[mid].meta.height) == (4, 2)
-    # the text row keeps the byte-budget stand-in
-    assert len(bytes(out[3].payload)) == 8
-    assert out[3].meta.format == "utf-8"
 
 
 def _wav_bytes(samples16, rate=8000, n_ch=1, extra_chunk=False):
@@ -800,10 +746,9 @@ def test_bmp_decode_real_pixels():
 
 
 def test_bmp_roundtrip_and_resize_pipeline(spark):
-    """parse∘encode is identity on pixels; through the Arrow stages a
-    BMP row resizes for real (exact nearest-neighbor reference) and
-    re-encodes as BMP while a PPM row in the same batch re-encodes as
-    P6 — each format stays itself."""
+    """parse∘encode is identity on pixels; through the Arrow feature
+    stage a BMP row yields its true pixel statistics beside a PPM row
+    in the same batch."""
     import numpy as np
 
     bmp, bpx = _bmp_bytes(6, 4, seed=8)
@@ -815,27 +760,17 @@ def test_bmp_roundtrip_and_resize_pipeline(spark):
          (2, "image", bytearray(ppm), (5, 5, "ppm"))],
         mm.MEDIA_SCHEMA,
     )
-    out = {r.media_id: r for r in mm.resize_media(media, 3, 2).collect()}
-    got = mm._parse_bmp(bytes(out[1].payload))
-    assert got is not None and out[1].meta.format == "bmp"
-    rowsel = (np.arange(2) * 4) // 2
-    colsel = (np.arange(3) * 6) // 3
-    assert (got[3] == bpx[rowsel][:, colsel]).all()
-    assert (got[0], got[1]) == (3, 2)
-    assert mm._parse_ppm(bytes(out[2].payload)) is not None
-    assert out[2].meta.format == "ppm"
     feats = {r.media_id: r.features
              for r in mm.extract_features(media).collect()}
     fb = bpx.astype(np.float64) / 255.0
     assert abs(feats[1][3] - fb.mean(axis=2).mean()) < 1e-6
 
 
-def test_pgm_decode_resize_and_gray_equivalence(spark):
+def test_pgm_decode_resize_and_gray_equivalence():
     """The P5 grayscale codec: features equal the P6 encoding of the
     same gray pixels (channel means == gray mean), header comments
-    parse, resize re-encodes as P5 with exact nearest-neighbor
-    pixels, a P5 row and a P6 row coexist in one Arrow batch, and
-    malformed/truncated payloads fall back to the stand-in."""
+    parse, and malformed/truncated payloads fall back to the
+    stand-in."""
     import numpy as np
 
     rng = np.random.RandomState(11)
@@ -846,21 +781,6 @@ def test_pgm_decode_resize_and_gray_equivalence(spark):
     got = mm.decode_media(pgm, "image")
     assert got == mm.decode_media(ppm, "image")
     assert got[0] == got[1] == got[2] == got[3]  # channels == gray mean
-
-    p2, px2 = _ppm_bytes(5, 5, seed=12)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(pgm), (6, 4, "pgm")),
-         (2, "image", bytearray(p2), (5, 5, "ppm"))],
-        mm.MEDIA_SCHEMA,
-    )
-    out = {r.media_id: r for r in mm.resize_media(media, 3, 2).collect()}
-    small = mm._parse_pgm(bytes(out[1].payload))
-    assert small is not None and out[1].meta.format == "pgm"
-    rowsel = (np.arange(2) * 4) // 2
-    colsel = (np.arange(3) * 6) // 3
-    assert (small[3][..., 0] == gray[rowsel][:, colsel]).all()
-    assert mm._parse_ppm(bytes(out[2].payload)) is not None
-    assert out[2].meta.format == "ppm"
 
     assert mm._parse_pgm(b"P5\n0 0\n255\n") is None
     assert len(mm.decode_media(b"P5\n4 4\n255\nxx", "image")) == mm.FEATURE_DIM
@@ -943,30 +863,6 @@ def test_gif_interlace_extensions_and_local_table():
     no_gct[13 + 9] |= 0x80 | (bits - 1)   # LCT flag + size in the frame
     got = mm._parse_gif_indexed(bytes(no_gct))
     assert got is not None and (got[3] == idx).all()
-
-
-def test_gif_resize_keeps_palette_through_pipeline(spark):
-    """Through the Arrow resize stage a GIF resizes by index-matrix
-    nearest-neighbor under its OWN color table (no quantization, no
-    invented colors) and re-encodes as GIF; a P6 row in the same
-    batch stays P6."""
-    import numpy as np
-
-    payload, palette, idx = _gif_payload(8, 10, 6, seed=24)
-    p2, _ = _ppm_bytes(5, 5, seed=25)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(payload), (10, 6, "gif")),
-         (2, "image", bytearray(p2), (5, 5, "ppm"))],
-        mm.MEDIA_SCHEMA,
-    )
-    out = {r.media_id: r for r in mm.resize_media(media, 5, 3).collect()}
-    small = mm._parse_gif_indexed(bytes(out[1].payload))
-    assert small is not None and out[1].meta.format == "gif"
-    rows = (np.arange(3) * 6) // 3
-    cols = (np.arange(5) * 10) // 5
-    assert (small[3] == idx[rows][:, cols]).all()
-    assert small[2][: len(palette)] == palette
-    assert mm._parse_ppm(bytes(out[2].payload)) is not None
 
 
 def _png_manual(px, ctype, filters, plte=b""):
@@ -1057,31 +953,6 @@ def test_png_filters_color_types_and_fallbacks():
     assert len(mm.decode_media(payload[:-21], "image")) == mm.FEATURE_DIM
 
 
-def test_png_resize_through_pipeline(spark):
-    """A PNG row resizes for real through the Arrow stage (exact
-    nearest-neighbor) and re-encodes as PNG; a GIF row in the same
-    batch stays GIF."""
-    import numpy as np
-
-    rng = np.random.RandomState(32)
-    px = rng.randint(0, 256, size=(6, 8, 3), dtype=np.uint8)
-    png = mm._encode_png((8, 6, 255, px))
-    gif, _, _ = _gif_payload(4, 5, 5, seed=33)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(png), (8, 6, "png")),
-         (2, "image", bytearray(gif), (5, 5, "gif"))],
-        mm.MEDIA_SCHEMA,
-    )
-    out = {r.media_id: r for r in mm.resize_media(media, 4, 3).collect()}
-    small = mm._parse_png(bytes(out[1].payload))
-    assert small is not None and out[1].meta.format == "png"
-    rows = (np.arange(3) * 6) // 3
-    cols = (np.arange(4) * 8) // 4
-    assert (small[3] == px[rows][:, cols]).all()
-    assert out[2].meta.format == "gif"
-    assert mm._parse_gif_indexed(bytes(out[2].payload)) is not None
-
-
 def _aiff_bytes(samples16, rate=8000, n_ch=1):
     """Hand-built AIFF: big-endian chunks, 80-bit extended-float
     sample rate, signed 16-bit samples."""
@@ -1130,70 +1001,6 @@ def test_aiff_decode_matches_wav_features():
     assert mm.decode_media(aiff, "image") != got
 
 
-def _y4m_bytes(frames_y, w, h, num=30, den=1, csp=b"C420jpeg"):
-    """Hand-built YUV4MPEG2: header + FRAME-delimited raw 4:2:0
-    planes (luma = the given arrays, chroma = constant 128)."""
-    import numpy as np
-
-    head = b"YUV4MPEG2 W%d H%d F%d:%d Ip A1:1 %s\n" % (w, h, num, den, csp)
-    body = b""
-    chroma = bytes([128]) * (w * h // 2)
-    for y in frames_y:
-        body += b"FRAME\n" + np.asarray(y, dtype=np.uint8).tobytes() + chroma
-    return head + body
-
-
-def test_y4m_frame_features_real_luma_stats(spark):
-    """The Y4M video path: three 4×2 frames with known luma decode to
-    genuine per-frame statistics (mean/std/min/max, timestamps from
-    the F rate tag), every_n samples frames, a non-Y4M video row in
-    the same batch takes the md5 stand-in fan-out, and truncated
-    payloads fall back."""
-    import numpy as np
-
-    f0 = np.full((2, 4), 0, dtype=np.uint8)
-    f1 = np.full((2, 4), 255, dtype=np.uint8)
-    f2 = np.tile(np.array([[0, 255, 0, 255]], dtype=np.uint8), (2, 1))
-    payload = _y4m_bytes([f0, f1, f2], 4, 2, num=30, den=1)
-
-    parsed = mm._parse_y4m(payload)
-    assert parsed is not None
-    w, h, num, den, frames = parsed
-    assert (w, h, num, den, len(frames)) == (4, 2, 30, 1, 3)
-    assert (frames[2] == f2).all()
-
-    media = spark.createDataFrame(
-        [(1, "video", bytearray(payload), (4, 2, "y4m")),
-         (2, "video", bytearray(b"not a video, 70 bytes of opaque stuff..." * 2),
-          (0, 0, "bin")),
-         (3, "image", bytearray(b"P6\n1 1\n255\nabc"), (1, 1, "ppm"))],
-        mm.MEDIA_SCHEMA,
-    )
-    rows = mm.extract_frame_features(media).collect()
-    by = {}
-    for r in rows:
-        by.setdefault(r.media_id, {})[r.frame_idx] = r
-    assert 3 not in by                       # image rows don't fan out
-    assert set(by[1]) == {0, 1, 2}
-    assert by[1][0].features[0] == 0.0       # all-black mean
-    assert by[1][1].features[0] == 1.0       # all-white mean
-    assert abs(by[1][2].features[0] - 0.5) < 1e-6
-    assert abs(by[1][2].features[1] - 0.5) < 1e-6   # ±0.5 std
-    assert abs(by[1][1].features[4] - 1 / 30) < 1e-6  # t = idx*den/num
-    assert by[1][0].n_frames == 3
-    # stand-in: one pseudo-frame per 64-byte window (82 bytes → 2)
-    assert set(by[2]) == {0, 1}
-
-    # every_n sampling keeps frames 0 and 2 only
-    sampled = {r.frame_idx for r in
-               mm.extract_frame_features(media, every_n=2).collect()
-               if r.media_id == 1}
-    assert sampled == {0, 2}
-
-    assert mm._parse_y4m(payload[:-3]) is None   # truncated frame
-    assert mm._parse_y4m(b"YUV4MPEG2 W4 H2\nFRAME\nxx") is None
-
-
 def test_wav_24bit_and_float_variants():
     """The 24-bit PCM and IEEE-float (format 3) WAV variants decode
     to the same samples as their 16-bit integer rendering of the
@@ -1234,80 +1041,6 @@ def test_wav_24bit_and_float_variants():
 
     assert mm._parse_wav(wav(1, 12, b"\x00" * 48)) is None   # odd depth
     assert mm._parse_wav(wav(3, 64, b"\x00" * 64)) is None   # f64 unsupported
-
-
-def test_encode_wav_mono16_roundtrips():
-    """parse(encode(x)) returns exactly the quantized samples and the
-    declared rate/channel layout; hypothesis sweeps the value range."""
-    import numpy as np
-
-    from chain_sync_spark.functions.multimodal import (
-        _encode_wav_mono16,
-        _parse_wav,
-    )
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=25, deadline=None)
-    @given(
-        st.lists(
-            st.floats(min_value=-2.0, max_value=2.0, allow_nan=False),
-            min_size=1,
-            max_size=64,
-        ),
-        st.integers(min_value=1, max_value=96000),
-    )
-    def _prop(xs, rate):
-        payload = _encode_wav_mono16(rate, xs)
-        got_rate, n_ch, s = _parse_wav(payload)
-        assert (got_rate, n_ch) == (rate, 1)
-        want = np.clip(
-            np.floor(np.clip(np.asarray(xs), -1.0, 1.0) * 32768.0 + 0.5),
-            -32768, 32767,
-        ) / 32768.0
-        assert np.array_equal(s, want)
-
-    _prop()
-
-
-def test_resample_audio_decimates_and_passes_through(spark):
-    """Decimation keeps exactly every factor-th mono sample at
-    rate//factor (re-parsed from the re-encoded payload), non-audio
-    rows pass through untouched, unparsable audio takes the
-    byte-stride stand-in, and a bad factor fails fast on the
-    driver."""
-    import numpy as np
-    import pytest as _pytest
-
-    from chain_sync_spark.functions import multimodal as mm
-
-    t = np.arange(32)
-    x16 = (np.sin(t / 3.0) * 20000).astype("<i2")
-    wav = _wav_bytes(x16, rate=8000)
-    rows = [
-        (1, "audio", bytearray(wav), {"width": 32, "height": 8000, "format": "wav"}),
-        (2, "audio", bytearray(b"not a wav"), {"width": 0, "height": 0, "format": "raw"}),
-        (3, "image", bytearray(b"P6 junk"), {"width": 0, "height": 0, "format": "ppm"}),
-        (4, "audio", None, {"width": 0, "height": 0, "format": "raw"}),
-    ]
-    media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    out = {r.media_id: r for r in mm.resample_audio(media, 4).collect()}
-
-    rate, n_ch, s = mm._parse_wav(bytes(out[1].payload))
-    assert (rate, n_ch) == (2000, 1)
-    src = x16.astype("float64") / 32768.0
-    want = np.clip(np.floor(src[::4] * 32768.0 + 0.5), -32768, 32767) / 32768.0
-    assert np.array_equal(s, want)
-    assert (out[1].meta.width, out[1].meta.height) == (len(want), 2000)
-    assert out[1].meta.format == "wav"
-
-    assert bytes(out[2].payload) == b"not a wav"[::4]  # stand-in stride
-    assert bytes(out[3].payload) == b"P6 junk"         # untouched
-    assert bytes(out[4].payload) == b"" and out[4].meta.width == 0  # null-safe
-    assert out[3].meta.format == "ppm"
-
-    with _pytest.raises(ValueError):
-        mm.resample_audio(media, 0)
 
 
 def test_lsh_bucket_expr_matches_column_chain(spark):

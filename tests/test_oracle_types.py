@@ -43,27 +43,3 @@ def test_no_oracle_outputs_hugeint(con):
         "oracle output columns with pandas-divergent integer types "
         f"(CAST them to BIGINT): {offenders}"
     )
-
-
-def test_no_pending_oracle_outputs_hugeint(con):
-    """Oracles outside the registry (the pending_queries() shim and the
-    unregistered markdown_lists_blocks pair) obey the same boundary
-    convention before they are ever registered."""
-    from chain_sync_spark.operators.sync_queries import _MD_BLOCKS_ORACLE
-    from chain_sync_spark.registry import pending_queries
-
-    pending = {
-        **pending_queries()[1],
-        "markdown_lists_blocks": _MD_BLOCKS_ORACLE,
-    }
-    offenders = []
-    for name, sql in pending.items():
-        for row in con.execute(f"DESCRIBE {sql}").fetchall():
-            col, typ = row[0], row[1]
-            base = typ.split("(")[0].strip().upper()
-            if base in _FORBIDDEN:
-                offenders.append(f"{name}.{col}: {typ}")
-    assert not offenders, (
-        "unregistered oracle output columns with pandas-divergent integer "
-        f"types (CAST them to BIGINT): {offenders}"
-    )

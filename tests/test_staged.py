@@ -1,7 +1,6 @@
 """Whole-registry oracle parity (dual transport) plus known-answer
 tests for the LLM-data operators: k-means, SCD2, BPE, sketches, ANN
-audits, dedup and quality screens.  One unregistered query/oracle
-pair (markdown_lists_blocks) gets the same parity check by name."""
+audits, dedup and quality screens."""
 
 from datetime import datetime
 
@@ -198,73 +197,6 @@ def test_registry_oracle_parity_dual_transport(spark, name):
     """Every registered query with an oracle matches it at sf0.001
     through both transports tools/oracle_check.py compares."""
     _dual_transport_parity(spark, name, all_queries()[name], all_oracles()[name])
-
-
-def test_prepared_markdown_lists_blocks_parity_dual_transport(spark):
-    """Lists + blockquotes + fenced-code stripping: an unregistered
-    query/oracle pair, checked like a registered one."""
-    from chain_sync_spark.operators.sync_queries import (
-        _MD_BLOCKS_ORACLE,
-        markdown_lists_blocks,
-    )
-
-    _dual_transport_parity(
-        spark, "markdown_lists_blocks", markdown_lists_blocks, _MD_BLOCKS_ORACLE
-    )
-
-
-def test_markdown_lists_blocks_fence_semantics(spark):
-    """Known-answer pin on the strip-before-extract semantics: a
-    bullet/ordered/quote line INSIDE a fence never counts; the
-    bullet after the closing fence does; two fences in one body both
-    strip (the DuckDB 'g'-flag divergence this oracle documents)."""
-    from chain_sync_spark.functions.text_funcs import (
-        count_fenced_blocks,
-        extract_blockquotes,
-        extract_bullet_items,
-        extract_ordered_items,
-        strip_fenced_code,
-    )
-
-    body = (
-        "intro\n```\n- fenced bullet\n1. fenced ordered\n> fenced quote\n```\n"
-        "- real one\n```\nx = 1\n```\n1. real two\n> real quote"
-    )
-    df = spark.createDataFrame([(body,)], "b string")
-    s = strip_fenced_code(F.col("b"))
-    row = df.select(
-        count_fenced_blocks(F.col("b")).alias("nf"),
-        extract_bullet_items(s).alias("bu"),
-        extract_ordered_items(s).alias("od"),
-        extract_blockquotes(s).alias("qu"),
-    ).collect()[0]
-    assert row["nf"] == 2
-    assert row["bu"] == ["real one"]
-    assert row["od"] == ["real two"]
-    assert row["qu"] == ["real quote"]
-    # DuckDB agrees on the identical input (RE2 side of the parity)
-    got = duckdb.sql(
-        "SELECT len(regexp_extract_all(?, '```[^`]*```')) AS nf, "
-        "regexp_extract_all(regexp_replace(?, '```[^`]*```', ' ', 'g'), "
-        "'(^|\\n)[ \\t]*([-*+])[ \\t]+([^\\n]+)', 3) AS bu",
-        params=[body, body],
-    ).fetchone()
-    assert got[0] == 2
-    assert got[1] == ["real one"]
-
-
-def test_staged_names_not_yet_registered():
-    """Nothing is staged (pending_queries() is perfbench's empty shim),
-    and the unregistered query/oracle pair stays out of the registry
-    until a change registers it on purpose."""
-    from chain_sync_spark.registry import pending_queries
-
-    pending_q, pending_o = pending_queries()
-    assert set(pending_q) == set(pending_o)
-    assert not set(pending_q) & set(all_queries())
-    assert not set(pending_o) & set(all_oracles())
-    assert "markdown_lists_blocks" not in all_queries()
-    assert "markdown_lists_blocks" not in all_oracles()
 
 
 # ---------------------------------------------------------------------------

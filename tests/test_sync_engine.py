@@ -268,40 +268,6 @@ def test_bounded_rewrite_touched_partitions_only(spark, tmp_path, ops_batch1):
         )
 
 
-@pytest.mark.slow
-def test_reply_tag_update_allowlist(spark, tmp_path):
-    """Intended handleReply semantics (P7/J5): an allow-listed reply
-    with the command updates the parent's stockimage_tags; replies
-    from other authors, or to missing posts, are dropped. The path is
-    opt-in (dead code in the shipped reference, comments.js:115)."""
-    eng = SyncEngine(spark, str(tmp_path), enable_reply_tag_updates=True)
-    ops = spark.createDataFrame(
-        [
-            _op(1, TS, "comment", _comment("alice", "p1", body="photo #original",
-                                           parent_permlink="hive-118554")),
-            # allow-listed reply → replaces parent tags
-            _op(2, TS, "comment", _comment("crosheille", "r1", parent_author="alice",
-                                           parent_permlink="p1",
-                                           body="!update-stock-image-tags #Fixed #Tags")),
-            # non-allow-listed reply → ignored
-            _op(3, TS, "comment", _comment("rando", "r2", parent_author="alice",
-                                           parent_permlink="p1",
-                                           body="!update-stock-image-tags #evil")),
-            # allow-listed reply to a missing post → dropped
-            _op(3, TS, "comment", _comment("kattycrochet", "r3", parent_author="ghost",
-                                           parent_permlink="nope",
-                                           body="!update-stock-image-tags #lost")),
-        ],
-        OP_STREAM_SCHEMA,
-    )
-    eng.run(ops, batch_size=10)
-    posts = {r["permlink"]: r for r in _posts(spark, tmp_path).collect()}
-    assert set(posts) == {"p1"}  # replies never become posts
-    assert posts["p1"]["stockimage_tags"] == "fixed tags"
-    # S12: jobs map reset present and empty
-    assert posts["p1"]["jobs"] == {}
-
-
 def test_stock_post_tags_without_command(spark, tmp_path):
     """handleStockImagePost runs unconditionally on top-level stock
     posts (comments.js:146) — no command required."""
@@ -409,8 +375,8 @@ def test_mutings(spark, tmp_path):
 
 def test_reply_tag_updates_off_by_default(spark, tmp_path):
     """The shipped reference never runs handleReply (call site
-    commented out, comments.js:115) — with the default flag the parent
-    post's stockimage_tags stay untouched by command replies."""
+    commented out, comments.js:115), and neither does the engine: a
+    command reply never changes the parent post's stockimage_tags."""
     eng = SyncEngine(spark, str(tmp_path))
     ops = spark.createDataFrame(
         [
@@ -504,6 +470,19 @@ def test_run_with_stop_block_covers_blocks_without_ops(spark, tmp_path):
     assert eng.run(ops, batch_size=10, stop_block=40) == 40
     assert [(b["batch_lo"], b["n_ops"]) for b in beats[3:]] == [(25, 1), (35, 0)]
     assert _posts(spark, tmp_path).count() == 1
+
+
+def test_run_rejects_batch_size_below_one(spark, tmp_path, ops_batch1):
+    """A round of 0 blocks would never advance the cursor (run() loops
+    forever) and a negative one would move it backwards, so run()
+    raises before it reads or writes the checkpoint."""
+    import os
+
+    eng = SyncEngine(spark, str(tmp_path))
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="batch_size"):
+            eng.run(ops_batch1, batch_size=bad)
+    assert not os.path.exists(eng.cursor_path)
 
 
 @pytest.mark.slow
@@ -604,17 +583,21 @@ def test_first_write_empty_updates_materializes_no_table(spark, tmp_path):
 
     from chain_sync_spark.sync.merge import merge_parquet
 
-    empty = spark.createDataFrame([], "k long, v string, part int")
+    schema = "k long, v string, part int"
+    empty = spark.createDataFrame([], schema)
     tgt_part = f"{tmp_path}/t_part"
-    merge_parquet(spark, tgt_part, empty, key_cols=["k"], partition_cols=["part"])
+    merge_parquet(spark, tgt_part, empty, key_cols=["k"], partition_cols=["part"],
+                  target_schema=schema)
     assert not os.path.exists(tgt_part)
     tgt_flat = f"{tmp_path}/t_flat"
-    merge_parquet(spark, tgt_flat, empty.drop("part"), key_cols=["k"])
+    merge_parquet(spark, tgt_flat, empty.drop("part"), key_cols=["k"],
+                  target_schema="k long, v string")
     assert not os.path.exists(tgt_flat)
     assert not [e for e in os.listdir(tmp_path) if e.endswith(".staging")]
     # and a NON-empty first write lands with rows intact
-    rows = spark.createDataFrame([(1, "a", 3), (2, "b", 4)], "k long, v string, part int")
-    merge_parquet(spark, tgt_part, rows, key_cols=["k"], partition_cols=["part"])
+    rows = spark.createDataFrame([(1, "a", 3), (2, "b", 4)], schema)
+    merge_parquet(spark, tgt_part, rows, key_cols=["k"], partition_cols=["part"],
+                  target_schema=schema)
     assert spark.read.parquet(tgt_part).count() == 2
 
 
@@ -921,7 +904,7 @@ def test_partition_swap_crash_at_every_step_converges(spark, tmp_path, monkeypat
     base = str(tmp_path / "base")
     merge_parquet(spark, base, spark.createDataFrame(
         [(1, "a", 2023, 1), (2, "b", 2023, 2), (3, "c", 2024, 1), (4, "d", 2023, 5)], schema
-    ), key_cols=["k"], partition_cols=parts)
+    ), key_cols=["k"], partition_cols=parts, target_schema=schema)
     # three live leaves touched, one new leaf, 2023/5 untouched
     updates = spark.createDataFrame(
         [(1, "A", 2023, 1), (2, "B", 2023, 2), (5, "e", 2023, 2), (3, "C", 2024, 1),
@@ -930,7 +913,7 @@ def test_partition_swap_crash_at_every_step_converges(spark, tmp_path, monkeypat
 
     def merge(table):
         merge_parquet(spark, table, updates, key_cols=["k"], partition_cols=parts,
-                      partition_stable=True)
+                      target_schema=schema)
 
     def rows(table):
         return sorted(spark.read.parquet(table).select("k", "v", "year", "month").collect())
