@@ -600,29 +600,18 @@ def _encode_png(img) -> bytes:
 
 
 def _parse_image(payload: bytes):
-    """Dispatch across the built-in image codecs: (parsed, format) or
-    (None, None). New image codecs plug in here only."""
+    """Dispatch across the built-in image codecs: the parsed image or
+    None. New image codecs plug in here only."""
     if not payload:
         # null/empty payloads are in-contract (extract_features counts
         # them as 0 bytes); the GIF/PNG probes below assume len()/
         # startswith work, so short-circuit before dispatch
-        return None, None
-    img = _parse_ppm(payload)
-    if img is not None:
-        return img, "ppm"
-    img = _parse_pgm(payload)
-    if img is not None:
-        return img, "pgm"
-    img = _parse_bmp(payload)
-    if img is not None:
-        return img, "bmp"
-    img = _parse_gif(payload)
-    if img is not None:
-        return img, "gif"
-    img = _parse_png(payload)
-    if img is not None:
-        return img, "png"
-    return None, None
+        return None
+    for parse in (_parse_ppm, _parse_pgm, _parse_bmp, _parse_gif, _parse_png):
+        img = parse(payload)
+        if img is not None:
+            return img
+    return None
 
 
 def _parse_wav(payload: bytes):
@@ -779,7 +768,7 @@ def decode_media(payload: bytes, kind: str) -> list[float]:
     the md5 digest — stable across runs and engines, preserving
     testability of everything around the codec."""
     if kind == "image":
-        img, _fmt = _parse_image(payload)
+        img = _parse_image(payload)
         if img is not None:
             return _ppm_features(img)
     if kind == "audio":

@@ -1558,7 +1558,7 @@ def _sym_pair_counts(syms: DataFrame) -> DataFrame:
     )
 
 
-def _apply_merge(s: F.Column, left: str, right: str) -> F.Column:
+def _apply_merge(s: F.Column, left: F.Column, right: F.Column) -> F.Column:
     """Replace adjacent [left, right] symbol pairs with the merged
     symbol, greedy left-to-right non-overlapping — the reference BPE
     apply step (Sennrich et al. 2016, public algorithm) — as ONE
@@ -1574,9 +1574,9 @@ def _apply_merge(s: F.Column, left: str, right: str) -> F.Column:
         return (
             F.when(cur.isNull(), F.struct(out.alias("out"), x.alias("cur")))
             .when(
-                (cur == F.lit(left)) & (x == F.lit(right)),
+                (cur == left) & (x == right),
                 F.struct(
-                    F.concat(out, F.array(F.lit(left + right))).alias("out"),
+                    F.concat(out, F.array(F.concat(left, right))).alias("out"),
                     nul.alias("cur"),
                 ),
             )
@@ -1649,7 +1649,9 @@ def bpe_train(
                 break  # every word is a single symbol — vocabulary exhausted
             l, r, cnt = top[0]["l"], top[0]["r"], int(top[0]["cnt"])
             merges.append((rank, l, r, l + r, cnt))
-            nxt = syms.select(_apply_merge(F.col("s"), l, r).alias("s"), "n_occ")
+            nxt = syms.select(
+                _apply_merge(F.col("s"), F.lit(l), F.lit(r)).alias("s"), "n_occ"
+            )
             if rank % BPE_CHECKPOINT_EVERY == 0:
                 # truncate lineage: plan depth resets to zero here, and
                 # the eager checkpoint materializes nxt — the parent
@@ -1671,74 +1673,50 @@ def bpe_train(
     )
 
 
-def bpe_apply_merges(
-    words: DataFrame, merges: list[tuple[str, str]], word_col: str = "word"
-) -> DataFrame:
-    """Segment each DISTINCT word into subword symbols by applying a
-    trained merge list in rank order — adds an ``s array<string>``
-    column.  Entirely engine-side: one :func:`_apply_merge` fold per
-    merge, lineage localCheckpoint'ed every {BPE_CHECKPOINT_EVERY}
-    merges so the chained-fold plan stays codegen-sized.  Input is
-    the VOCABULARY (distinct words), never the token stream — the
-    standard word-cache trick, so the per-merge pass is
-    vocabulary-sized at any corpus scale.
-
-    SCOPE CONTRACT: with >= {BPE_CHECKPOINT_EVERY} merges the
-    returned relation is built on scope-pooled checkpoint blocks —
-    consume it before the next release_caches() (the next query's
-    start), the same lifetime every scoped persist in this package
-    already has; unlike a persist, a checkpointed relation is
-    unreadable after release (lineage was truncated away)."""
-    from chain_sync_spark.operators.llm_pipeline import _scoped_checkpoint
-
-    syms = words.withColumn("s", _word_chars(F.col(word_col)))
-    for i, (l, r) in enumerate(merges):
-        syms = syms.withColumn("s", _apply_merge(F.col("s"), l, r))
-        # EAGER checkpoint, the r12-certified shape.  An r14 attempt
-        # to skip the checkpoint when < CHECKPOINT_EVERY folds remain
-        # (so the frozen 12-merge path built fully lazily) moved the
-        # whole 12-fold chain into EVERY action: warm noop write
-        # ~2 s -> ~21 s in the full bench, both AQE arms — the chained
-        # fold evaluated in one projection is far more expensive than
-        # the per-block pieces (codegen-size fallback), and with no
-        # blocks each action re-pays it.  A lazy (eager=False)
-        # checkpoint just shifts the same materialization into the
-        # first timed action because the scope pool frees blocks at
-        # every query open.  Reverted; measured r14, do not re-try
-        # without per-action evidence.
-        if (i + 1) % BPE_CHECKPOINT_EVERY == 0 and i + 1 < len(merges):
-            # scope-pooled: blocks free at the next release_caches
-            syms = _scoped_checkpoint(syms)
-    return syms
+def bpe_apply_merges(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
+    """Segment each DISTINCT ``word`` into subword symbols by applying
+    a trained merge list in rank order — adds an ``s array<string>``
+    column.  One column expression: an outer fold over the literal
+    (l, r) merge array whose step is the :func:`_apply_merge` fold, so
+    the whole segmentation is lazy and runs in one projection.  Input
+    is the VOCABULARY (distinct words), never the token stream — the
+    standard word-cache trick, so the pass is vocabulary-sized at any
+    corpus scale."""
+    ranked = F.array(
+        *[F.struct(F.lit(l).alias("l"), F.lit(r).alias("r")) for l, r in merges]
+    ).cast("array<struct<l:string,r:string>>")
+    return words.withColumn(
+        "s",
+        F.aggregate(
+            ranked,
+            _word_chars(F.col("word")),
+            lambda s, m: _apply_merge(s, m["l"], m["r"]),
+        ),
+    )
 
 
-def bpe_encode(docs: DataFrame, merges_df: DataFrame) -> DataFrame:
+def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Serving side of BPE: tokenize documents into trained subwords.
     Returns (doc_id, subword, n) — per-document subword counts, the
     input shape token-budget accounting and subword-frequency analysis
-    consume.  ``merges_df`` is a trained :func:`bpe_train` output; the
-    frozen-artifact contract applies (subword ids are only comparable
-    under one merge table).
+    consume.  ``merges`` is the rank-ordered (left, right) list of a
+    trained :func:`bpe_train` table; the frozen-artifact contract
+    applies (subword ids are only comparable under one merge table).
 
-    Scale: the merge table is rank-bounded (a bounded collect), the
-    segmentation runs on DISTINCT words (vocabulary-sized), and the
-    corpus only pays one token→vocab join — broadcast when the
-    segmented vocabulary fits, shuffle-on-word otherwise — plus the
-    final (doc_id, subword) count aggregate."""
-    # bounded collect: the merge table is <= n_merges rows by
-    # construction (the trained artifact, never corpus-sized)
-    ranked = [
-        (row["left"], row["right"])
-        for row in merges_df.orderBy("rank").collect()
-    ]
+    Scale: the merge list is rank-bounded, the segmentation runs on
+    DISTINCT words (vocabulary-sized), and the corpus only pays one
+    token→vocab join — broadcast when the segmented vocabulary fits,
+    shuffle-on-word otherwise — plus the final (doc_id, subword)
+    count aggregate."""
     toks = docs.select(
         "doc_id", F.explode(sk.words(sk.normalize_text(F.col("text")))).alias("word")
     )
     vocab = toks.select("word").distinct()
-    seg = bpe_apply_merges(vocab, ranked)
+    seg = bpe_apply_merges(vocab, merges)
     return (
         toks.join(seg, "word")
-        .select("doc_id", F.explode("s").alias("subword"))
+        # explode_outer: explode's inferred filter would run the fold per token
+        .select("doc_id", F.explode_outer("s").alias("subword"))
         .groupBy("doc_id", "subword")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1807,14 +1785,7 @@ def bpe_encode_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized segmentation, one token→vocab join, one count
     aggregate."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    mdf = spark.createDataFrame(
-        [
-            (i, l, r, l + r, 0)
-            for i, (l, r) in enumerate(BPE_FROZEN_MERGES, start=1)
-        ],
-        "rank int, left string, right string, merged string, cnt bigint",
-    )
-    return bpe_encode(docs, mdf)
+    return bpe_encode(docs, BPE_FROZEN_MERGES)
 
 
 def _bpe_encode_oracle() -> str:

@@ -128,8 +128,8 @@ def escape_scope(df: DataFrame) -> DataFrame:
     Scope-pooled checkpoints free their blocks at the next
     release_caches() (lineage was truncated at checkpoint time, so
     there is nothing to recompute from), and any relation derived
-    from one — a connected_components labeling, a bpe_apply_merges
-    segmentation — dies with them: a later action fails with Spark's
+    from one — a connected_components labeling, a neardup_clusters
+    result — dies with them: a later action fails with Spark's
     cryptic "Block rdd_N not found".  An external caller that needs
     a result ACROSS query boundaries calls this instead of holding
     the raw relation: the returned DataFrame owns fresh blocks with
@@ -157,7 +157,7 @@ def release_escaped(df: DataFrame) -> None:
 
 def _scoped_checkpoint(df: DataFrame) -> DataFrame:
     """localCheckpoint(eager) registered with the scope pool: lineage
-    truncation for loop relations (connected components, BPE folds)
+    truncation for loop relations (connected components, BPE training)
     whose blocks are then freed DETERMINISTICALLY at the next
     release_caches() instead of at an eventual driver GC. Bounded:
     loops checkpoint every few rounds and are themselves
@@ -647,118 +647,6 @@ def connected_components(
         raise
     labels.unpersist()
     return out
-
-
-def connected_components_star(
-    edges: DataFrame,
-    *,
-    max_iters: int = CLUSTER_MAX_ITERS,
-    checkpoint_every: int = CLUSTER_CHECKPOINT_EVERY,
-) -> DataFrame:
-    """Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — the scale hedge for min-label propagation
-    (connected_components above): label propagation needs DIAMETER
-    rounds, so one adversarially long chain in a 100 TB corpus holds
-    the whole job hostage on the driver-side convergence loop; the
-    star alternation contracts every component to a star rooted at
-    its minimum in O(log^2 n) rounds REGARDLESS of diameter.
-
-    Same interface and same output contract as connected_components
-    ((doc_id, label = component min) over every node incident to an
-    edge, label relation scope-pooled); property-tested equal on the
-    existing fixtures (tests/test_cc_variants.py).  NOT flipped in as
-    the default anywhere — callers opt in when diameter is a risk.
-
-    Representation: edges live canonically as (hi, lo), hi > lo, one
-    row per undirected edge (dedup per round).  Per round:
-
-      * large-star — over BOTH directions (u, v): every neighbor
-        v > u re-points to m(u) = min(N(u) ∪ {u}); emitted pairs
-        (v, m(u)) are canonical by construction (v > u >= m(u))
-      * small-star — over the canonical relation keyed by hi: all of
-        hi's smaller neighbors (and hi itself) re-point to
-        m = min(N_smaller(hi) ∪ {hi}) = min(lo); self-pairs drop
-
-    Convergence = the canonical edge set reaches a fixpoint (equal
-    row count + empty except; both sides are distinct-deduped).  At
-    the fixpoint the edges ARE the answer: every non-root points
-    directly at its component minimum."""
-    nodes = edges.select(F.col("src").alias("doc_id")).distinct()
-    canon = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.greatest("src", "dst").alias("hi"),
-            F.least("src", "dst").alias("lo"),
-        )
-        .distinct()
-        .persist()
-    )
-    converged = False
-    try:
-        for i in range(max_iters):
-            # large-star over both directions
-            d = canon.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
-                canon.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-            )
-            m_u = d.groupBy("u").agg(
-                F.least(F.first("u"), F.min("v")).alias("m")
-            )
-            large = (
-                d.join(m_u, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-                .distinct()
-            )
-            # small-star over the canonical (hi -> smaller neighbors) view
-            m_hi = large.groupBy("hi").agg(F.min("lo").alias("m"))
-            small = (
-                large.join(m_hi, "hi")
-                .select(
-                    F.explode(
-                        F.array(
-                            F.struct(F.col("hi").alias("hi"), F.col("m").alias("lo")),
-                            F.struct(F.col("lo").alias("hi"), F.col("m").alias("lo")),
-                        )
-                    ).alias("e")
-                )
-                .select("e.hi", "e.lo")
-                .filter(F.col("hi") != F.col("lo"))
-                .distinct()
-            )
-            if (i + 1) % checkpoint_every == 0:
-                # blocks freed at scope end (release_caches)
-                small = _scoped_checkpoint(small)
-            else:
-                small = small.persist()
-            same = (
-                small.count() == canon.count()
-                and small.exceptAll(canon).isEmpty()
-            )
-            canon.unpersist()
-            canon = small
-            if same:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"connected_components_star did not converge in {max_iters} "
-                "rounds; raise max_iters"
-            )
-    except BaseException:
-        canon.unpersist()
-        raise
-    labels = (
-        nodes.join(canon.withColumnRenamed("hi", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce(F.col("lo"), F.col("doc_id")).alias("label")
-        )
-        .persist()
-    )
-    labels.count()  # materialize before releasing the edge relation
-    canon.unpersist()
-    _SCOPED_CACHES.append(labels)
-    return labels
 
 
 def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

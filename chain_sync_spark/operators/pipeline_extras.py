@@ -1257,27 +1257,13 @@ def _rebuild_after_cut(d: DataFrame, cut_hits: DataFrame) -> DataFrame:
             "pos", "word"
         ),
     )
-    # NOT pinned (r13 optimization audit): covered feeds two branches
-    # (the kept anti-join AND cut_per_doc) as separate subtrees with
-    # no AQE stage reuse, so the candidate chain above it runs twice —
-    # but a _scoped_persist here measured CONSISTENTLY SLOWER in two
-    # interleaved A/Bs at sf0.1 (warm +11–34%): the duplicate branches
-    # overlap on idle cores locally, while the pin serializes the
-    # critical path behind a full materialization barrier plus cache
-    # write. At cluster scale (no idle cores) the pin becomes the
-    # right trade — bounded at {SD_N}× the cut-hit count, duplicated
-    # text only — recorded as an optimization-round-2 candidate in
-    # OPTIMIZATION_r13.md rather than landed against the measurement.
-    from chain_sync_spark.operators.llm_pipeline import _scoped_persist
-
-    covered = _scoped_persist(
-        cut_hits.select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + F.lit(SD_N - 1))
-            ).alias("pos"),
-        ).distinct()
-    )
+    # not pinned: on query_mix, persisting it ran 2 more jobs and was no faster
+    covered = cut_hits.select(
+        "doc_id",
+        F.explode(
+            F.sequence(F.col("pos"), F.col("pos") + F.lit(SD_N - 1))
+        ).alias("pos"),
+    ).distinct()
     cut_per_doc = covered.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("cut_tokens")
     )

@@ -39,28 +39,6 @@ def get_spark(app_name: str = "chain-sync-spark", shuffle_partitions: int | None
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE post-shuffle coalescing knobs, env-exposed for cluster
-        # deployments; local defaults are Spark's own.  r14 measured
-        # parallelismFirst=false (size reduce partitions purely from
-        # the byte advisory) with full-protocol interleaved bench
-        # pairs at 32 AND 8 cores and REJECTED it: it lost the warm
-        # headline at both core counts (32c: 7.73 vs 5.87 s; 8c: 6.21
-        # vs 5.49 s) and collapsed compute-dense small-byte exchanges
-        # to single tasks (sketch_fold_digest construct 0.7 -> 10.1 s)
-        # — at local SFs partition-count parallelism carries real CPU
-        # work that byte-sizing cannot see.  The r13 "32 cores slower
-        # than 8" premise was re-measured as mostly that run's load
-        # (load1 8.2); at clean probes the gap is ~7%.  On a cluster
-        # with real I/O, flip via SPARK_GRAFT_PARALLELISM_FIRST=false
-        # and size SPARK_GRAFT_ADVISORY_PART to taste (guide §2.2).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PART", "64m"),
-        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -131,10 +131,11 @@ def test_bpe_encode_counts_match_replica(spark):
             for sub in word_syms[w]:
                 want[(doc_id, sub)] = want.get((doc_id, sub), 0) + 1
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    mdf = co.bpe_train(spark, SF, n_merges=N)
+    trained = co.bpe_train(spark, SF, n_merges=N).orderBy("rank").collect()
+    ranked = [(r["left"], r["right"]) for r in trained]
     got = {
         (r["doc_id"], r["subword"]): r["n"]
-        for r in co.bpe_encode(docs, mdf).collect()
+        for r in co.bpe_encode(docs, ranked).collect()
     }
     assert got == want
 
@@ -164,3 +165,27 @@ def test_bpe_encode_frozen_matches_replica(spark):
         for r in co.bpe_encode_frozen(spark, SF).collect()
     }
     assert got == want
+
+
+def test_bpe_encode_frozen_constructs_without_jobs(spark, monkeypatch):
+    """Building the frozen encoder is lazy: the merge list is a literal
+    and the segmentation one column, so no collect and no checkpoint
+    runs before the caller's action. The documents read (its parquet
+    schema-inference job belongs to the table loader) is taken outside
+    the count."""
+    docs = co.table(spark, SF, "documents")
+    monkeypatch.setattr(co, "table", lambda *_args: docs)
+    tracker = spark.sparkContext.statusTracker()
+    mark = max(tracker.getJobIdsForGroup(), default=-1)
+    co.bpe_encode_frozen(spark, SF)
+    assert max(tracker.getJobIdsForGroup(), default=-1) == mark
+
+
+def test_bpe_encode_frozen_folds_in_one_operator(spark):
+    """The merge fold is evaluated once per distinct word: it sits in
+    one operator of the optimized plan. A plain explode of the symbol
+    array would let the inferred size(s) > 0 filter carry the fold
+    below the vocabulary distinct, onto every token."""
+    plan = co.bpe_encode_frozen(spark, SF)._jdf.queryExecution().optimizedPlan()
+    folds = [ln for ln in plan.toString().splitlines() if "aggregate(" in ln]
+    assert len(folds) == 1, "\n".join(ln[:160] for ln in folds)

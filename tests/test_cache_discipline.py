@@ -54,7 +54,7 @@ def test_registry_sweep_leaves_no_cached_relations(spark):
     # Bare localCheckpoint RDDs from OTHER tests in this session are
     # freed by the ContextCleaner on GC, not by unpersist/clearCache —
     # measure relative to a baseline snapshot.  Checkpoints created BY
-    # the sweep itself (the BPE fold, a long CC loop) go through
+    # the sweep itself (a long CC loop) go through
     # _scoped_checkpoint, whose blocks release_caches() frees
     # deterministically — the sweep must therefore end at exactly
     # baseline, GC or no GC.

@@ -1,9 +1,7 @@
-"""Parity tests for the two connected-components engines: min-label
-propagation (connected_components — rounds = diameter) vs the
-alternating large-star/small-star contraction (connected_components_star
-— O(log^2 n) rounds, the 100 TB diameter hedge).  Same interface, same
-output contract; the star variant is opt-in and flips nothing by
-default (VERDICT r9 item 7)."""
+"""Ground-truth tests for connected_components (min-label
+propagation, rounds = graph diameter): its labels equal a union-find
+replica's component minimum on fixtures, random graphs and the real
+near-dup pair graph, and it hands out a lineage-truncated relation."""
 
 import random
 
@@ -12,7 +10,6 @@ from pyspark.sql import functions as F
 
 from chain_sync_spark.operators.llm_pipeline import (
     connected_components,
-    connected_components_star,
     release_caches,
 )
 
@@ -64,28 +61,20 @@ GRAPHS = {
 
 @pytest.mark.slow
 @pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_star_equals_propagation_on_fixtures(spark, name):
+def test_propagation_matches_union_find_on_fixtures(spark, name):
     pairs = GRAPHS[name]
-    want = _py_components(pairs)
     edges = _sym_edges(spark, pairs)
-    # propagation needs a diameter-sized budget on the chain fixture —
-    # exactly the cost profile the star variant exists to remove
-    prop = {
+    # propagation needs a diameter-sized budget on the chain fixture
+    got = {
         r.doc_id: r.label
         for r in connected_components(edges, max_iters=45).collect()
     }
     release_caches()
-    star = {
-        r.doc_id: r.label
-        for r in connected_components_star(edges, max_iters=20).collect()
-    }
-    release_caches()
-    assert prop == want
-    assert star == want
+    assert got == _py_components(pairs)
 
 
 @pytest.mark.slow
-def test_star_equals_propagation_on_random_graphs(spark):
+def test_propagation_matches_union_find_on_random_graphs(spark):
     rng = random.Random(20260815)
     for trial in range(5):
         n = rng.randrange(20, 80)
@@ -96,40 +85,20 @@ def test_star_equals_propagation_on_random_graphs(spark):
         pairs = [(a, b) for a, b in pairs if a != b]
         if not pairs:
             continue
-        want = _py_components(pairs)
         edges = _sym_edges(spark, pairs)
-        star = {
+        # a diameter never exceeds n - 1, so n rounds always converge
+        got = {
             r.doc_id: r.label
-            for r in connected_components_star(edges, max_iters=20).collect()
+            for r in connected_components(edges, max_iters=n).collect()
         }
         release_caches()
-        assert star == want, f"trial {trial}"
+        assert got == _py_components(pairs), f"trial {trial}"
 
 
 @pytest.mark.slow
-def test_star_converges_on_long_chain_in_log_rounds(spark):
-    """The reason the variant exists: a 200-node chain converges for
-    the star algorithm within a log-scale round budget where label
-    propagation would need ~200 rounds."""
-    pairs = [(i, i + 1) for i in range(200)]
-    edges = _sym_edges(spark, pairs)
-    got = {
-        r.doc_id: r.label
-        for r in connected_components_star(
-            edges, max_iters=14, checkpoint_every=3
-        ).collect()
-    }
-    release_caches()
-    assert got == {i: 0 for i in range(201)}
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iters=14)
-    release_caches()
-
-
-@pytest.mark.slow
-def test_star_on_real_neardup_graph(spark):
-    """Both engines agree on the real MinHash near-dup pair graph at
-    sf0.001 — the production input shape."""
+def test_propagation_on_real_neardup_graph(spark):
+    """Labels on the real MinHash near-dup pair graph at sf0.001 — the
+    production input shape — equal the union-find replica's."""
     from chain_sync_spark.operators.llm_pipeline import (
         CLUSTER_MIN_JACCARD,
         neardup_minhash_bands,
@@ -141,15 +110,11 @@ def test_star_on_real_neardup_graph(spark):
     half = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     edges = half.union(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-    prop = {r.doc_id: r.label for r in connected_components(edges).collect()}
+    )
+    want = _py_components([(r.src, r.dst) for r in half.collect()])
+    got = {r.doc_id: r.label for r in connected_components(edges).collect()}
     release_caches()
-    star = {
-        r.doc_id: r.label for r in connected_components_star(edges).collect()
-    }
-    release_caches()
-    edges.unpersist()
-    assert prop == star and prop
+    assert got == want and got
 
 
 def test_cc_output_plan_is_flat(spark):
@@ -179,7 +144,7 @@ def test_cc_output_plan_is_flat(spark):
 
 def test_propagation_labels_match_union_find_fast(spark):
     """FAST-TIER ground truth for connected_components (the slow tier
-    re-proves star parity on the same fixtures + random graphs): every
+    adds the chain fixture and random graphs): every
     small fixture's labels must equal the union-find component minimum.
     Covers the r14 init fold (round 1 computed as one groupBy over the
     symmetric edges) — the 'star' fixture converges AT the init (no

@@ -46,8 +46,6 @@ KEPT = {
         "serving-side reference for quantile_sketch_orders",
     "chain_sync_spark.operators.llm_pipeline.kmeans_centroids":
         "float k-means reference for kmeans_centroids_fixedpoint",
-    "chain_sync_spark.operators.llm_pipeline.connected_components_star":
-        "second CC algorithm, kept until the CC A/B decides (ROADMAP)",
     "chain_sync_spark.operators.llm_pipeline.escape_scope":
         "external-caller cache API documented in DEPLOY.md",
     "chain_sync_spark.operators.llm_pipeline.release_escaped":
